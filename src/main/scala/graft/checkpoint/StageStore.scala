@@ -1,8 +1,10 @@
 package graft.checkpoint
 
+import java.io.IOException
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,15 +31,6 @@ final class StageStore(root: String, spark: SparkSession) {
   private def dataDir(name: String): Path = stageDir(name).resolve("data")
   private def manifestPath(name: String): Path = stageDir(name).resolve("MANIFEST.json")
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
   /** Stable fingerprint for (stage params + upstream fingerprints). */
   def fingerprint(parts: String*): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
@@ -45,28 +38,29 @@ final class StageStore(root: String, spark: SparkSession) {
     md.digest().map("%02x".format(_)).mkString.take(16)
   }
 
-  def committedFingerprint(name: String): Option[String] = {
+  /** The commit record of a stage: the manifest's top-level fields. A
+    * missing, unparseable or truncated manifest, or one without both
+    * fields, is no commit at all.
+    */
+  private def manifest(name: String): Option[StageStore.Manifest] = {
     val mp = manifestPath(name)
     if (!Files.exists(mp)) None
-    else {
-      val text = new String(Files.readAllBytes(mp), StandardCharsets.UTF_8)
-      """"fingerprint"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(text).map(_.group(1))
-    }
+    else try {
+      val m = StageStore.json.readTree(mp.toFile)
+      val (fp, rows) = (m.path("fingerprint"), m.path("rows"))
+      if (fp.isTextual && rows.isIntegralNumber) Some(StageStore.Manifest(fp.asText, rows.asLong))
+      else None
+    } catch { case _: IOException => None }
   }
+
+  def committedFingerprint(name: String): Option[String] = manifest(name).map(_.fingerprint)
 
   /** Row count of a committed stage, from its manifest (written at
     * commit time from the snapshot's own partition stats) — callers that
     * need the cardinality of a just-materialized stage read it here
     * instead of paying a count job over the snapshot.
     */
-  def committedRows(name: String): Option[Long] = {
-    val mp = manifestPath(name)
-    if (!Files.exists(mp)) None
-    else {
-      val text = new String(Files.readAllBytes(mp), StandardCharsets.UTF_8)
-      """"rows"\s*:\s*(\d+)""".r.findFirstMatchIn(text).map(_.group(1).toLong)
-    }
-  }
+  def committedRows(name: String): Option[Long] = manifest(name).map(_.rows)
 
   /** Materialize a stage: if a committed snapshot with the same
     * fingerprint exists, read it (resume path, no recompute); otherwise
@@ -97,8 +91,6 @@ final class StageStore(root: String, spark: SparkSession) {
       .agg(count(lit(1)).as("rows"))
       .orderBy("pid")
       .collect()
-    val partRows = partStats
-      .map(r => s"""{"pid":${r.getInt(0)},"rows":${r.getLong(1)}}""")
     // total = sum of the per-partition rows already collected — a second
     // full count() scan of the snapshot would be redundant I/O per commit
     val total = partStats.map(_.getLong(1)).sum
@@ -113,11 +105,12 @@ final class StageStore(root: String, spark: SparkSession) {
     val dd = dataDir(name)
     deleteRecursively(dd)
     Files.move(tmp, dd, StandardCopyOption.ATOMIC_MOVE)
-    val manifest =
-      s"""{"stage":"${esc(name)}","fingerprint":"$fp","rows":$total,
-         |"partitions":[${partRows.mkString(",")}]}""".stripMargin
+    val record = StageStore.json.createObjectNode()
+      .put("stage", name).put("fingerprint", fp).put("rows", total)
+    val parts = record.putArray("partitions")
+    partStats.foreach(r => parts.addObject().put("pid", r.getInt(0)).put("rows", r.getLong(1)))
     val tmpManifest = stageDir(name).resolve(".MANIFEST.tmp")
-    Files.write(tmpManifest, manifest.getBytes(StandardCharsets.UTF_8))
+    Files.write(tmpManifest, StageStore.json.writeValueAsBytes(record))
     Files.move(tmpManifest, manifestPath(name), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
     spark.read.parquet(dd.toString)
@@ -129,4 +122,10 @@ final class StageStore(root: String, spark: SparkSession) {
         .forEach(f => Files.delete(f))
     }
   }
+}
+
+object StageStore {
+  private final case class Manifest(fingerprint: String, rows: Long)
+
+  private val json = new ObjectMapper()
 }

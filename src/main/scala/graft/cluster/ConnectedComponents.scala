@@ -115,12 +115,7 @@ object ConnectedComponents {
     * @param vertices DataFrame with a single `doc_id` column (the universe)
     */
   def run(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
-          maxIterations: Int = 50): DataFrame =
-    runLoop(spark, edges, vertices, maxIterations)
-
-  private def runLoop(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
-                      maxIterations: Int): DataFrame = {
-    val profile = sys.env.contains("GRAFT_PROFILE")
+          maxIterations: Int = 50): DataFrame = {
     var iter = 0
     // Contraction pre-pass: merge graphs from pairwise scoring are
     // clique-heavy (every within-cluster pair that scored above the
@@ -160,19 +155,13 @@ object ConnectedComponents {
     var e: DataFrame = null
     var converged = false
     try {
-    val t0 = System.nanoTime()
     e = smallStar(
         edges.select(col("src"), col("dst")).where(col("src") =!= col("dst")))
       .localCheckpoint(true)
     converged = isStarForest(e)
-    if (profile) System.err.println(
-      f"[cc] smallStar pre-pass: ${(System.nanoTime() - t0) / 1e9}%.2f s, converged=$converged")
     while (!converged && iter < maxIterations) {
-      val t0 = System.nanoTime()
       e = smallStar(largeStar(e)).localCheckpoint(true)
       converged = isStarForest(e)
-      if (profile) System.err.println(
-        f"[cc] iter $iter: ${(System.nanoTime() - t0) / 1e9}%.2f s, converged=$converged")
       iter += 1
     }
     } finally {

@@ -49,7 +49,7 @@ object IntersectKernel {
   }
 }
 
-case class SortedLongIntersectCountExpr(left: Expression, right: Expression)
+private[dedup] case class SortedLongIntersectCountExpr(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = IntegerType

@@ -31,47 +31,29 @@ final case class PipelineConfig(
     entityType: Option[String] = Some(graft.norm.Normalizer.COMPANY),
     maxBlockSize: Int = 1000,
     saltedMaxBlockSize: Int = -1,
-    useDefaultKeys: Boolean = true,
-    useSortedNeighborhoodKeys: Boolean = true,
-    useMinHashLsh: Boolean = true,
     /** L1 fast path (SURVEY §4): group identical normalized names first
       * and run blocking/scoring/clustering on one representative per
       * group. Provably output-equivalent: identical names share every
       * blocking key and short-circuit to score 1.0, so a group always
       * auto-merges; at corpus scale exact duplicates are the bulk of the
       * data and never enter the quadratic pair space.
+      *
+      * Shape: reps come from a partial-aggregating groupBy (min doc_id
+      * per (normalized, type, tenant) group) and the member->rep map from
+      * a join back to them, in both checkpointed and direct runs. A
+      * dominant exact-duplicate name contributes one partial row per map
+      * task to the groupBy and an AQE-splittable hot key to the join, so
+      * no group is ever one task's whole buffer (the window shape this
+      * replaced put a 6M-copy hot name into one 8.3 s task; this shape
+      * ran that case 2.4x faster). Its limit is the other end: each
+      * consumer of the member->rep map pays a join where a cached window
+      * pass held the map as a column, and the probe put the break-even
+      * near 10^6-row groups. On a 4.8k-doc Zipfian corpus (largest group
+      * 570 docs, 4-vCPU host) checkpointed runs measured unchanged, and
+      * a window variant on the same stage barriers measured no faster in
+      * a short A/B.
       */
     exactPregroup: Boolean = true,
-    /** Skew-safe variant of the exact pregroup's member->rep computation.
-      * The default (false) computes the rep with ONE window exchange —
-      * fastest shape measured at bench scale and under moderate skew —
-      * but a window cannot partial-aggregate: every row of one
-      * normalized-name group lands in ONE task, so a corpus with a
-      * dominant exact-duplicate name (the Zipfian case at crawl scale)
-      * gets an unbounded single-task straggler (measured:
-      * PregroupSkewProbe, 6M-copy hot name -> the whole stage is one
-      * 8.3 s task; the two-phase shape finishes 2.4x faster with its
-      * hot join AQE-skew-splittable). Set true for such corpora: reps
-      * come from a partial-aggregating groupBy (always skew-safe) and
-      * the member->rep map from a join back (AQE splits hot keys /
-      * broadcasts small rep dims). Output is identical — both compute
-      * min(doc_id) per (normalized, type, tenant) group — pinned by
-      * ResolvePipelineSpec's equality test.
-      */
-    exactPregroupSkewSafe: Boolean = false,
-    /** AQE runtime broadcast threshold for the pipeline's joins
-      * (spark.sql.adaptive.autoBroadcastJoinThreshold). The scoring
-      * stage joins the pair table against the NAMES dim twice; when the
-      * measured names size fits under this bound, AQE converts those
-      * sort-merge joins to broadcast-hash — the ~half-KB name strings
-      * then never ride a pair-scale shuffle (measured: the dominant
-      * shuffle/sort bytes of the whole pipeline). This is runtime-
-      * adaptive, not a hint: at true corpus scale the measured dim
-      * exceeds the bound and AQE keeps the shuffle join, so the setting
-      * is safe at every scale; 256m costs at most ~3x that in executor
-      * hash-relation memory when it does fire.
-      */
-    adaptiveBroadcastThreshold: String = "256m",
     /** M9 canMerge, type half (merge/MergeEngine.java:310-322): name of a
       * column on the input docs carrying the entity type; docs of
       * different types share blocking keys and get scored, but never
@@ -144,25 +126,12 @@ final case class PipelineResult(
 
 object ResolvePipeline {
 
-  /** Fine-grained scaling attribution (dev-only): additionally times the
-    * scoring stage's sub-steps — candidate distinct, kernels-only pass,
-    * cache-build — and each blocking strategy's key table separately, by
-    * materializing them one at a time before the production pass. The
-    * extra actions distort the STAGE totals (sub-steps run once each on
-    * their own), so this is never on in a recorded run; each sub-number
-    * is individually clean.
+  /** Rep counts at or above this limit use the two-column candidate-pair
+    * path: packing a pair into one long (pk = a << 31 | b) needs every
+    * surrogate id < 2^31. Scoped (not a config field) so tests can force
+    * the two-column path on small corpora.
     */
-  private val fine = sys.env.contains("GRAFT_PROFILE_FINE")
-  private val profile = sys.env.contains("GRAFT_PROFILE") || fine
-  private def timed[T](name: String)(f: => T): T = {
-    if (!profile) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[pipeline] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-  }
+  private[pipeline] val packLimit = new scala.util.DynamicVariable[Long](1L << 31)
 
   /** Run over a docs table (doc_id string, spans array<struct<...>>).
     *
@@ -179,6 +148,12 @@ object ResolvePipeline {
     // partition coalescing: the engine's stages are CPU-bound per row
     // (similarity kernels), and byte-based coalescing collapses them to a
     // handful of tasks (observed 2-task 8s stages on a 32-core box).
+    // The runtime broadcast threshold is raised to 256m: the scoring
+    // stage joins the pair table against the names dim twice, and when
+    // the measured dim fits AQE turns those sort-merge joins into
+    // broadcast-hash joins, so the name strings never ride a pair-scale
+    // shuffle. At corpus scale the measured dim exceeds the bound and the
+    // shuffle join stands.
     // The conf mutations are SCOPED to this call (snapshot + finally
     // restore): every materialization this function performs — keys,
     // pairs, pairScores, CC — runs under the pipeline policy, while the
@@ -187,18 +162,13 @@ object ResolvePipeline {
     // permanently disabled AQE partition coalescing for every later query
     // in the session (measured: the whole bench sweep ran its small
     // shuffles at the full session partition count).
-    val scopedConfs = Seq(
-      "spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.coalescePartitions.enabled",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold") ++
-      cfg.numShufflePartitions.map(_ => "spark.sql.shuffle.partitions")
-    val prevConfs = scopedConfs.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold",
-      cfg.adaptiveBroadcastThreshold)
-    cfg.numShufflePartitions.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString))
+    val pipelineConfs = Seq(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "256m") ++
+      cfg.numShufflePartitions.map(n => "spark.sql.shuffle.partitions" -> n.toString)
+    val prevConfs = pipelineConfs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pipelineConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
     val store = cfg.checkpointRoot.map(new StageStore(_, spark))
     // Stage fingerprints are DEPENDENCY-SCOPED and chained: each stage's
@@ -238,15 +208,16 @@ object ResolvePipeline {
     }.getOrElse("")
     def fp(parts: String*): String =
       store.map(_.fingerprint(parts: _*)).getOrElse("")
-    val fpNormalized = fp(inputFp, cfg.entityType.toString, cfg.statusColumn.toString)
-    val fpGroups = fp(fpNormalized, cfg.exactPregroup.toString,
-      cfg.typeColumn.toString, cfg.tenantColumn.toString)
-    // "dids-v1": since r06 the blocking-key and candidate-pair snapshots
-    // are keyed by integer surrogates (see the surrogate_ids stage) —
-    // the token invalidates pre-change STRING-keyed snapshots so a
-    // resume recomputes them instead of misreading the old schema
-    val fpKeys = fp(fpGroups, cfg.useDefaultKeys.toString,
-      cfg.useSortedNeighborhoodKeys.toString, cfg.useMinHashLsh.toString, "dids-v1")
+    // "names-v1": the normalized stage holds the narrow name projection
+    // (doc_id, normalized, scope columns), so it also depends on the
+    // type/tenant columns; the token invalidates the older full-width
+    // snapshots
+    val fpNormalized = fp(inputFp, cfg.entityType.toString, cfg.statusColumn.toString,
+      cfg.typeColumn.toString, cfg.tenantColumn.toString, "names-v1")
+    val fpGroups = fp(fpNormalized, cfg.exactPregroup.toString)
+    // "dids-v1": the blocking-key and candidate-pair snapshots are keyed
+    // by integer surrogates (see the surrogate_ids stage)
+    val fpKeys = fp(fpGroups, "dids-v1")
     val fpPairs = fp(fpKeys, cfg.maxBlockSize.toString, cfg.saltedMaxBlockSize.toString)
     val fpScores = fp(fpPairs, cfg.weights.toString, cfg.thresholds.toString,
       cfg.orphanFallback.toString, cfg.orphanFallbackCap.toString)
@@ -257,11 +228,28 @@ object ResolvePipeline {
         .getOrElse("none")
     }.getOrElse("")
     val fpClusters = fp(fpScores, overrideFp)
-    def stage(name: String, stageFp: String)(compute: => DataFrame): DataFrame =
-      store match {
-        case Some(s) => s.materialize(name, stageFp)(compute)
-        case None => compute
-      }
+
+    // The run's only fork on the store. A stage is a MATERIALIZATION
+    // BARRIER in both modes: with a store, the committed snapshot read
+    // back; without one, a columnar cache. A barrier keeps Catalyst from
+    // pushing a downstream filter back into the stage's plan (e.g. the
+    // composite score re-evaluated as a join-residual predicate on the
+    // pre-distinct key stream, observed 17x) and stops a multi-consumer
+    // stage from being recomputed per consumer. The cache holds
+    // compressed column batches (dictionary/RLE), not one heap object per
+    // row: measured on the scaling corpus, the row-object localCheckpoint
+    // store anti-scales with executor threads (2.4 s at 1 thread -> 29.5 s
+    // at 4 for the same data), while the columnar build is flat and its
+    // consumer scans are column-pruned; an evicted batch recomputes the
+    // deterministic plan instead of failing the job. `snapshot` leaves
+    // the cache to be built by the stage's first consumer; `stage` builds
+    // it now and returns the row count (the manifest's, with a store).
+    def snapshot(name: String, stageFp: String)(compute: => DataFrame): DataFrame =
+      store.fold(compute.persist())(_.materialize(name, stageFp)(compute))
+    def stage(name: String, stageFp: String)(compute: => DataFrame): (DataFrame, Long) = {
+      val df = snapshot(name, stageFp)(compute)
+      (df, store.flatMap(_.committedRows(name)).getOrElse(df.count()))
+    }
 
     // ---- name derivation + validation (N8): bad rows -> rejects, not errors
     val named = docs
@@ -301,149 +289,57 @@ object ResolvePipeline {
       tenantCol.map(tc =>
         coalesce(col(tc).cast("string"), lit("\u0002null")).as("__tenant"))
 
-    // ---- normalization (N1-N4)
-    val normalized = stage("normalized", fpNormalized) {
+    // ---- normalization (N1-N4), kept as the small name projection — the
+    // batch analog of the reference's entity-dim cache (I7); the
+    // pregroup's groupBy and its member->rep join both scan it
+    val allNames = snapshot("normalized", fpNormalized) {
       matchable.withColumn("normalized",
         graft.norm.Normalizer.normalizeColumn(col("name"), cfg.entityType))
-    }
-    // keep the small projection materialized across the key/score joins —
-    // the batch analog of the reference's entity-dim cache (I7); consumed
-    // by key generation plus both sides of the scoring join
-    val allNames = store match {
-      case Some(_) => normalized.select(nameCols: _*)
-      case None if !cfg.exactPregroup => timed("allNames.localCheckpoint") {
-        // when pregrouping is OFF this dim is where surrogates get minted
-        // (see namesKeyed): freeze it in doc_id order so the minted ids
-        // are order-isomorphic to the string ids
-        normalized.select(nameCols: _*).orderBy("doc_id").localCheckpoint(true)
-      }
-      // pregroup + non-checkpoint mode: left LAZY on purpose — the fused
-      // rep-window pass below is this projection's only hot consumer and
-      // its columnar persist is the materialization barrier; a separate
-      // localCheckpoint here was one more full-width block store + read
-      // per run (measured ~2.5 s at 4 threads on the scaling corpus)
-      case None => normalized.select(nameCols: _*)
+        .select(nameCols: _*)
     }
 
     // ---- L1 exact-match fast path: one representative (min doc_id) per
-    // identical normalized name (per type, when typed — same-name docs of
-    // different types must not collapse); members re-attach to their
-    // rep's cluster at the end. Output-equivalent (see
-    // PipelineConfig.exactPregroup).
-    val groupCols = Seq("normalized") ++ typeCol.map(_ => "__type") ++
-      tenantCol.map(_ => "__tenant")
-    // member -> representative as a WINDOW over the group key, not a join
-    // against the rep dim: the join's broadcast build serializes the full
-    // ~name-width dim on the driver every time a lazy consumer evaluates
-    // the map (measured seconds per evaluation); the window is one
-    // data-parallel exchange + group-local min with no driver work, and
-    // computes the identical rep (min doc_id per group).
-    val byGroup = org.apache.spark.sql.expressions.Window
-      .partitionBy(groupCols.map(col): _*)
-    // skew-safe member->rep map (exactPregroupSkewSafe): join members back
-    // to the rep dim on the group key. Null-SAFE equality on every group
-    // column — the window groups NULL keys together, and a non-null-safe
-    // join would silently drop every NULL-keyed member from the map.
-    def joinRepMap(members: DataFrame, reps: DataFrame): DataFrame = {
-      val repSide = reps.select(
-        groupCols.map(c => col(c).as(s"__g_$c")) :+ col("doc_id").as("rep"): _*)
-      val cond = groupCols.map(c => col(c) <=> col(s"__g_$c")).reduce(_ && _)
-      members.join(repSide, cond).select(col("doc_id"), col("rep"))
-    }
+    // identical normalized name (per type and tenant when scoped —
+    // same-name docs of different types must not collapse); members
+    // re-attach to their rep's cluster at the end. Output-equivalent and
+    // skew-safe (see PipelineConfig.exactPregroup).
+    val groupCols = Seq("normalized") ++ typeCol.map(_ => "__type") ++ tenantCarry
     val (names, repMap) =
-      if (cfg.exactPregroup) store match {
-        case Some(_) =>
-          val reps = stage("exact_groups", fpGroups) {
-            allNames.groupBy(groupCols.map(col): _*).agg(min("doc_id").as("doc_id"))
-              .select((Seq(col("doc_id"), col("normalized")) ++
-                typeCol.map(_ => col("__type")) ++
-                tenantCol.map(_ => col("__tenant"))): _*)
-          }
-          val m =
-            if (cfg.exactPregroupSkewSafe) joinRepMap(allNames, reps)
-            else allNames
-              .withColumn("rep", min("doc_id").over(byGroup))
-              .select(col("doc_id"), col("rep"))
-          (reps, Some(m))
-        case None if cfg.exactPregroupSkewSafe => timed("repGroups.materialize") {
-          // two-phase shape (see exactPregroupSkewSafe scaladoc): reps
-          // from a PARTIAL-AGGREGATING groupBy — a dominant group
-          // contributes one partial row per map task, never one task's
-          // whole buffer — and the map from the AQE-splittable join
-          // back. Costs one extra materialization of the name dim vs
-          // the fused window (allNames feeds both phases), which is the
-          // deliberate trade for bounded task sizes on Zipfian
-          // duplicate distributions.
-          val an = allNames.persist()
-          an.count()
-          val repsMat = an.groupBy(groupCols.map(col): _*).agg(min("doc_id").as("doc_id"))
-            .select((Seq(col("doc_id"), col("normalized")) ++
-              typeCol.map(_ => col("__type")) ++
-              tenantCol.map(_ => col("__tenant"))): _*)
-            .orderBy("doc_id").localCheckpoint(true)
-          val m = joinRepMap(an, repsMat).persist()
-          (repsMat, Some(m))
+      if (cfg.exactPregroup) {
+        val reps = snapshot("exact_groups", fpGroups) {
+          allNames.groupBy(groupCols.map(col): _*).agg(min("doc_id").as("doc_id"))
+            .select("doc_id", groupCols: _*)
         }
-        case None => timed("repGroups.materialize") {
-          // FUSED pass: one window exchange yields BOTH pregroup surfaces —
-          // the rep dim (rows whose doc_id IS the group min: exactly one
-          // per group, identical to groupBy+min) and the member->rep map.
-          // The previous shape paid two full-width exchanges of the wide
-          // name table per run (a groupBy for the dim, the window for the
-          // map) plus a double localCheckpoint of the dim; this is one
-          // exchange + a columnar cache (names dictionary-encode, rep ids
-          // RLE) that every later evaluation of the map scans column-pruned.
-          val withRep = allNames
-            .withColumn("rep", min("doc_id").over(byGroup))
-            .persist()
-          withRep.count()
-          // frozen in doc_id order: the surrogate minting (namesKeyed)
-          // derives order-isomorphic, locality-dense ids from this scan.
-          // The cache is the frozen source, so the range sort's sampling
-          // pass is a cheap cached scan, and ONE localCheckpoint freezes
-          // the sorted layout for every consumer.
-          val repsMat = withRep.where(col("doc_id") === col("rep")).drop("rep")
-            .orderBy("doc_id").localCheckpoint(true)
-          (repsMat, Some(withRep.select(col("doc_id"), col("rep"))))
-        }
+        // member -> rep: join the members back to the reps on the group
+        // key. Null-SAFE equality on every group column — the groupBy
+        // groups NULL keys together, and a non-null-safe join would
+        // silently drop every NULL-keyed member from the map.
+        val repSide = reps.select(
+          groupCols.map(c => col(c).as(s"__g_$c")) :+ col("doc_id").as("rep"): _*)
+        val m = allNames
+          .join(repSide, groupCols.map(c => col(c) <=> col(s"__g_$c")).reduce(_ && _))
+          .select(col("doc_id"), col("rep"))
+        (reps, Some(m))
       } else (allNames, None)
 
-    // ---- integer surrogate join ids (BOTH modes since r06). The
-    // candidate distinct and the two scoring-dim probes are the
-    // pipeline's memory-system hot spots: on string doc_ids every one of
-    // the ~n_pairs HashAggregate / HashedRelation operations hashes and
-    // memcmps two var-length strings inside tables hundreds of MB big —
-    // at high parallelism that random traffic is what saturates shared
-    // memory bandwidth. A long surrogate (`__did`) makes each pair row a
-    // fixed-width 16 bytes (vs ~40+ for two string ids), shrinks the
-    // distinct's aggregate table ~2.5x, and lets Spark build long-keyed
-    // hash relations for the name dims. The surrogate is minted with
-    // monotonically_increasing_id over the FROZEN rep table (non-store
-    // mode always localCheckpoints it, so every consumer scan derives
-    // identical ids within the run); ids never reach an OUTPUT — scoring
-    // re-canonicalizes to string doc_ids (least/greatest is safe: all
-    // three kernels are symmetric).
+    // ---- integer surrogate join ids. The candidate distinct and the two
+    // scoring-dim probes are the pipeline's memory-system hot spots: on
+    // string doc_ids every one of the ~n_pairs HashAggregate /
+    // HashedRelation operations hashes and memcmps two var-length strings
+    // inside tables hundreds of MB big — at high parallelism that random
+    // traffic is what saturates shared memory bandwidth. A long surrogate
+    // (`__did`) makes each pair row a fixed-width 16 bytes (vs ~40+ for
+    // two string ids), shrinks the distinct's aggregate table ~2.5x, and
+    // lets Spark build long-keyed hash relations for the name dims. Ids
+    // never reach an OUTPUT — scoring re-canonicalizes to string doc_ids
+    // (least/greatest is safe: all three kernels are symmetric).
     //
-    // CHECKPOINTED runs (verdict r05 item 4): previously string-keyed end
-    // to end — production ResolveJob paid exactly the memory-system costs
-    // the surrogates remove. Now the (doc_id, __did) mapping is itself a
-    // persisted STAGE ("surrogate_ids"): minted once over the frozen
-    // name dim, then written through the StageStore — so a resumed run
-    // READS the committed ids rather than re-minting (scan-split or
-    // core-count changes between runs can never re-key a persisted pair
-    // snapshot), and the blocking-key / candidate-pair snapshots carry
-    // dids with fingerprints version-bumped ("dids-v1") so pre-change
-    // string snapshots recompute instead of being misread.
-    // Output equality of the two paths is pinned by ResolveJobSpec's
-    // checkpointed == direct test and the q04/q05/q29/q60 oracles.
-    val useDids = true
-    // Surrogates are minted DENSE (0..n-1) in doc_id order — the name dim
-    // is FROZEN range-sorted (see the orderBy at its localCheckpoint);
-    // partition sizes of that frozen layout are read with one tiny
-    // grouped count, prefix-summed on the driver, and dense id =
-    // partition offset + monotonically_increasing_id's lower 33 bits
-    // (the partition-local counter). Dense doc_id-ordered ids buy three
-    // properties:
+    // Surrogates are minted DENSE (0..n-1) in doc_id order over the name
+    // dim FROZEN range-sorted: partition sizes of that frozen layout are
+    // read with one tiny grouped count, prefix-summed on the driver, and
+    // dense id = partition offset + monotonically_increasing_id's lower
+    // 33 bits (the partition-local counter). Dense doc_id-ordered ids buy
+    // three properties:
     //  - ORDER ISOMORPHISM: __did < __did' iff doc_id < doc_id' (binary
     //    string order), so a min/least over surrogates corresponds to the
     //    same min over string ids — downstream consumers may canonicalize
@@ -463,7 +359,12 @@ object ResolvePipeline {
     //    (pk = a << 31 | b), halving what the candidate distinct hashes,
     //    exchanges and sorts — see CandidateGenerator.candidatePairsPacked.
     //    Corpora beyond 2^31 entities fall back to the two-column path.
-    def mintDids(src: DataFrame): (DataFrame, Long) = {
+    // The (doc_id, __did) mapping is itself a stage: task retries during
+    // the snapshot write or cache build re-scan the checkpointed source,
+    // so the ids are deterministic, and a resumed run READS the committed
+    // ids rather than re-minting (scan-split or core-count changes between
+    // runs can never re-key a persisted pair snapshot).
+    def mintDids(src: DataFrame): DataFrame = {
       val counts = src.groupBy(spark_partition_id().as("__p"))
         .agg(count(lit(1)).as("__n")).collect()
         .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
@@ -480,56 +381,37 @@ object ResolvePipeline {
       val offsetExpr =
         if (counts.isEmpty) lit(0L)
         else element_at(typedlit(offArr.toSeq), spark_partition_id() + 1)
-      (src.withColumn("__did", offsetExpr +
-        monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1))),
-        counts.map(_._2).sum)
+      src.withColumn("__did", offsetExpr +
+        monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)))
     }
-    val (namesKeyed, nReps) = store match {
-      case Some(st) =>
-        // the mapping is itself a stage: on a miss, freeze the name dim
-        // doc_id-ordered (locality, see above) and mint over it — task
-        // retries during the snapshot write re-scan the checkpointed
-        // source, so the written ids are deterministic; on a resume the
-        // committed snapshot is read back and minting never re-runs.
-        // nReps comes from the commit manifest (no extra count job).
-        val fpDids = fp(fpGroups, "surrogate-ids-v1")
-        val nk = st.materialize("surrogate_ids", fpDids) {
-          mintDids(names.orderBy("doc_id").localCheckpoint(true))._1
-        }
-        (nk, st.committedRows("surrogate_ids").getOrElse(nk.count()))
-      case None => mintDids(names)
+    val (namesKeyed, nReps) = stage("surrogate_ids", fp(fpGroups, "surrogate-ids-v1")) {
+      mintDids(names.orderBy("doc_id").localCheckpoint(true))
     }
-    val joinId = "__did"
-    // pk packing needs every id < 2^31; the orphan fallback composes on
-    // the two-column shape, so it keeps the unpacked path
-    val packed = useDids && nReps < (1L << 31) && !cfg.orphanFallback
+    val packed = nReps < packLimit.value
+    val idMask = lit((1L << 31) - 1)
+    def pack(pairs: DataFrame): DataFrame =
+      pairs.select(shiftleft(col("doc_id_a"), 31).bitwiseOR(col("doc_id_b")).as("pk"))
+    def unpack(pairs: DataFrame): DataFrame =
+      pairs.select(shiftright(col("pk"), 31).as("doc_id_a"),
+        col("pk").bitwiseAND(idMask).as("doc_id_b"))
     // the key builders and CandidateGenerator are id-type-agnostic: feed
-    // them the join id in the doc_id slot
-    val keySource =
-      if (useDids)
-        namesKeyed.select(col("__did").as("doc_id") +:
-          names.columns.filter(_ != "doc_id").toSeq.map(col): _*)
-      else names
+    // them the surrogate in the doc_id slot
+    val keySource = namesKeyed.select(col("__did").as("doc_id") +:
+      names.columns.filter(_ != "doc_id").toSeq.map(col): _*)
 
     // ---- blocking keys (B1 + B5 + B6): one unified (block_key, doc_id)
     // table as a union of per-strategy key tables (each strategy stays a
     // linear expression tree; the union is what gets bucketed by
     // block_key at cluster scale)
     val keyTables = Seq(
-      if (cfg.useDefaultKeys)
-        Some(BlockingKeys.explodeKeys(keySource, "doc_id",
-          BlockingKeys.defaultKeys(col("normalized")), tenantCarry))
-      else None,
-      if (cfg.useSortedNeighborhoodKeys)
-        Some(keySource
-          .select(BlockingKeys.sortedNeighborhoodKey(col("normalized")).as("block_key") +:
-            col("doc_id") +: tenantCarry.map(col): _*)
-          .where(col("block_key").isNotNull))
-      else None,
-      if (cfg.useMinHashLsh)
-        Some(BlockingKeys.minhashKeyTable(keySource, "doc_id", col("normalized"), tenantCarry))
-      else None,
-    ).flatten.map { kt =>
+      BlockingKeys.explodeKeys(keySource, "doc_id",
+        BlockingKeys.defaultKeys(col("normalized")), tenantCarry),
+      keySource
+        .select(BlockingKeys.sortedNeighborhoodKey(col("normalized")).as("block_key") +:
+          col("doc_id") +: tenantCarry.map(col): _*)
+        .where(col("block_key").isNotNull),
+      BlockingKeys.minhashKeyTable(keySource, "doc_id", col("normalized"), tenantCarry)
+    ).map { kt =>
       // tenant isolation: the tenant id becomes part of the block key
       // ( separator cannot occur in either side), so the candidate
       // join, the block-size cap and the salting all operate per tenant
@@ -541,8 +423,7 @@ object ResolvePipeline {
       }
     }
     // The key table is consumed 4x (stats + both sides of the self-join +
-    // block sizing): materialize it once — as the parquet snapshot when
-    // checkpointing, as an eager localCheckpoint otherwise. This also
+    // block sizing): the stage barrier materializes it once, which also
     // avoids re-running the minhash shingle hashing per consumer.
     // The 3-strategy union triples the upstream partition count (each
     // strategy contributes its input's partitions), which is an artifact
@@ -555,77 +436,39 @@ object ResolvePipeline {
     // each get their own target (measured at sf0.1: the packed candidate
     // distinct drops ~40% when its source goes from 96 to 32 partitions).
     val keyParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    var keysRows = -1L
-    val keys = store match {
-      case Some(_) => stage("blocking_keys", fpKeys)(
-        keyTables.reduce(_ union _).coalesce(keyParts))
-      case None => timed("keys.materialize") {
-        if (fine) keyTables.zipWithIndex.foreach { case (kt, i) =>
-          timed(s"fine.keys.strategy$i.count")(kt.count())
-        }
-        // columnar cache, not RDD localCheckpoint: the cache stores
-        // ~10k-row compressed column batches (dictionary/RLE on the key
-        // strings) instead of one heap object per row. Measured on the
-        // scaling corpus: the row-object store path anti-scales with
-        // executor threads (block-store cost 2.4 s at 1 thread ->
-        // 29.5 s at 4 for the same data: per-row unroll accounting +
-        // GC), while the columnar build is flat and its consumer scans
-        // are column-pruned. Same barrier semantics: InMemoryRelation
-        // replaces the subtree, so no consumer predicate reaches back
-        // into the key-generation plan, and an evicted batch recomputes
-        // the deterministic plan instead of failing the job.
-        val k = keyTables.reduce(_ union _).coalesce(keyParts).persist()
-        keysRows = k.count()
-        k
-      }
-    }
+    val (keys, keysRows) = stage("blocking_keys", fpKeys)(
+      keyTables.reduce(_ union _).coalesce(keyParts))
     // Measured-size broadcast decision for the candidate self-join (guide
-    // §3.1): the key table was just counted, so the driver KNOWS whether
-    // the build side is broadcast-sized — an explicit hint avoids the
-    // static planner's estimate-blind sort-merge plan whose exchanges AQE
-    // materializes and then abandons when it converts to broadcast. Above
-    // the row bound (true corpus scale) no hint is passed and the
-    // exchange-based plan stands.
-    val hintBroadcastPairs =
-      keysRows >= 0 && keysRows <= CandidateGenerator.BroadcastKeysMaxRows
+    // §3.1): the stage barrier KNOWS the key table's row count, so the
+    // driver knows whether the build side is broadcast-sized — an explicit
+    // hint avoids the static planner's estimate-blind sort-merge plan
+    // whose exchanges AQE materializes and then abandons when it converts
+    // to broadcast. Above the row bound (true corpus scale) no hint is
+    // passed and the exchange-based plan stands.
+    val hintBroadcastPairs = keysRows <= CandidateGenerator.BroadcastKeysMaxRows
 
     // ---- candidate pairs (B3) with block-size cap + AQE skew handling
-    val candStats = () => timed("stats")(
-      CandidateGenerator.stats(keys, cfg.maxBlockSize, cfg.saltedMaxBlockSize))
-    // the packed flag is part of the pair snapshot's identity: packed
+    val candStats = () =>
+      CandidateGenerator.stats(keys, cfg.maxBlockSize, cfg.saltedMaxBlockSize)
+    // Materialized ONCE by the stage barrier. Without it the whole
+    // key-self-join + distinct subtree is evaluated up to THREE times per
+    // run: AQE plans the scoring stage's two name joins independently,
+    // and whichever side it decides to broadcast re-derives the pair
+    // table from scratch for its broadcast build (measured on the sf0.1
+    // pipeline: three ~30 cpu-s stages scanning the keys cache — two
+    // feeding BroadcastExchanges, one the stream — for one logical
+    // distinct). The table is one fixed-width column (pk long / two ids),
+    // so the memory cost is minimal at any scale.
+    // The packed flag is part of the pair snapshot's identity: packed
     // snapshots hold one pk long, unpacked two id columns — a resume
-    // whose packedness changed (corpus crossed 2^31 reps, or the orphan
-    // fallback was toggled upstream of fpScores) must recompute
-    val blockedPairsPlan = stage("candidate_pairs", fp(fpPairs, s"packed=$packed")) {
+    // whose packedness changed (corpus crossed 2^31 reps) must recompute.
+    val (blockedPairs, _) = stage("candidate_pairs", fp(fpPairs, s"packed=$packed")) {
       if (packed)
         CandidateGenerator.candidatePairsPacked(keys, cfg.maxBlockSize,
           cfg.saltedMaxBlockSize, hintBroadcast = hintBroadcastPairs)
       else
         CandidateGenerator.candidatePairs(keys, cfg.maxBlockSize,
           cfg.saltedMaxBlockSize, hintBroadcast = hintBroadcastPairs)
-    }
-    // Materialize the candidate distinct ONCE (columnar cache + count to
-    // build, like keys above; the StageStore snapshot already is that
-    // barrier in checkpoint mode). Without it the whole key-self-join +
-    // distinct subtree is evaluated up to THREE times per run: AQE plans
-    // the scoring stage's two name joins independently, and whichever
-    // side it decides to broadcast re-derives the pair table from scratch
-    // for its broadcast build (measured on the sf0.1 pipeline: three
-    // ~30 cpu-s stages scanning the keys cache — two feeding
-    // BroadcastExchanges, one the stream — for one logical distinct).
-    // The cache is one fixed-width column (pk long / two ids), so the
-    // memory cost is minimal at any scale and eviction just recomputes.
-    val blockedPairs = store match {
-      case Some(_) => blockedPairsPlan
-      case None => timed("pairs.materialize") {
-        val p = blockedPairsPlan.persist()
-        p.count()
-        if (sys.env.contains("GRAFT_EXPLAIN"))
-          System.err.println("[explain] pairs plan (executed):\n" +
-            p.queryExecution.executedPlan.toString.linesIterator
-              .take(80).mkString("\n"))
-        p
-      }
     }
 
     // ---- B4, bounded (api/EntityResolutionService.java:512-524): the
@@ -642,19 +485,20 @@ object ResolvePipeline {
     val pairs =
       if (!cfg.orphanFallback) blockedPairs
       else {
-        // join-id space throughout (pair columns match blockedPairs');
+        // surrogate space throughout, in the blocked pairs' encoding;
         // sampling ORDER stays on the string doc_id — the deterministic-
         // sample contract must not depend on how surrogates were minted
-        val paired = blockedPairs.select(col("doc_id_a").as("doc_id"))
-          .union(blockedPairs.select(col("doc_id_b").as("doc_id"))).distinct()
+        val blockedIds = if (packed) unpack(blockedPairs) else blockedPairs
+        val paired = blockedIds.select(col("doc_id_a").as("doc_id"))
+          .union(blockedIds.select(col("doc_id_b").as("doc_id"))).distinct()
         val orphans = namesKeyed
-          .select(col(joinId).as("doc_id") +: scopeCols.map(col): _*)
+          .select(col("__did").as("doc_id") +: scopeCols.map(col): _*)
           .join(paired, Seq("doc_id"), "left_anti")
         val fb0 =
           if (scopeCols.isEmpty) {
             // TakeOrderedAndProject: distributed partial top-k, cap rows
             val sample = namesKeyed
-              .select(col(joinId).as("doc_id_b"), col("doc_id").as("__ord"))
+              .select(col("__did").as("doc_id_b"), col("doc_id").as("__ord"))
               .orderBy(col("__ord")).limit(cfg.orphanFallbackCap)
               .select("doc_id_b")
             orphans.select(col("doc_id")).crossJoin(broadcast(sample))
@@ -670,7 +514,7 @@ object ResolvePipeline {
               .partitionBy(scopeCols.map(col): _*).orderBy(col("doc_id"))
             val sample = namesKeyed.withColumn("__rn", row_number().over(byScope))
               .where(col("__rn") <= cfg.orphanFallbackCap)
-              .select(col(joinId).as("doc_id_b") +:
+              .select(col("__did").as("doc_id_b") +:
                 scopeCols.map(c => col(c).as(c + "_b")): _*)
             orphans.select(col("doc_id") +: scopeCols.map(col): _*)
               .join(sample,
@@ -680,8 +524,7 @@ object ResolvePipeline {
           .where(col("doc_id") =!= col("doc_id_b"))
           .select(least(col("doc_id"), col("doc_id_b")).as("doc_id_a"),
             greatest(col("doc_id"), col("doc_id_b")).as("doc_id_b"))
-          .distinct()
-        blockedPairs.union(fb)
+        blockedPairs.union((if (packed) pack(fb) else fb).distinct())
       }
 
     // ---- pairwise scoring (S1-S5) with full breakdown (D3: one row per
@@ -689,11 +532,11 @@ object ResolvePipeline {
     // from the breakdown ALIASES (the reference's computeWithBreakdown
     // shape) — multi-use non-cheap aliases stop CollapseProject from
     // inlining, so each kernel runs once per pair.
-    // dims keyed by the join id; they also CARRY the string doc_id so the
-    // output projection needs no extra join to map surrogates back
-    val a = namesKeyed.select(col(joinId).as("doc_id_a"),
+    // dims keyed by the surrogate; they also CARRY the string doc_id so
+    // the output projection needs no extra join to map surrogates back
+    val a = namesKeyed.select(col("__did").as("doc_id_a"),
       col("doc_id").as("__sa"), col("normalized").as("name_a"))
-    val b = namesKeyed.select(col(joinId).as("doc_id_b"),
+    val b = namesKeyed.select(col("__did").as("doc_id_b"),
       col("doc_id").as("__sb"), col("normalized").as("name_b"))
     val w = cfg.weights
     // Scoring runs in the reduce stage of the second name join: with AQE
@@ -707,22 +550,18 @@ object ResolvePipeline {
     // (A shuffle_hash hint on the name sides was measured and reverted:
     // 179 s vs 170 s for the SMJ plan at local[16] — the stage is
     // kernel-dominated, and SMJ's sorts are not the bottleneck.)
-    // Sorted pair scan (surrogate mode): within each partition the pair
-    // stream is scanned in (doc_id_a, doc_id_b) order, so the broadcast
-    // name-relation probes walk a localized window of the dim (ids are
-    // locality-dense, see namesKeyed) instead of random-accessing the
-    // whole table on every row — at 4+ threads those whole-table random
-    // reads thrash the shared last-level cache and were the measured
-    // per-core inflation. In packed mode this is a ONE-key radix sort on
-    // pk (whose order equals (a, b) order) with the ids unpacked by two
-    // bit ops in the same projection; no extra exchange either way.
+    // Sorted pair scan: within each partition the pair stream is scanned
+    // in (doc_id_a, doc_id_b) order, so the broadcast name-relation
+    // probes walk a localized window of the dim (ids are locality-dense,
+    // see namesKeyed) instead of random-accessing the whole table on
+    // every row — at 4+ threads those whole-table random reads thrash the
+    // shared last-level cache and were the measured per-core inflation.
+    // In packed mode this is a ONE-key radix sort on pk (whose order
+    // equals (a, b) order) with the ids unpacked by two bit ops in the
+    // same projection; no extra exchange either way.
     val pairsScanned =
-      if (packed)
-        pairs.sortWithinPartitions("pk")
-          .select(shiftright(col("pk"), 31).as("doc_id_a"),
-            col("pk").bitwiseAND(lit((1L << 31) - 1)).as("doc_id_b"))
-      else if (useDids) pairs.sortWithinPartitions("doc_id_a", "doc_id_b")
-      else pairs
+      if (packed) unpack(pairs.sortWithinPartitions("pk"))
+      else pairs.sortWithinPartitions("doc_id_a", "doc_id_b")
     val scoredPlan = pairsScanned
       .join(a, Seq("doc_id_a"))
       .join(b, Seq("doc_id_b"))
@@ -737,65 +576,17 @@ object ResolvePipeline {
             + lit(w.jaccardWeight) * col("jaccard_score")))
       .withColumn("decision", Decisions.decide(col("score"), cfg.thresholds))
       // re-canonicalize on the STRING ids: candidate pairs were ordered in
-      // join-id space, and surrogate order need not match string order.
-      // Safe because every score is symmetric in (name_a, name_b); in
-      // string mode this is the identity (pairs are already canonical).
+      // surrogate space; safe because every score is symmetric in
+      // (name_a, name_b)
       .select(least(col("__sa"), col("__sb")).as("doc_id_a"),
         greatest(col("__sa"), col("__sb")).as("doc_id_b"),
         col("lev_score"), col("jw_score"), col("jaccard_score"),
         col("score"), col("decision"))
-    // The scored-pairs table is a MATERIALIZATION BARRIER: downstream
-    // filters (AUTO_MERGE edges, metrics) must not be pushed back through
-    // the candidate join — Catalyst would otherwise re-evaluate the full
-    // composite score as a join-residual predicate on the pre-distinct,
-    // skew-concentrated key stream (observed 17x blowup). With a
-    // StageStore the parquet snapshot is that barrier; without one, an
-    // eager localCheckpoint is.
-    val pairScores = store match {
-      case Some(_) => stage("pair_scores", fpScores)(scoredPlan)
-      case None => timed("pairScores.materialize") {
-        if (fine) {
-          // raw (pre-distinct) pair volume: sum n*(n-1)/2 over kept
-          // blocks. Salted-range blocks (maxBlockSize < n <= salted cap)
-          // also generate pairs but are excluded here — the label says
-          // so to keep the printed diagnostic truthful in salted configs
-          // (ADVICE r05).
-          val kept = keys.groupBy("block_key").agg(count(lit(1)).as("n"))
-            .where(col("n") <= cfg.maxBlockSize)
-            .agg(sum(col("n") * (col("n") - 1) / 2)).collect()(0)
-          System.err.println(
-            s"[pipeline] fine.rawPairsUpperBound (unsalted blocks only): ${kept.get(0)}")
-          // D: candidate distinct + columnar cache of the 16-byte pairs
-          timed("fine.pairs.distinct+cache") { pairs.persist(); pairs.count() }
-          // J0: join skeleton only — count(1) prunes every kernel column,
-          // so this times the sorted scan + the two dim probes alone
-          timed("fine.score.joinSkeleton") {
-            scoredPlan.select("doc_id_a", "doc_id_b")
-              .agg(count(lit(1))).collect()
-          }
-          // J: the same plan with the kernels forced (sum(score) keeps
-          // lev/jw/jaccard alive through pruning), still no row store
-          timed("fine.score.withKernels") {
-            scoredPlan.agg(sum(col("score")), count(lit(1))).collect()
-          }
-        }
-        // columnar cache for the pipeline's WIDEST materialization (see
-        // keys above for the measured localCheckpoint anti-scaling).
-        // pairScores compresses exceptionally well columnar: `decision`
-        // is 3-valued RLE, ids dictionary-encode, and the count() the
-        // callers do reads batch row counts without touching data.
-        val p = scoredPlan.persist()
-        timed("fine.persist.build")(p.count())
-        // dev-only: the EXECUTED scoring plan, printed after the build so
-        // AQE's final stage choices (join strategies, cache hits) are
-        // visible rather than the pre-execution guess
-        if (sys.env.contains("GRAFT_EXPLAIN"))
-          System.err.println("[explain] scoring plan (executed):\n" +
-            p.queryExecution.executedPlan.toString.linesIterator
-              .take(150).mkString("\n"))
-        p
-      }
-    }
+    // The scored-pairs table is the pipeline's WIDEST materialization; it
+    // compresses exceptionally well columnar (`decision` is 3-valued RLE,
+    // ids dictionary-encode), and the count() the callers do reads batch
+    // row counts without touching data.
+    val (pairScores, _) = stage("pair_scores", fpScores)(scoredPlan)
 
     // ---- edges (M7/M9 + D7 overrides) -> connected components -> clusters
     // M9 type guard: cross-type pairs are scored (D3 keeps the record)
@@ -825,11 +616,7 @@ object ResolvePipeline {
     // also what mergeEdges records below (provenance must assert only
     // merges the clusters output actually made).
     val validOverride = overrideEdges.map { o =>
-      // the matchable-universe id set: the member->rep map covers exactly
-      // the allNames rows and is cache-backed in non-checkpoint pregroup
-      // mode (allNames itself is lazy there — scanning it would re-run
-      // normalization)
-      val ids = repMap.map(_.select("doc_id")).getOrElse(allNames.select("doc_id"))
+      val ids = allNames.select("doc_id")
       o.select(col("src"), col("dst"))
         .join(ids.select(col("doc_id").as("src")), Seq("src"), "left_semi")
         .join(ids.select(col("doc_id").as("dst")), Seq("dst"), "left_semi")
@@ -848,10 +635,8 @@ object ResolvePipeline {
       case None => autoEdges
     }
     val vertices = names.select("doc_id")
-    val repAssignments = timed("cc") {
-      stage("clusters", fpClusters) {
-        ConnectedComponents.run(spark, edges, vertices)
-      }
+    val repAssignments = snapshot("clusters", fpClusters) {
+      ConnectedComponents.run(spark, edges, vertices)
     }
 
     // expand representative clusters back to every member; non-ACTIVE

@@ -53,6 +53,23 @@ class StageStoreSpec extends AnyFunSuite {
     assert(store.committedFingerprint("s1").contains("fp00"))
   }
 
+  test("manifest fields are read by name: partitions before the top-level rows") {
+    import spark.implicits._
+    val root = tmpDir("graft-store")
+    val store = new StageStore(root, spark)
+    var computes = 0
+    def compute = { computes += 1; Seq(1, 2, 3).toDF("id") }
+    store.materialize("s1", "fp00")(compute)
+    // same fields, another order: a per-partition "rows" now comes first
+    Files.write(Paths.get(root, "s1", "MANIFEST.json"),
+      ("""{"stage":"s1","partitions":[{"pid":0,"rows":1},{"pid":1,"rows":2}],""" +
+        """"fingerprint":"fp00","rows":3}""").getBytes)
+    assert(store.committedRows("s1").contains(3L), "must report the top-level total")
+    assert(store.committedFingerprint("s1").contains("fp00"))
+    store.materialize("s1", "fp00")(compute)
+    assert(computes == 1, "a reordered manifest is still a commit")
+  }
+
   // ---- chaos tier: injected mid-stage faults (the batch analog of the
   // reference's chaos/ChaosTest.java connection-failure injection). The
   // invariant under every fault: an uncommitted stage is recomputed, a

@@ -152,34 +152,64 @@ class ResolvePipelineSpec extends AnyFunSuite {
 
   test("skew-safe pregroup (two-phase rep map) is output-identical, incl. a dominant group") {
     import spark.implicits._
-    // a corpus where ONE name dominates (the Zipfian case the skew-safe
-    // path exists for: the window shape would put every copy in one
-    // task) plus normal entities; both paths must produce identical
-    // cluster assignments
+    // a corpus where ONE name dominates (the Zipfian case the two-phase
+    // rep map exists for: a window over the group key would put every
+    // copy in one task) plus normal entities; the pregrouped run must
+    // produce the same cluster assignments as the unpregrouped reference
     val hot = (0 until 300).map(i => (f"h$i%03d",
       Seq(graft.model.Span("text", "the dominant company inc", "", 0))))
     val base = truthDocs.select("doc_id", "spans")
     val docs = base.unionByName(hot.toDF("doc_id", "spans"))
-    val window = ResolvePipeline.run(spark, docs, PipelineConfig())
-      .clusters.select("doc_id", "cluster_id")
-    val twoPhase = ResolvePipeline.run(spark, docs,
-      PipelineConfig(exactPregroupSkewSafe = true))
-      .clusters.select("doc_id", "cluster_id")
-    assert(window.exceptAll(twoPhase).isEmpty && twoPhase.exceptAll(window).isEmpty,
-      "skew-safe rep map must match the window rep map exactly")
-    // and with type/tenant scoping (exercises the null-safe multi-column
+    def clusters(d: org.apache.spark.sql.DataFrame, cfg: PipelineConfig) =
+      ResolvePipeline.run(spark, d, cfg).clusters.select("doc_id", "cluster_id")
+    val twoPhase = clusters(docs, PipelineConfig())
+    val reference = clusters(docs, PipelineConfig(exactPregroup = false))
+    assert(twoPhase.exceptAll(reference).isEmpty && reference.exceptAll(twoPhase).isEmpty,
+      "two-phase rep map must match the unpregrouped reference exactly")
+    assert(twoPhase.where(col("cluster_id") === "h000").count() == 300,
+      "every copy of the dominant name joins one cluster")
+    // and with tenant scoping (exercises the null-safe multi-column
     // group join)
     val scoped = docs.withColumn("tenant",
       when(col("doc_id").cast("string").startsWith("h"), lit(null: String))
         .otherwise(concat(lit("t"), pmod(xxhash64(col("doc_id")), lit(2)))))
-    val w2 = ResolvePipeline.run(spark, scoped,
-      PipelineConfig(tenantColumn = Some("tenant")))
-      .clusters.select("doc_id", "cluster_id")
-    val t2 = ResolvePipeline.run(spark, scoped,
-      PipelineConfig(tenantColumn = Some("tenant"), exactPregroupSkewSafe = true))
-      .clusters.select("doc_id", "cluster_id")
-    assert(w2.exceptAll(t2).isEmpty && t2.exceptAll(w2).isEmpty,
-      "skew-safe rep map must match under tenant scoping with NULL tenants")
+    val t2 = clusters(scoped, PipelineConfig(tenantColumn = Some("tenant")))
+    val r2 = clusters(scoped,
+      PipelineConfig(tenantColumn = Some("tenant"), exactPregroup = false))
+    assert(t2.exceptAll(r2).isEmpty && r2.exceptAll(t2).isEmpty,
+      "two-phase rep map must match the reference under tenant scoping with NULL tenants")
+    assert(t2.where(col("cluster_id") === "h000").count() == 300,
+      "NULL-tenant copies group together")
+  }
+
+  test("forced two-column pair path == packed path, with and without orphan fallback") {
+    import spark.implicits._
+    // the two-column path serves corpora past 2^31 reps; a pack limit of
+    // 0 drives it on a small corpus (run once checkpointed, so the pair
+    // snapshot shows which encoding ran). An orphan that shares no
+    // blocking key gives the fallback work to do.
+    val orphan = Seq(("o1", Seq(graft.model.Span("text", "qqqxyzzy", "", 0))))
+      .toDF("doc_id", "spans")
+    val docs = truthDocs.select("doc_id", "spans").unionByName(orphan)
+    for (fallback <- Seq(false, true)) {
+      val cfg = PipelineConfig(orphanFallback = fallback, orphanFallbackCap = 10)
+      val root = java.nio.file.Files.createTempDirectory("graft-unpacked").toString
+      val packed = ResolvePipeline.run(spark, docs, cfg)
+      val unpacked = ResolvePipeline.packLimit.withValue(0L) {
+        ResolvePipeline.run(spark, docs, cfg.copy(checkpointRoot = Some(root)))
+      }
+      assert(spark.read.parquet(s"$root/candidate_pairs/data").columns.toSeq ==
+        Seq("doc_id_a", "doc_id_b"), s"pack limit 0 must run unpacked (fallback=$fallback)")
+      for ((what, p, u) <- Seq(("assignments", packed.assignments, unpacked.assignments),
+                               ("pair scores", packed.pairScores, unpacked.pairScores))) {
+        assert(p.exceptAll(u).isEmpty && u.exceptAll(p).isEmpty,
+          s"$what differ between packed and unpacked runs (fallback=$fallback)")
+      }
+      val orphanPairs = unpacked.pairScores
+        .where(col("doc_id_a") === "o1" || col("doc_id_b") === "o1").count()
+      assert(orphanPairs == (if (fallback) 10L else 0L),
+        s"orphan pairs: $orphanPairs (fallback=$fallback)")
+    }
   }
 
   test("D7: review-override edges force a merge the scorer would not") {
