@@ -4,9 +4,15 @@ import java.io.IOException
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** I6/M8: stage checkpoint store — atomic snapshot commits with a
   * per-stage manifest carrying lineage + per-partition metrics, so a
@@ -14,11 +20,16 @@ import org.apache.spark.sql.functions._
   *
   * The north star names Iceberg tables; no Iceberg runtime jar exists on
   * this image's classpath (SURVEY.md §7.4), so the *semantics* are
-  * implemented over Parquet directories: data is written to a temp dir,
-  * verified, moved into place, and the manifest write is the commit point
-  * (manifest present + fingerprint match = stage committed). This mirrors
-  * Iceberg's snapshot-commit model; if an Iceberg jar appears, only the
-  * format strings change.
+  * implemented over Parquet directories. A commit is one Spark write and
+  * driver-side metadata: write the snapshot to a temp dir, take the
+  * per-partition row counts from the written files' parquet footers, move
+  * the dir into place, then write the manifest (fingerprint, rows,
+  * per-partition lineage, schema) — the commit point. A stage is
+  * committed when its manifest is complete, its fingerprint matches and
+  * its data dir exists; it is read back with the manifest's schema, so
+  * neither the commit nor a resume runs a schema-inference job. This
+  * mirrors Iceberg's snapshot-commit model; if an Iceberg jar appears,
+  * only the format strings change.
   *
   * This replaces the reference's 6-step compensating merge transaction
   * (merge/MergeEngine.java:97-228, docs/adr/ADR-002): Spark stages are
@@ -39,16 +50,20 @@ final class StageStore(root: String, spark: SparkSession) {
   }
 
   /** The commit record of a stage: the manifest's top-level fields. A
-    * missing, unparseable or truncated manifest, or one without both
-    * fields, is no commit at all.
+    * missing, unparseable or truncated manifest, one without all three
+    * fields (a manifest from before the `schema` field included), or one
+    * whose data dir is gone, is no commit at all.
     */
   private def manifest(name: String): Option[StageStore.Manifest] = {
     val mp = manifestPath(name)
-    if (!Files.exists(mp)) None
+    if (!Files.exists(mp) || !Files.isDirectory(dataDir(name))) None
     else try {
       val m = StageStore.json.readTree(mp.toFile)
-      val (fp, rows) = (m.path("fingerprint"), m.path("rows"))
-      if (fp.isTextual && rows.isIntegralNumber) Some(StageStore.Manifest(fp.asText, rows.asLong))
+      val (fp, rows, schema) = (m.path("fingerprint"), m.path("rows"), m.path("schema"))
+      if (fp.isTextual && rows.isIntegralNumber && schema.isTextual)
+        Try(DataType.fromJson(schema.asText)).toOption.collect {
+          case st: StructType => StageStore.Manifest(fp.asText, rows.asLong, st)
+        }
       else None
     } catch { case _: IOException => None }
   }
@@ -56,7 +71,7 @@ final class StageStore(root: String, spark: SparkSession) {
   def committedFingerprint(name: String): Option[String] = manifest(name).map(_.fingerprint)
 
   /** Row count of a committed stage, from its manifest (written at
-    * commit time from the snapshot's own partition stats) — callers that
+    * commit time from the snapshot's parquet footers) — callers that
     * need the cardinality of a just-materialized stage read it here
     * instead of paying a count job over the snapshot.
     */
@@ -66,13 +81,17 @@ final class StageStore(root: String, spark: SparkSession) {
     * fingerprint exists, read it (resume path, no recompute); otherwise
     * compute, snapshot atomically, commit the manifest, and read back.
     * Reading back (instead of reusing the in-memory plan) truncates
-    * lineage and makes every downstream stage restart-equivalent.
+    * lineage and makes every downstream stage restart-equivalent. Until
+    * the returned frame is consumed, a miss runs only the write's jobs
+    * and a hit runs none.
     */
-  def materialize(name: String, fp: String)(compute: => DataFrame): DataFrame = {
-    if (committedFingerprint(name).contains(fp))
-      return spark.read.parquet(dataDir(name).toString)
+  def materialize(name: String, fp: String)(compute: => DataFrame): DataFrame =
+    manifest(name).filter(_.fingerprint == fp) match {
+      case Some(m) => read(name, m.schema)
+      case None => commit(name, fp, compute)
+    }
 
-    val df = compute
+  private def commit(name: String, fp: String, df: DataFrame): DataFrame = {
     val tmp = stageDir(name).resolve(s".tmp-$fp")
     Files.createDirectories(stageDir(name))
     // clean ALL stale tmp snapshots for this stage, not just the current
@@ -84,16 +103,12 @@ final class StageStore(root: String, spark: SparkSession) {
     } finally siblings.close()
     df.write.mode("overwrite").parquet(tmp.toString)
 
-    // Per-partition lineage metrics from the written files (stable across
-    // reruns because the snapshot, not the plan, is the source of truth).
-    val written = spark.read.parquet(tmp.toString)
-    val partStats = written.groupBy(spark_partition_id().as("pid"))
-      .agg(count(lit(1)).as("rows"))
-      .orderBy("pid")
-      .collect()
-    // total = sum of the per-partition rows already collected — a second
-    // full count() scan of the snapshot would be redundant I/O per commit
-    val total = partStats.map(_.getLong(1)).sum
+    // Per-partition lineage metrics from the written files' footers
+    // (stable across reruns because the snapshot, not the plan, is the
+    // source of truth). `pid` is the partition of the write task that
+    // produced the file; a task that wrote nothing left no file.
+    val partStats = footerRows(tmp)
+    val total = partStats.map(_._2).sum
 
     // Swap snapshot into place, then commit via manifest (commit point).
     // The OLD manifest is invalidated FIRST: a crash anywhere in the swap
@@ -108,24 +123,50 @@ final class StageStore(root: String, spark: SparkSession) {
     val record = StageStore.json.createObjectNode()
       .put("stage", name).put("fingerprint", fp).put("rows", total)
     val parts = record.putArray("partitions")
-    partStats.foreach(r => parts.addObject().put("pid", r.getInt(0)).put("rows", r.getLong(1)))
+    partStats.foreach { case (pid, rows) => parts.addObject().put("pid", pid).put("rows", rows) }
+    record.put("schema", df.schema.json)
     val tmpManifest = stageDir(name).resolve(".MANIFEST.tmp")
     Files.write(tmpManifest, StageStore.json.writeValueAsBytes(record))
     Files.move(tmpManifest, manifestPath(name), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
-    spark.read.parquet(dd.toString)
+    read(name, df.schema)
+  }
+
+  private def read(name: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(dataDir(name).toString)
+
+  /** (write-task partition, rows) per partition that wrote part files,
+    * ordered by partition: the record counts of the footers, summed over
+    * a task's files.
+    */
+  private def footerRows(dir: Path): Seq[(Int, Long)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def records(file: Path): Long = {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file.toUri), conf))
+      try reader.getRecordCount finally reader.close()
+    }
+    val files = Files.list(dir)
+    val counts = try files.iterator().asScala.toSeq.flatMap { p =>
+      StageStore.partFile.findPrefixMatchOf(p.getFileName.toString)
+        .map(m => m.group(1).toInt -> records(p))
+    } finally files.close()
+    counts.groupMapReduce(_._1)(_._2)(_ + _).toSeq.sorted
   }
 
   private def deleteRecursively(p: Path): Unit = {
     if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
+      finally walk.close()
     }
   }
 }
 
 object StageStore {
-  private final case class Manifest(fingerprint: String, rows: Long)
+  private final case class Manifest(fingerprint: String, rows: Long, schema: StructType)
 
   private val json = new ObjectMapper()
+
+  /** Spark's data-file name: `part-<task partition>-<job uuid>…`. */
+  private val partFile = "^part-(\\d+)-".r
 }

@@ -2,8 +2,16 @@ package graft.checkpoint
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MetadataBuilder
 
 import graft.SparkTestSession
 import graft.gen.DocGen
@@ -61,13 +69,91 @@ class StageStoreSpec extends AnyFunSuite {
     def compute = { computes += 1; Seq(1, 2, 3).toDF("id") }
     store.materialize("s1", "fp00")(compute)
     // same fields, another order: a per-partition "rows" now comes first
-    Files.write(Paths.get(root, "s1", "MANIFEST.json"),
-      ("""{"stage":"s1","partitions":[{"pid":0,"rows":1},{"pid":1,"rows":2}],""" +
-        """"fingerprint":"fp00","rows":3}""").getBytes)
+    val mp = Paths.get(root, "s1", "MANIFEST.json")
+    val mapper = new ObjectMapper()
+    val written = mapper.readTree(mp.toFile).asInstanceOf[ObjectNode]
+    val reordered = mapper.createObjectNode()
+    reordered.set[ObjectNode]("partitions", written.get("partitions"))
+    written.properties().forEach(e => if (e.getKey != "partitions") reordered.set[ObjectNode](e.getKey, e.getValue))
+    assert(reordered.fieldNames().next() == "partitions")
+    Files.write(mp, mapper.writeValueAsBytes(reordered))
     assert(store.committedRows("s1").contains(3L), "must report the top-level total")
     assert(store.committedFingerprint("s1").contains("fp00"))
     store.materialize("s1", "fp00")(compute)
     assert(computes == 1, "a reordered manifest is still a commit")
+  }
+
+  test("manifest lineage comes from the written part files' footers; read-back schema is exact") {
+    val root = tmpDir("graft-store")
+    val store = new StageStore(root, spark)
+    val tagged = new MetadataBuilder().putString("comment", "tagged").build()
+    // three write partitions; the middle one is filtered to nothing
+    val df = spark.range(0, 6, 1, 3).where(col("id") < 2 || col("id") >= 4)
+      .select(col("id"), col("id").cast("string").as("v", tagged),
+        array(col("id")).as("ids"), struct(col("id").as("inner")).as("s"))
+    assert(df.rdd.getNumPartitions == 3)
+    val out = store.materialize("s1", "fp00")(df)
+    val dataDir = Paths.get(root, "s1", "data")
+    val manifest = new ObjectMapper().readTree(Paths.get(root, "s1", "MANIFEST.json").toFile)
+    val parts = manifest.get("partitions").elements().asScala
+      .map(p => p.get("pid").asInt -> p.get("rows").asLong).toSeq
+    val files = Files.list(dataDir)
+    val filePids = try files.iterator().asScala.map(_.getFileName.toString)
+      .collect { case n if n.startsWith("part-") => n.split("-")(1).toInt }.toSeq.distinct.sorted
+    finally files.close()
+    assert(parts.map(_._1) == filePids, "one lineage entry per written part file's pid")
+    assert(!filePids.contains(1), "the empty write partition left no part file")
+    val total = manifest.get("rows").asLong
+    assert(parts.map(_._2).sum == total)
+    assert(total == df.count() && total == 4L)
+    assert(store.committedRows("s1").contains(4L))
+    val inferred = spark.read.parquet(dataDir.toString).schema
+    assert(out.schema == inferred, "commit read-back schema, nullability and metadata included")
+    val resumed = store.materialize("s1", "fp00")(fail("a committed stage must not recompute"))
+    assert(resumed.schema == inferred, "resume read-back schema")
+    assert(resumed.schema("v").metadata == tagged)
+    assert(resumed.orderBy("id").collect().map(_.toString).toSeq ==
+      df.orderBy("id").collect().map(_.toString).toSeq)
+  }
+
+  test("commit job budget: a miss runs only the write's jobs, a hit none until consumed") {
+    val sc = spark.sparkContext
+    val jobs = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.synchronized(jobs(g) += 1))
+    }
+    def jobsOf(label: String)(body: => Unit): Int = {
+      val group = s"graft-budget-$label-${java.util.UUID.randomUUID}"
+      sc.setJobGroup(group, label)
+      try body finally sc.clearJobGroup()
+      ListenerBus.drain(sc)
+      jobs.synchronized(jobs(group))
+    }
+    // a shuffle, so the write runs more than one job under AQE
+    def frame = spark.range(0, 2000, 1, 4)
+      .select(col("id"), (col("id") % 7).cast("string").as("v"))
+      .repartition(3, col("v"))
+    val root = tmpDir("graft-budget")
+    val store = new StageStore(root, spark)
+    sc.addSparkListener(listener)
+    try {
+      // warm-up: one commit and one plain write before anything is counted
+      store.materialize("warm", "fp00")(frame).count()
+      frame.write.mode("overwrite").parquet(Paths.get(root, "plain-warm").toString)
+
+      val plain = jobsOf("plain")(frame.write.mode("overwrite")
+        .parquet(Paths.get(root, "plain").toString))
+      val miss = jobsOf("miss")(store.materialize("s1", "fp00")(frame))
+      assert(plain > 0, "the job listener saw the plain write")
+      assert(miss == plain, s"a commit runs $miss jobs, a plain write $plain")
+
+      var hit: DataFrame = null
+      val hitJobs = jobsOf("hit") { hit = store.materialize("s1", "fp00")(frame) }
+      assert(hitJobs == 0, s"a resume ran $hitJobs jobs before its frame was consumed")
+      assert(jobsOf("consume")(assert(hit.count() == 2000L)) > 0)
+    } finally sc.removeSparkListener(listener)
   }
 
   // ---- chaos tier: injected mid-stage faults (the batch analog of the
@@ -91,6 +177,45 @@ class StageStoreSpec extends AnyFunSuite {
     assert(computes == 2, "data-without-manifest must NOT count as committed")
     assert(after.toSeq == clean.toSeq)
     assert(store.committedFingerprint("s1").contains(fp), "recommit must complete")
+  }
+
+  test("chaos: manifest whose data dir was removed -> recompute, not a failed read") {
+    import spark.implicits._
+    val root = tmpDir("graft-chaos")
+    val store = new StageStore(root, spark)
+    var computes = 0
+    def compute = { computes += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
+    val fp = store.fingerprint("v1")
+    val clean = store.materialize("s1", fp)(compute).collect().map(_.toString).sorted
+    // external cleanup removed the snapshot but left its commit record
+    val dd = Paths.get(root, "s1", "data")
+    Files.walk(dd).sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
+    assert(store.committedFingerprint("s1").isEmpty, "a manifest without data is no commit")
+    val after = store.materialize("s1", fp)(compute).collect().map(_.toString).sorted
+    assert(computes == 2, "a missing data dir must force a recompute")
+    assert(after.toSeq == clean.toSeq)
+    assert(store.committedFingerprint("s1").contains(fp), "recommit must complete")
+  }
+
+  test("chaos: manifest without a schema (older format) is uncommitted -> recompute once") {
+    import spark.implicits._
+    val root = tmpDir("graft-chaos")
+    val store = new StageStore(root, spark)
+    var computes = 0
+    def compute = { computes += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
+    val fp = store.fingerprint("v1")
+    val clean = store.materialize("s1", fp)(compute).collect().map(_.toString).sorted
+    val mp = Paths.get(root, "s1", "MANIFEST.json")
+    val mapper = new ObjectMapper()
+    val old = mapper.readTree(mp.toFile).asInstanceOf[ObjectNode]
+    old.remove("schema")
+    Files.write(mp, mapper.writeValueAsBytes(old))
+    assert(store.committedFingerprint("s1").isEmpty)
+    val after = store.materialize("s1", fp)(compute).collect().map(_.toString).sorted
+    assert(computes == 2, "a manifest without a schema must force a recompute")
+    assert(after.toSeq == clean.toSeq)
+    store.materialize("s1", fp)(compute)
+    assert(computes == 2, "the recommitted manifest carries its schema: later runs resume")
   }
 
   test("chaos: stale tmp dir from a killed writer is cleaned and overwritten") {
