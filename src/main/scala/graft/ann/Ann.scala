@@ -217,7 +217,7 @@ object Ann {
     * ingest guard), and the parquet append is not atomic (a crashed
     * append can leave partial files; wrap calls in the caller's
     * commit/replay protocol where exactly-once matters, as
-    * [[graft.streaming.VersionedState]] does for the streaming jobs).
+    * [[graft.checkpoint.VersionedState]] does for the streaming jobs).
     */
   def ivfAppend(newItems: DataFrame, path: String,
                 idCol: String = "vec_id", embCol: String = "embedding"): Unit = {

@@ -2,45 +2,47 @@ package graft.checkpoint
 
 import java.io.IOException
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** I6/M8: stage checkpoint store — atomic snapshot commits with a
-  * per-stage manifest carrying lineage + per-partition metrics, so a
-  * killed run resumes mid-pipeline.
+/** I6/M8: stage checkpoint store — snapshot commits with a per-stage
+  * manifest carrying lineage + per-partition metrics, so a killed run
+  * resumes mid-pipeline. `root` is any Hadoop path or URI.
   *
   * The north star names Iceberg tables; no Iceberg runtime jar exists on
   * this image's classpath (SURVEY.md §7.4), so the *semantics* are
-  * implemented over Parquet directories. A commit is one Spark write and
-  * driver-side metadata: write the snapshot to a temp dir, take the
-  * per-partition row counts from the written files' parquet footers, move
-  * the dir into place, then write the manifest (fingerprint, rows,
-  * per-partition lineage, schema) — the commit point. A stage is
-  * committed when its manifest is complete, its fingerprint matches and
-  * its data dir exists; it is read back with the manifest's schema, so
-  * neither the commit nor a resume runs a schema-inference job. This
-  * mirrors Iceberg's snapshot-commit model; if an Iceberg jar appears,
-  * only the format strings change.
+  * implemented over Parquet directories. A stage is `<root>/<stage>/`
+  * holding `data/` and `MANIFEST.json`, and commits by
+  * [[VersionedState]]'s rule, the one the streaming state uses: the
+  * manifest is the stage's commit marker and is created last. A commit
+  * is one Spark write plus a few metadata calls, all through Hadoop
+  * `FileSystem`: delete the old manifest (un-commit), write the snapshot
+  * straight into `data/`, take the per-partition row counts from the
+  * written files' parquet footers, then create the manifest
+  * (fingerprint, rows, per-partition lineage, schema). No step renames,
+  * so the protocol holds on stores whose rename is copy+delete. A stage
+  * is committed when its manifest is complete, its fingerprint matches
+  * and its data dir exists; it is read back with the manifest's schema,
+  * so neither the commit nor a resume runs a schema-inference job.
   *
   * This replaces the reference's 6-step compensating merge transaction
   * (merge/MergeEngine.java:97-228, docs/adr/ADR-002): Spark stages are
-  * deterministic and idempotent, so "transaction" = atomic snapshot
-  * overwrite and "rollback" = recompute from the previous stage.
+  * deterministic and idempotent, so "transaction" = snapshot overwrite
+  * under a marker-last commit and "rollback" = recompute from the
+  * previous stage.
   */
 final class StageStore(root: String, spark: SparkSession) {
 
-  private def stageDir(name: String): Path = Paths.get(root, name)
-  private def dataDir(name: String): Path = stageDir(name).resolve("data")
-  private def manifestPath(name: String): Path = stageDir(name).resolve("MANIFEST.json")
+  private val fs = VersionedState.fsOf(spark, root)
+  private def dataDir(name: String): Path = new Path(new Path(root, name), "data")
+  private def manifestPath(name: String): Path = new Path(new Path(root, name), "MANIFEST.json")
 
   /** Stable fingerprint for (stage params + upstream fingerprints). */
   def fingerprint(parts: String*): String = {
@@ -50,23 +52,22 @@ final class StageStore(root: String, spark: SparkSession) {
   }
 
   /** The commit record of a stage: the manifest's top-level fields. A
-    * missing, unparseable or truncated manifest, one without all three
+    * missing, unreadable or truncated manifest, one without all three
     * fields (a manifest from before the `schema` field included), or one
     * whose data dir is gone, is no commit at all.
     */
-  private def manifest(name: String): Option[StageStore.Manifest] = {
-    val mp = manifestPath(name)
-    if (!Files.exists(mp) || !Files.isDirectory(dataDir(name))) None
-    else try {
-      val m = StageStore.json.readTree(mp.toFile)
+  private def manifest(name: String): Option[StageStore.Manifest] =
+    try {
+      val in = fs.open(manifestPath(name))
+      val m = try StageStore.json.readTree(in) finally in.close()
       val (fp, rows, schema) = (m.path("fingerprint"), m.path("rows"), m.path("schema"))
-      if (fp.isTextual && rows.isIntegralNumber && schema.isTextual)
+      if (fp.isTextual && rows.isIntegralNumber && schema.isTextual &&
+          fs.getFileStatus(dataDir(name)).isDirectory)
         Try(DataType.fromJson(schema.asText)).toOption.collect {
           case st: StructType => StageStore.Manifest(fp.asText, rows.asLong, st)
         }
       else None
     } catch { case _: IOException => None }
-  }
 
   def committedFingerprint(name: String): Option[String] = manifest(name).map(_.fingerprint)
 
@@ -79,7 +80,7 @@ final class StageStore(root: String, spark: SparkSession) {
 
   /** Materialize a stage: if a committed snapshot with the same
     * fingerprint exists, read it (resume path, no recompute); otherwise
-    * compute, snapshot atomically, commit the manifest, and read back.
+    * compute, write the snapshot, commit the manifest, and read back.
     * Reading back (instead of reusing the in-memory plan) truncates
     * lineage and makes every downstream stage restart-equivalent. Until
     * the returned frame is consumed, a miss runs only the write's jobs
@@ -92,43 +93,26 @@ final class StageStore(root: String, spark: SparkSession) {
     }
 
   private def commit(name: String, fp: String, df: DataFrame): DataFrame = {
-    val tmp = stageDir(name).resolve(s".tmp-$fp")
-    Files.createDirectories(stageDir(name))
-    // clean ALL stale tmp snapshots for this stage, not just the current
-    // fingerprint's — a crashed run with a different config would
-    // otherwise leave its near-full copy on disk forever
-    val siblings = Files.list(stageDir(name))
-    try siblings.forEach { p =>
-      if (p.getFileName.toString.startsWith(".tmp-")) deleteRecursively(p)
-    } finally siblings.close()
-    df.write.mode("overwrite").parquet(tmp.toString)
+    // Un-commit FIRST: a crash anywhere before the new manifest lands
+    // then leaves no manifest (-> recompute on resume) instead of one
+    // whose fingerprint describes data that is being replaced — the
+    // invariant "manifest present + fingerprint match = committed" holds
+    // through crashes. The overwrite also clears a killed writer's
+    // partial data dir.
+    fs.delete(manifestPath(name), false)
+    df.write.mode("overwrite").parquet(dataDir(name).toString)
 
     // Per-partition lineage metrics from the written files' footers
     // (stable across reruns because the snapshot, not the plan, is the
     // source of truth). `pid` is the partition of the write task that
     // produced the file; a task that wrote nothing left no file.
-    val partStats = footerRows(tmp)
-    val total = partStats.map(_._2).sum
-
-    // Swap snapshot into place, then commit via manifest (commit point).
-    // The OLD manifest is invalidated FIRST: a crash anywhere in the swap
-    // window then leaves no manifest (-> recompute on resume) instead of
-    // a manifest whose fingerprint describes data that was already
-    // deleted or replaced — the stated invariant "manifest present +
-    // fingerprint match = committed" must hold through crashes.
-    Files.deleteIfExists(manifestPath(name))
-    val dd = dataDir(name)
-    deleteRecursively(dd)
-    Files.move(tmp, dd, StandardCopyOption.ATOMIC_MOVE)
+    val partStats = footerRows(dataDir(name))
     val record = StageStore.json.createObjectNode()
-      .put("stage", name).put("fingerprint", fp).put("rows", total)
+      .put("stage", name).put("fingerprint", fp).put("rows", partStats.map(_._2).sum)
     val parts = record.putArray("partitions")
     partStats.foreach { case (pid, rows) => parts.addObject().put("pid", pid).put("rows", rows) }
     record.put("schema", df.schema.json)
-    val tmpManifest = stageDir(name).resolve(".MANIFEST.tmp")
-    Files.write(tmpManifest, StageStore.json.writeValueAsBytes(record))
-    Files.move(tmpManifest, manifestPath(name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    VersionedState.commitMarker(fs, manifestPath(name), StageStore.json.writeValueAsBytes(record))
     read(name, df.schema)
   }
 
@@ -141,24 +125,12 @@ final class StageStore(root: String, spark: SparkSession) {
     */
   private def footerRows(dir: Path): Seq[(Int, Long)] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    def records(file: Path): Long = {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file.toUri), conf))
-      try reader.getRecordCount finally reader.close()
-    }
-    val files = Files.list(dir)
-    val counts = try files.iterator().asScala.toSeq.flatMap { p =>
-      StageStore.partFile.findPrefixMatchOf(p.getFileName.toString)
-        .map(m => m.group(1).toInt -> records(p))
-    } finally files.close()
-    counts.groupMapReduce(_._1)(_._2)(_ + _).toSeq.sorted
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
-      finally walk.close()
-    }
+    fs.listStatus(dir).toSeq.flatMap { st =>
+      StageStore.partFile.findPrefixMatchOf(st.getPath.getName).map { m =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try m.group(1).toInt -> reader.getRecordCount finally reader.close()
+      }
+    }.groupMapReduce(_._1)(_._2)(_ + _).toSeq.sorted
   }
 }
 

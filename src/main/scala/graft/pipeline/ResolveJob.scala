@@ -34,7 +34,8 @@ object ResolveJob {
       |  --output PATH             output root; writes PATH/clusters etc.
       |  [--format parquet|orc|json]   (csv lacks nested spans — import
       |                                via Bulk.importCsv + a span builder)
-      |  [--checkpoint-dir PATH]   StageStore root (resume + lineage)
+      |  [--checkpoint-dir URI]    StageStore root, a Hadoop URI or path
+      |                            (resume + lineage)
       |  [--weights L,JW,JAC]      default 0.33,0.34,0.33
       |  [--thresholds A,S,R]      default 0.92,0.80,0.60
       |  [--entity-type T|none]    normalization profile, default COMPANY

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.checkpoint.VersionedState
 import graft.dedup.Dedup
 import graft.util.Args
 
@@ -101,7 +102,8 @@ object StreamDedupJob {
     */
   def readStateTable(spark: SparkSession, stateRoot: String,
                      table: String): Option[DataFrame] =
-    VersionedState.readTable(spark, stateRoot, table)
+    VersionedState.readTableFrom(spark,
+      VersionedState.stateView(spark, stateRoot).units(stateRoot), table)
 
   /** The maintained near-dup pair set over everything ingested so far —
     * equals the full-batch recompute (chained-increments property).

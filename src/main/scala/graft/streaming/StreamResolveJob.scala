@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.blocking.BlockingKeys
+import graft.checkpoint.VersionedState
 import graft.functions.Er
 import graft.norm.Normalizer
 import graft.pipeline.IncrementalResolve

@@ -1,11 +1,14 @@
 package graft.checkpoint
 
+import java.net.URI
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.hadoop.fs.{FileUtil, Path, RawLocalFileSystem}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -17,28 +20,58 @@ import graft.SparkTestSession
 import graft.gen.DocGen
 import graft.pipeline.{PipelineConfig, ResolvePipeline}
 
+/** A local file system under its own scheme whose rename is copy+delete,
+  * like an object store's: nothing about it is atomic. It counts every
+  * rename, and separately those whose source lies outside a `_temporary`
+  * dir (Spark's own task-output commit renames inside one).
+  */
+class CopyRenameFileSystem extends RawLocalFileSystem {
+  override def getUri: URI = URI.create(s"${CopyRenameFileSystem.Scheme}:///")
+  override def getScheme: String = CopyRenameFileSystem.Scheme
+  override def rename(src: Path, dst: Path): Boolean = {
+    CopyRenameFileSystem.renames.incrementAndGet()
+    if (!src.toUri.getPath.split('/').contains("_temporary"))
+      CopyRenameFileSystem.outsideTemporary.incrementAndGet()
+    FileUtil.copy(this, src, this, dst, true, getConf)
+  }
+}
+
+object CopyRenameFileSystem {
+  val Scheme = "copyrename"
+  val renames = new AtomicInteger()
+  val outsideTemporary = new AtomicInteger()
+}
+
 /** Checkpoint/resume semantics (FIXTURES.md §6): committed stages are
   * skipped on rerun; a killed run resumes mid-pipeline and produces
   * byte-identical output.
   */
 class StageStoreSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkTestSession.spark
+  private lazy val spark = {
+    val s = SparkTestSession.spark
+    s.sparkContext.hadoopConfiguration.set(s"fs.${CopyRenameFileSystem.Scheme}.impl",
+      classOf[CopyRenameFileSystem].getName)
+    s
+  }
 
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  test("committed stage with same fingerprint is not recomputed") {
-    import spark.implicits._
-    val store = new StageStore(tmpDir("graft-store"), spark)
-    var computes = 0
-    def compute = { computes += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
-    val fp = store.fingerprint("stage-params", "v1")
-    val first = store.materialize("s1", fp)(compute).collect().sortBy(_.getInt(0))
-    val second = store.materialize("s1", fp)(compute).collect().sortBy(_.getInt(0))
-    assert(computes == 1, "second materialize must be a resume, not a recompute")
-    assert(first.map(_.toString).toSeq == second.map(_.toString).toSeq)
+  // stage files are edited through Hadoop FileSystem, as the store reads
+  // them: on `file:` a java.nio edit would leave a stale checksum
+  // sidecar, and the store would then fail the read instead of parsing
+  // the edited manifest
+  private def fsOf(root: String) = VersionedState.fsOf(spark, root)
+  private def stageFile(root: String, stage: String, file: String): Path =
+    new Path(new Path(root, stage), file)
+  private val mapper = new ObjectMapper()
+  private def readManifest(root: String, stage: String): ObjectNode = {
+    val in = fsOf(root).open(stageFile(root, stage, "MANIFEST.json"))
+    try mapper.readTree(in).asInstanceOf[ObjectNode] finally in.close()
   }
+  private def writeManifest(root: String, stage: String, bytes: Array[Byte]): Unit =
+    VersionedState.commitMarker(fsOf(root), stageFile(root, stage, "MANIFEST.json"), bytes)
 
   test("fingerprint change invalidates the snapshot") {
     import spark.implicits._
@@ -69,14 +102,12 @@ class StageStoreSpec extends AnyFunSuite {
     def compute = { computes += 1; Seq(1, 2, 3).toDF("id") }
     store.materialize("s1", "fp00")(compute)
     // same fields, another order: a per-partition "rows" now comes first
-    val mp = Paths.get(root, "s1", "MANIFEST.json")
-    val mapper = new ObjectMapper()
-    val written = mapper.readTree(mp.toFile).asInstanceOf[ObjectNode]
+    val written = readManifest(root, "s1")
     val reordered = mapper.createObjectNode()
     reordered.set[ObjectNode]("partitions", written.get("partitions"))
     written.properties().forEach(e => if (e.getKey != "partitions") reordered.set[ObjectNode](e.getKey, e.getValue))
     assert(reordered.fieldNames().next() == "partitions")
-    Files.write(mp, mapper.writeValueAsBytes(reordered))
+    writeManifest(root, "s1", mapper.writeValueAsBytes(reordered))
     assert(store.committedRows("s1").contains(3L), "must report the top-level total")
     assert(store.committedFingerprint("s1").contains("fp00"))
     store.materialize("s1", "fp00")(compute)
@@ -94,7 +125,7 @@ class StageStoreSpec extends AnyFunSuite {
     assert(df.rdd.getNumPartitions == 3)
     val out = store.materialize("s1", "fp00")(df)
     val dataDir = Paths.get(root, "s1", "data")
-    val manifest = new ObjectMapper().readTree(Paths.get(root, "s1", "MANIFEST.json").toFile)
+    val manifest = mapper.readTree(Paths.get(root, "s1", "MANIFEST.json").toFile)
     val parts = manifest.get("partitions").elements().asScala
       .map(p => p.get("pid").asInt -> p.get("rows").asLong).toSeq
     val files = Files.list(dataDir)
@@ -154,142 +185,6 @@ class StageStoreSpec extends AnyFunSuite {
       assert(hitJobs == 0, s"a resume ran $hitJobs jobs before its frame was consumed")
       assert(jobsOf("consume")(assert(hit.count() == 2000L)) > 0)
     } finally sc.removeSparkListener(listener)
-  }
-
-  // ---- chaos tier: injected mid-stage faults (the batch analog of the
-  // reference's chaos/ChaosTest.java connection-failure injection). The
-  // invariant under every fault: an uncommitted stage is recomputed, a
-  // committed stage is trusted, and the final output is byte-identical
-  // to an uninterrupted run.
-
-  test("chaos: kill between snapshot move and manifest commit -> recompute") {
-    import spark.implicits._
-    val root = tmpDir("graft-chaos")
-    val store = new StageStore(root, spark)
-    var computes = 0
-    def compute = { computes += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
-    val fp = store.fingerprint("v1")
-    val clean = store.materialize("s1", fp)(compute).collect().map(_.toString).sorted
-    // simulate the crash window: data dir swapped into place, manifest
-    // (the commit point) never written
-    Files.delete(Paths.get(root, "s1", "MANIFEST.json"))
-    val after = store.materialize("s1", fp)(compute).collect().map(_.toString).sorted
-    assert(computes == 2, "data-without-manifest must NOT count as committed")
-    assert(after.toSeq == clean.toSeq)
-    assert(store.committedFingerprint("s1").contains(fp), "recommit must complete")
-  }
-
-  test("chaos: manifest whose data dir was removed -> recompute, not a failed read") {
-    import spark.implicits._
-    val root = tmpDir("graft-chaos")
-    val store = new StageStore(root, spark)
-    var computes = 0
-    def compute = { computes += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
-    val fp = store.fingerprint("v1")
-    val clean = store.materialize("s1", fp)(compute).collect().map(_.toString).sorted
-    // external cleanup removed the snapshot but left its commit record
-    val dd = Paths.get(root, "s1", "data")
-    Files.walk(dd).sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
-    assert(store.committedFingerprint("s1").isEmpty, "a manifest without data is no commit")
-    val after = store.materialize("s1", fp)(compute).collect().map(_.toString).sorted
-    assert(computes == 2, "a missing data dir must force a recompute")
-    assert(after.toSeq == clean.toSeq)
-    assert(store.committedFingerprint("s1").contains(fp), "recommit must complete")
-  }
-
-  test("chaos: manifest without a schema (older format) is uncommitted -> recompute once") {
-    import spark.implicits._
-    val root = tmpDir("graft-chaos")
-    val store = new StageStore(root, spark)
-    var computes = 0
-    def compute = { computes += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
-    val fp = store.fingerprint("v1")
-    val clean = store.materialize("s1", fp)(compute).collect().map(_.toString).sorted
-    val mp = Paths.get(root, "s1", "MANIFEST.json")
-    val mapper = new ObjectMapper()
-    val old = mapper.readTree(mp.toFile).asInstanceOf[ObjectNode]
-    old.remove("schema")
-    Files.write(mp, mapper.writeValueAsBytes(old))
-    assert(store.committedFingerprint("s1").isEmpty)
-    val after = store.materialize("s1", fp)(compute).collect().map(_.toString).sorted
-    assert(computes == 2, "a manifest without a schema must force a recompute")
-    assert(after.toSeq == clean.toSeq)
-    store.materialize("s1", fp)(compute)
-    assert(computes == 2, "the recommitted manifest carries its schema: later runs resume")
-  }
-
-  test("chaos: stale tmp dir from a killed writer is cleaned and overwritten") {
-    import spark.implicits._
-    val root = tmpDir("graft-chaos")
-    val store = new StageStore(root, spark)
-    val fp = store.fingerprint("v1")
-    // a previous run died mid-write leaving a garbage .tmp-<fp> dir
-    val tmp = Paths.get(root, "s1", s".tmp-$fp")
-    Files.createDirectories(tmp)
-    Files.write(tmp.resolve("part-00000.parquet"), Array[Byte](1, 2, 3))
-    // ...and an OLDER crashed run with a different config left ITS tmp too
-    val staleOther = Paths.get(root, "s1", ".tmp-deadbeefdeadbeef")
-    Files.createDirectories(staleOther)
-    Files.write(staleOther.resolve("part-00000.parquet"), Array[Byte](9, 9))
-    val out = store.materialize("s1", fp)(Seq((7, "x")).toDF("id", "v"))
-      .collect().map(_.toString).toSeq
-    assert(out == Seq("[7,x]"))
-    assert(store.committedFingerprint("s1").contains(fp))
-    // every stale tmp snapshot is gone, whatever fingerprint left it —
-    // orphaned near-full copies must not accumulate on the volume
-    assert(!Files.exists(staleOther))
-    assert(!Files.exists(tmp))
-  }
-
-  test("chaos: compute failure leaves store uncommitted; retry succeeds") {
-    import spark.implicits._
-    val root = tmpDir("graft-chaos")
-    val store = new StageStore(root, spark)
-    val fp = store.fingerprint("v1")
-    // first attempt dies mid-stage (the analog of a fatal task failure)
-    intercept[RuntimeException] {
-      store.materialize("s1", fp) {
-        throw new RuntimeException("injected stage failure")
-      }
-    }
-    assert(store.committedFingerprint("s1").isEmpty,
-      "failed stage must not commit")
-    val out = store.materialize("s1", fp)(Seq((1, "a")).toDF("id", "v"))
-      .collect().map(_.toString).toSeq
-    assert(out == Seq("[1,a]"))
-  }
-
-  test("chaos: truncated manifest is treated as uncommitted") {
-    import spark.implicits._
-    val root = tmpDir("graft-chaos")
-    val store = new StageStore(root, spark)
-    var computes = 0
-    def compute = { computes += 1; Seq(1).toDF("id") }
-    val fp = store.fingerprint("v1")
-    store.materialize("s1", fp)(compute)
-    // corrupt the commit record: cut it off before the fingerprint field
-    val mp = Paths.get(root, "s1", "MANIFEST.json")
-    val text = new String(Files.readAllBytes(mp))
-    Files.write(mp, text.take(text.indexOf("fingerprint") - 2).getBytes)
-    store.materialize("s1", fp)(compute)
-    assert(computes == 2, "corrupt manifest must force a recompute")
-    assert(store.committedFingerprint("s1").contains(fp))
-  }
-
-  test("chaos: mid-pipeline manifest loss -> stage recomputed, output byte-identical") {
-    val docs = DocGen.corpusDF(spark, entities = 10, docsPerEntity = 3)
-      .select("doc_id", "spans")
-    val root = tmpDir("graft-chaos-pipe")
-    val cfg = PipelineConfig(checkpointRoot = Some(root))
-    val full = ResolvePipeline.run(spark, docs, cfg)
-      .clusters.select("doc_id", "cluster_id").collect().map(_.toString).sorted
-    // the crash window hit candidate_pairs: snapshot present, commit lost
-    Files.delete(Paths.get(root, "candidate_pairs", "MANIFEST.json"))
-    val resumed = ResolvePipeline.run(spark, docs, cfg)
-      .clusters.select("doc_id", "cluster_id").collect().map(_.toString).sorted
-    assert(resumed.toSeq == full.toSeq)
-    assert(Files.exists(Paths.get(root, "candidate_pairs", "MANIFEST.json")),
-      "interrupted stage must recommit on resume")
   }
 
   test("stage-scoped fingerprints: weight change resumes blocking, recomputes scoring") {
@@ -373,34 +268,198 @@ class StageStoreSpec extends AnyFunSuite {
       "fixture should produce different clusterings for different overrides")
   }
 
-  test("killed run resumes mid-pipeline with byte-identical output") {
-    val docs = DocGen.corpusDF(spark, entities = 10, docsPerEntity = 3)
-      .select("doc_id", "spans")
-    val root = tmpDir("graft-resume")
-    val cfg = PipelineConfig(checkpointRoot = Some(root))
+  // ---- resume + chaos tier: injected mid-stage faults (the batch analog
+  // of the reference's chaos/ChaosTest.java connection-failure
+  // injection). The invariant under every fault: an uncommitted stage is
+  // recomputed, a committed stage is trusted, and the final output is
+  // byte-identical to an uninterrupted run. Each case runs on `file:`
+  // and, prefixed "copy-rename fs: ", on [[CopyRenameFileSystem]], where
+  // it must also commit without a single rename of its own.
 
-    val full = ResolvePipeline.run(spark, docs, cfg)
-      .clusters.select("doc_id", "cluster_id").collect()
-      .map(_.toString).sorted
+  resumeAndChaosCases(copyRename = false)
+  resumeAndChaosCases(copyRename = true)
 
-    // simulate a kill AFTER pair_scores committed but BEFORE clusters:
-    // delete the clusters stage only, rerun — earlier stages must be
-    // resumed from their snapshots, and the output must be identical
-    def rmr(p: java.nio.file.Path): Unit =
-      if (Files.exists(p))
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
-    rmr(Paths.get(root, "clusters"))
+  private def resumeAndChaosCases(copyRename: Boolean): Unit = {
+    def newRoot(prefix: String): String =
+      if (copyRename) s"${CopyRenameFileSystem.Scheme}://${tmpDir(prefix)}" else tmpDir(prefix)
+    def fsTest(name: String)(body: => Unit): Unit =
+      test((if (copyRename) "copy-rename fs: " else "") + name) {
+        CopyRenameFileSystem.renames.set(0)
+        CopyRenameFileSystem.outsideTemporary.set(0)
+        body
+        if (copyRename) {
+          assert(CopyRenameFileSystem.renames.get > 0, "the writes ran on the copy-rename store")
+          assert(CopyRenameFileSystem.outsideTemporary.get == 0,
+            "the commit protocol must not depend on rename")
+        }
+      }
 
-    val scoresManifestBefore =
-      Files.getLastModifiedTime(Paths.get(root, "pair_scores", "MANIFEST.json"))
-    val resumed = ResolvePipeline.run(spark, docs, cfg)
-      .clusters.select("doc_id", "cluster_id").collect()
-      .map(_.toString).sorted
-    val scoresManifestAfter =
-      Files.getLastModifiedTime(Paths.get(root, "pair_scores", "MANIFEST.json"))
+    fsTest("committed stage with same fingerprint is not recomputed") {
+      import spark.implicits._
+      val store = new StageStore(newRoot("graft-store"), spark)
+      var computes = 0
+      def compute = { computes += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
+      val fp = store.fingerprint("stage-params", "v1")
+      val first = store.materialize("s1", fp)(compute).collect().sortBy(_.getInt(0))
+      val second = store.materialize("s1", fp)(compute).collect().sortBy(_.getInt(0))
+      assert(computes == 1, "second materialize must be a resume, not a recompute")
+      assert(first.map(_.toString).toSeq == second.map(_.toString).toSeq)
+    }
 
-    assert(resumed.toSeq == full.toSeq, "resumed output differs from uninterrupted run")
-    assert(scoresManifestBefore == scoresManifestAfter,
-      "pair_scores was recomputed despite a committed snapshot")
+    fsTest("chaos: kill between data write and manifest commit -> recompute") {
+      import spark.implicits._
+      val root = newRoot("graft-chaos")
+      val store = new StageStore(root, spark)
+      var computes = 0
+      def compute = { computes += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
+      val fp = store.fingerprint("v1")
+      val clean = store.materialize("s1", fp)(compute).collect().map(_.toString).sorted
+      // simulate the crash window: data written, manifest (the commit
+      // point) never created
+      fsOf(root).delete(stageFile(root, "s1", "MANIFEST.json"), false)
+      val after = store.materialize("s1", fp)(compute).collect().map(_.toString).sorted
+      assert(computes == 2, "data-without-manifest must NOT count as committed")
+      assert(after.toSeq == clean.toSeq)
+      assert(store.committedFingerprint("s1").contains(fp), "recommit must complete")
+    }
+
+    fsTest("chaos: manifest whose data dir was removed -> recompute, not a failed read") {
+      import spark.implicits._
+      val root = newRoot("graft-chaos")
+      val store = new StageStore(root, spark)
+      var computes = 0
+      def compute = { computes += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
+      val fp = store.fingerprint("v1")
+      val clean = store.materialize("s1", fp)(compute).collect().map(_.toString).sorted
+      // external cleanup removed the snapshot but left its commit record
+      fsOf(root).delete(stageFile(root, "s1", "data"), true)
+      assert(store.committedFingerprint("s1").isEmpty, "a manifest without data is no commit")
+      val after = store.materialize("s1", fp)(compute).collect().map(_.toString).sorted
+      assert(computes == 2, "a missing data dir must force a recompute")
+      assert(after.toSeq == clean.toSeq)
+      assert(store.committedFingerprint("s1").contains(fp), "recommit must complete")
+    }
+
+    fsTest("chaos: manifest without a schema (older format) is uncommitted -> recompute once") {
+      import spark.implicits._
+      val root = newRoot("graft-chaos")
+      val store = new StageStore(root, spark)
+      var computes = 0
+      def compute = { computes += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
+      val fp = store.fingerprint("v1")
+      val clean = store.materialize("s1", fp)(compute).collect().map(_.toString).sorted
+      val old = readManifest(root, "s1")
+      old.remove("schema")
+      writeManifest(root, "s1", mapper.writeValueAsBytes(old))
+      assert(store.committedFingerprint("s1").isEmpty)
+      val after = store.materialize("s1", fp)(compute).collect().map(_.toString).sorted
+      assert(computes == 2, "a manifest without a schema must force a recompute")
+      assert(after.toSeq == clean.toSeq)
+      store.materialize("s1", fp)(compute)
+      assert(computes == 2, "the recommitted manifest carries its schema: later runs resume")
+    }
+
+    fsTest("chaos: a killed writer's partial data dir is overwritten") {
+      import spark.implicits._
+      val root = newRoot("graft-chaos")
+      val store = new StageStore(root, spark)
+      val fp = store.fingerprint("v1")
+      // a previous run died mid-write: a garbage part file and a task's
+      // leftover output in the data dir, and no manifest
+      val fs = fsOf(root)
+      val garbage = stageFile(root, "s1", "data/part-00000-garbage.parquet")
+      val leftover = stageFile(root, "s1", "data/_temporary/0/part-00001-garbage.parquet")
+      Seq(garbage, leftover).foreach { p =>
+        val out = fs.create(p)
+        try out.write(Array[Byte](1, 2, 3)) finally out.close()
+      }
+      val out = store.materialize("s1", fp)(Seq((7, "x")).toDF("id", "v"))
+        .collect().map(_.toString).toSeq
+      assert(out == Seq("[7,x]"))
+      assert(store.committedFingerprint("s1").contains(fp))
+      // nothing the killed writer left survives the recompute — partial
+      // copies must not accumulate on the volume
+      assert(!fs.exists(garbage))
+      assert(!fs.exists(leftover))
+    }
+
+    fsTest("chaos: compute failure leaves store uncommitted; retry succeeds") {
+      import spark.implicits._
+      val root = newRoot("graft-chaos")
+      val store = new StageStore(root, spark)
+      val fp = store.fingerprint("v1")
+      // first attempt dies mid-stage (the analog of a fatal task failure)
+      intercept[RuntimeException] {
+        store.materialize("s1", fp) {
+          throw new RuntimeException("injected stage failure")
+        }
+      }
+      assert(store.committedFingerprint("s1").isEmpty,
+        "failed stage must not commit")
+      val out = store.materialize("s1", fp)(Seq((1, "a")).toDF("id", "v"))
+        .collect().map(_.toString).toSeq
+      assert(out == Seq("[1,a]"))
+    }
+
+    fsTest("chaos: truncated manifest is treated as uncommitted") {
+      import spark.implicits._
+      val root = newRoot("graft-chaos")
+      val store = new StageStore(root, spark)
+      var computes = 0
+      def compute = { computes += 1; Seq(1).toDF("id") }
+      val fp = store.fingerprint("v1")
+      store.materialize("s1", fp)(compute)
+      // corrupt the commit record: cut it off before the fingerprint field
+      val text = mapper.writeValueAsString(readManifest(root, "s1"))
+      writeManifest(root, "s1", text.take(text.indexOf("fingerprint") - 2).getBytes)
+      store.materialize("s1", fp)(compute)
+      assert(computes == 2, "corrupt manifest must force a recompute")
+      assert(store.committedFingerprint("s1").contains(fp))
+    }
+
+    fsTest("chaos: mid-pipeline manifest loss -> stage recomputed, output byte-identical") {
+      val docs = DocGen.corpusDF(spark, entities = 10, docsPerEntity = 3)
+        .select("doc_id", "spans")
+      val root = newRoot("graft-chaos-pipe")
+      val cfg = PipelineConfig(checkpointRoot = Some(root))
+      val full = ResolvePipeline.run(spark, docs, cfg)
+        .clusters.select("doc_id", "cluster_id").collect().map(_.toString).sorted
+      // the crash window hit candidate_pairs: snapshot present, commit lost
+      val manifest = stageFile(root, "candidate_pairs", "MANIFEST.json")
+      fsOf(root).delete(manifest, false)
+      val resumed = ResolvePipeline.run(spark, docs, cfg)
+        .clusters.select("doc_id", "cluster_id").collect().map(_.toString).sorted
+      assert(resumed.toSeq == full.toSeq)
+      assert(fsOf(root).exists(manifest), "interrupted stage must recommit on resume")
+    }
+
+    fsTest("killed run resumes mid-pipeline with byte-identical output") {
+      val docs = DocGen.corpusDF(spark, entities = 10, docsPerEntity = 3)
+        .select("doc_id", "spans")
+      val root = newRoot("graft-resume")
+      val cfg = PipelineConfig(checkpointRoot = Some(root))
+
+      val full = ResolvePipeline.run(spark, docs, cfg)
+        .clusters.select("doc_id", "cluster_id").collect()
+        .map(_.toString).sorted
+
+      // simulate a kill AFTER pair_scores committed but BEFORE clusters:
+      // delete the clusters stage only, rerun — earlier stages must be
+      // resumed from their snapshots, and the output must be identical
+      val fs = fsOf(root)
+      fs.delete(new Path(root, "clusters"), true)
+      def scoresManifestTime =
+        fs.getFileStatus(stageFile(root, "pair_scores", "MANIFEST.json")).getModificationTime
+
+      val scoresManifestBefore = scoresManifestTime
+      val resumed = ResolvePipeline.run(spark, docs, cfg)
+        .clusters.select("doc_id", "cluster_id").collect()
+        .map(_.toString).sorted
+      val scoresManifestAfter = scoresManifestTime
+
+      assert(resumed.toSeq == full.toSeq, "resumed output differs from uninterrupted run")
+      assert(scoresManifestBefore == scoresManifestAfter,
+        "pair_scores was recomputed despite a committed snapshot")
+    }
   }
 }

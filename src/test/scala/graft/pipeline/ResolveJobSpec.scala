@@ -1,6 +1,8 @@
 package graft.pipeline
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -83,5 +85,28 @@ class ResolveJobSpec extends AnyFunSuite {
     val first = once()
     val second = once() // every stage resumes from the snapshot
     assert(first.sameElements(second))
+  }
+
+  test("checkpointed resume under a file:/// URI root == the plain-path run") {
+    def clusters(ckpt: String): Array[(String, String)] = {
+      val out = tmp("rjob-out3")
+      ResolveJob.run(spark, ResolveJob.parseArgs(Array(
+        "--input", inputDir, "--output", out, "--checkpoint-dir", ckpt)))
+      spark.read.parquet(s"$out/clusters").select("doc_id", "cluster_id")
+        .collect().map(r => (r.getString(0), r.getString(1))).sorted
+    }
+    val plain = clusters(tmp("rjob-ckpt-plain"))
+    val dir = tmp("rjob-ckpt-uri")
+    val first = clusters(s"file://$dir")
+    // the stages committed under the URI's own path
+    def manifestTimes = Files.list(Paths.get(dir)).iterator().asScala
+      .map(_.resolve("MANIFEST.json")).filter(Files.exists(_))
+      .map(p => p.toString -> Files.getLastModifiedTime(p)).toMap
+    val committed = manifestTimes
+    assert(committed.size >= 5, s"stage manifests under $dir: ${committed.keys}")
+    val resumed = clusters(s"file://$dir")
+    assert(manifestTimes == committed, "the rerun resumed every stage")
+    assert(first.sameElements(plain))
+    assert(resumed.sameElements(plain))
   }
 }

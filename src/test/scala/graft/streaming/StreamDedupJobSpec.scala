@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.checkpoint.VersionedState
 import graft.dedup.Dedup
 
 /** The streaming dedup entry: durable append-delta near-dup state,
@@ -47,7 +48,7 @@ class StreamDedupJobSpec extends AnyFunSuite {
 
     // maxFilesPerTrigger=1 must actually split the corpus into multiple
     // batches, or the incremental path never executed
-    val deltas = VersionedState.committedDeltas(spark, state)
+    val deltas = VersionedState.stateView(spark, state).deltaIds
     assert(deltas.size >= 2, s"expected >=2 committed deltas, got $deltas")
 
     val full = Dedup.minhashNearDups(mkDocs(0 until 40), "doc_id", "text",
@@ -78,7 +79,7 @@ class StreamDedupJobSpec extends AnyFunSuite {
     StreamDedupJob.attachBatch(spark, state, mkDocs(30 until 35), batchId = 1L,
       threshold = 0.4)
     assert(statePairs(state) == before)
-    assert(VersionedState.highWater(spark, state) == 1L)
+    assert(VersionedState.stateView(spark, state).highWater == 1L)
   }
 
   test("compaction folds deltas into a base; covered deltas GC'd after one grace cycle") {
@@ -93,10 +94,10 @@ class StreamDedupJobSpec extends AnyFunSuite {
     // already invisible to new listings
     StreamDedupJob.attachBatch(spark, state, mkDocs(20 until 30), batchId = 2L,
       threshold = 0.4, compactEvery = 3)
-    assert(VersionedState.latestBase(spark, state) == 2L)
+    assert(VersionedState.stateView(spark, state).baseId == 2L)
     assert(VersionedState.stateView(spark, state).liveDeltaIds.isEmpty,
       "covered deltas must not be in the live view")
-    assert(VersionedState.committedDeltas(spark, state) == Seq(0L, 1L, 2L),
+    assert(VersionedState.stateView(spark, state).deltaIds == Seq(0L, 1L, 2L),
       "covered deltas get one grace cycle before GC")
     assert(statePairs(state).size > before.size, "batch 2's pairs must be present")
     // the compacted state must keep working as the corpus for the next
@@ -111,8 +112,8 @@ class StreamDedupJobSpec extends AnyFunSuite {
     // below the previous base (d=0,1,2) are deleted; d=3,4 get theirs
     StreamDedupJob.attachBatch(spark, state, mkDocs(40 until 50), batchId = 4L,
       threshold = 0.4, compactEvery = 2)
-    assert(VersionedState.latestBase(spark, state) == 4L)
-    assert(VersionedState.committedDeltas(spark, state) == Seq(3L, 4L),
+    assert(VersionedState.stateView(spark, state).baseId == 4L)
+    assert(VersionedState.stateView(spark, state).deltaIds == Seq(3L, 4L),
       "previous cycle's covered deltas must be GC'd by the next base commit")
     val full50 = Dedup.minhashNearDups(mkDocs(0 until 50), "doc_id", "text",
       threshold = 0.4)
@@ -126,7 +127,7 @@ class StreamDedupJobSpec extends AnyFunSuite {
       threshold = 0.4, compactEvery = 1) // compacts immediately: base=0
     // the covered d=0 survives the commit (grace window) — prove readers
     // never consult it by REPLACING its content with garbage
-    assert(VersionedState.committedDeltas(spark, state) == Seq(0L))
+    assert(VersionedState.stateView(spark, state).deltaIds == Seq(0L))
     val view = statePairs(state)
     val garbage = mkDocs(100 until 105)
     Dedup.minhashState(garbage, "doc_id", "text").keys
@@ -150,7 +151,7 @@ class StreamDedupJobSpec extends AnyFunSuite {
         threshold = 0.4)
     }
     assert(e.getMessage.contains("re-delivers 5 doc_id"))
-    assert(VersionedState.highWater(spark, state) == 0L,
+    assert(VersionedState.stateView(spark, state).highWater == 0L,
       "failed batch must not commit")
     // drop mode: first-write-wins — only the genuinely new ids 10-14 enter
     StreamDedupJob.attachBatch(spark, state, mkDocs(5 until 15), batchId = 1L,
@@ -211,7 +212,7 @@ class StreamDedupJobSpec extends AnyFunSuite {
     // a compaction folds the fallback into a real ids table
     StreamDedupJob.attachBatch(spark, state, mkDocs(10 until 15), batchId = 1L,
       threshold = 0.4, compactEvery = 2)
-    assert(VersionedState.latestBase(spark, state) == 1L)
+    assert(VersionedState.stateView(spark, state).baseId == 1L)
     assert(spark.read.parquet(s"$state/base=1/ids")
       .as[Long].collect().toSet == (0L until 15L).toSet)
   }
@@ -225,7 +226,7 @@ class StreamDedupJobSpec extends AnyFunSuite {
       "input" -> in, "state" -> state, "checkpoint" -> ckpt,
       "threshold" -> "0.4", "max-files-per-trigger" -> "1"))
     q.awaitTermination()
-    val deltas = VersionedState.committedDeltas(spark, state)
+    val deltas = VersionedState.stateView(spark, state).deltaIds
     assert(deltas.size >= 2)
     val clean = statePairs(state)
     // rewind to the kill point: the last delta's marker and its

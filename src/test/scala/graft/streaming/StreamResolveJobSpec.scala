@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.checkpoint.VersionedState
 import graft.functions.Er
 import graft.gen.DocGen
 import graft.norm.Normalizer
@@ -66,7 +67,7 @@ class StreamResolveJobSpec extends AnyFunSuite {
     // maxFilesPerTrigger=1 must actually split the corpus into multiple
     // batches, or the incremental path this test exists to cover never
     // executed
-    val deltas = VersionedState.committedDeltas(spark, state)
+    val deltas = VersionedState.stateView(spark, state).deltaIds
     assert(deltas.size == 2, s"expected 2 committed deltas, got $deltas")
 
     // expected: the SAME increment body applied to the whole corpus in one
@@ -119,7 +120,7 @@ class StreamResolveJobSpec extends AnyFunSuite {
     // cycle but are out of the live view)
     StreamResolveJob.attachBatch(spark, state, docsDF(
       nameDoc("c0-n", "northwind traders")), batchId = 2L, compactEvery = 3)
-    assert(VersionedState.latestBase(spark, state) == 2L)
+    assert(VersionedState.stateView(spark, state).baseId == 2L)
     assert(VersionedState.stateView(spark, state).liveDeltaIds.isEmpty)
     assert(stateClusters(state).toSet == now + (("c0-n", "c0-n")))
   }
@@ -212,10 +213,10 @@ class StreamResolveJobSpec extends AnyFunSuite {
     StreamResolveJob.attachBatch(spark, state, corpus(15, seed = 32L), batchId = 1L)
     // migrated: base=0 carries the snapshot (keys derived from names),
     // the v= dir is swept, and the increment landed as d=1
-    assert(VersionedState.latestBase(spark, state) == 0L)
+    assert(VersionedState.stateView(spark, state).baseId == 0L)
     assert(new java.io.File(state, "base=0/keys").exists())
     assert(!new java.io.File(state, "v=0").exists())
-    assert(VersionedState.committedDeltas(spark, state) == Seq(1L))
+    assert(VersionedState.stateView(spark, state).deltaIds == Seq(1L))
     assert(stateClusters(state).length > legacyCount)
   }
 
@@ -347,7 +348,7 @@ class StreamResolveJobSpec extends AnyFunSuite {
       "input" -> in, "state" -> state, "checkpoint" -> ckpt,
       "max-files-per-trigger" -> "1"))
     q.awaitTermination()
-    val deltas = VersionedState.committedDeltas(spark, state)
+    val deltas = VersionedState.stateView(spark, state).deltaIds
     assert(deltas.size >= 2)
     val clean = stateClusters(state)
     // rewind to the kill point: last batch's marker and its SS commit gone
