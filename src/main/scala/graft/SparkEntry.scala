@@ -1030,7 +1030,7 @@ object SparkEntry {
         .select("doc_id_a", "doc_id_b").distinct()
       IncrementalResolve.attach(s, existing,
         documents(s, dir).where(col("doc_id") >= 400).select("doc_id"),
-        newNew, edgesOf(newOldPairs))
+        newNew, edgesOf(newOldPairs)).assignments
     }),
 
     // --- M11: merge revert with component-local recompute — only

@@ -203,14 +203,19 @@ object BlockingKeys {
     * allocation storm that made this stage GC-bound at high parallelism.
     */
   def minhashKeyTable(df: DataFrame, idCol: String, text: Column,
-                      carry: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
+                      carry: Seq[String] = Nil): DataFrame =
     df.select(col(idCol).as("doc_id") +: text.as("__t") +: carry.map(col): _*)
       .where(col("__t").isNotNull && length(col("__t")) > 0)
       .select(col("doc_id") +:
-        explode(Bridge.column(MinhashBandKeysExpr(Bridge.expression(col("__t")))))
-          .as("block_key") +: carry.map(col): _*)
+        explode(minhashBandKeyArray(col("__t"))).as("block_key") +: carry.map(col): _*)
       .select(col("block_key") +: col("doc_id") +: carry.map(col): _*)
+
+  /** The native kernel's band-key array for a non-null, non-empty text
+    * column — one row's keys of [[minhashKeyTable]].
+    */
+  def minhashBandKeyArray(text: Column): Column = {
+    import org.apache.spark.sql.graftbridge.Bridge
+    Bridge.column(MinhashBandKeysExpr(Bridge.expression(text)))
   }
 
   /** The staged higher-order-function formulation of [[minhashKeyTable]]

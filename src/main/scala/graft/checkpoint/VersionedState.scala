@@ -1,7 +1,8 @@
 package graft.checkpoint
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** The one commit rule for durable state, batch and streaming alike: a
   * unit of state becomes visible by creating its marker LAST, through
@@ -105,9 +106,35 @@ private[graft] object VersionedState {
     * StreamResolveJob.currentClusters).
     */
   def readTableFrom(spark: SparkSession, units: Seq[(Long, String)],
-                    table: String): Option[DataFrame] = {
+                    table: String, schema: Option[StructType] = None): Option[DataFrame] = {
     val dirs = units.map { case (_, d) => s"$d/$table" }
-    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
+    if (dirs.isEmpty) None else Some(reader(spark, schema).parquet(dirs: _*))
+  }
+
+  /** A parquet reader. Given the table's schema (a caller that is about
+    * to write the same table knows it), the read runs no schema-inference
+    * job; columns a file lacks read as null.
+    */
+  def reader(spark: SparkSession, schema: Option[StructType]): DataFrameReader =
+    schema.fold(spark.read)(s =>
+      spark.read.schema(StructType(s.fields.map(_.copy(nullable = true)))))
+
+  /** Write a unit's tables (name -> frame) under `dir`, side by side:
+    * the writes are independent Spark jobs, each submitted from its own
+    * thread, which inherits the caller's job group and local properties.
+    * Returns once every write has finished, rethrowing the first failure;
+    * the caller commits the unit's marker only after that.
+    */
+  def writeUnit(dir: String, tables: Seq[(String, DataFrame)]): Unit = {
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val writers = tables.map { case (t, df) =>
+      new Thread(() =>
+        try df.write.mode(SaveMode.Overwrite).parquet(s"$dir/$t")
+        catch { case e: Throwable => failures.add(e) }, s"state-write-$t")
+    }
+    writers.foreach(_.start())
+    writers.foreach(_.join())
+    Option(failures.peek()).foreach(e => throw e)
   }
 
   /** Commit delta `id` (marker only — deltas are the corpus; nothing is

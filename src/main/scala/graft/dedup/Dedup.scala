@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.blocking.BlockingKeys
 
@@ -23,11 +24,9 @@ object Dedup {
   /** |A ∩ B| of two sorted distinct long-array columns via the native
     * merge-scan kernel (see [[SortedLongIntersectCountExpr]]).
     */
-  private def sortedIntersectCount(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge
+  private def sortedIntersectCount(a: Column, b: Column): Column =
     Bridge.column(SortedLongIntersectCountExpr(
       Bridge.expression(a), Bridge.expression(b)))
-  }
 
   /** Exact dedup by content hash. Returns (doc_id, content_hash, keeper,
     * is_dup). One shuffle on the hash; at 100 TB this is the cheapest
@@ -217,15 +216,30 @@ object Dedup {
     * the verify sets).
     */
   def minhashState(df: DataFrame, idCol: String, textCol: String,
-                   maxShingles: Int = DefaultMaxShingles): NearDupState = {
-    val base = df
-      .where(col(textCol).isNotNull && length(col(textCol)) > 0)
-      .select(col(idCol).as("doc_id"), col(textCol).as("text"))
-    NearDupState(
-      BlockingKeys.minhashKeyTable(base, "doc_id", col("text")),
-      shingleSetCols(base, col("text"), maxShingles)
-        .select("doc_id", "__s", "__n"))
+                   maxShingles: Int = DefaultMaxShingles): NearDupState =
+    stateOf(minhashDocs(df, idCol, textCol, maxShingles))
+
+  /** One row per DELIVERED doc with everything the increment needs from
+    * it: (doc_id, __k band keys, __s, __n). A doc whose text is null or
+    * empty carries no band key and a null set: it is delivered, but can
+    * never pair. Materialize it once and split it with [[stateOf]].
+    */
+  def minhashDocs(df: DataFrame, idCol: String, textCol: String,
+                  maxShingles: Int = DefaultMaxShingles): DataFrame = {
+    val ok = col("text").isNotNull && length(col("text")) > 0
+    shingleSetCols(df.select(col(idCol).as("doc_id"), col(textCol).as("text")),
+      col("text"), maxShingles)
+      .select(col("doc_id"),
+        when(ok, BlockingKeys.minhashBandKeyArray(col("text")))
+          .otherwise(array().cast("array<string>")).as("__k"),
+        when(ok, col("__s")).as("__s"), when(ok, col("__n")).as("__n"))
   }
+
+  /** The [[NearDupState]] of a [[minhashDocs]] table. */
+  def stateOf(docs: DataFrame): NearDupState =
+    NearDupState(
+      BlockingKeys.explodeKeys(docs, "doc_id", col("__k")),
+      docs.where(col("__s").isNotNull).select("doc_id", "__s", "__n"))
 
   /** Result of one dedup increment: the near-dup pairs TOUCHING the new
     * batch (both orientations normalized to doc_id_a < doc_id_b, like the
@@ -265,41 +279,45 @@ object Dedup {
                                corpus: NearDupState, threshold: Double = 0.7,
                                maxBlockSize: Int = 10000): NearDupIncrement = {
     // the batch state feeds both joins and the returned append set —
-    // materialize once (batches are small by definition; the corpus
+    // materialize it once (batches are small by definition; the corpus
     // side stays lazy/persisted)
-    val raw = minhashState(newDocs, idCol, textCol)
-    val st = NearDupState(raw.keys.localCheckpoint(true),
-      raw.shingles.localCheckpoint(true))
-    incrementFromState(st, corpus, threshold, maxBlockSize)
+    incrementFromState(stateOf(Bridge.checkpoint(minhashDocs(newDocs, idCol, textCol))),
+      corpus, threshold, maxBlockSize)
   }
 
   /** The increment over an ALREADY-MATERIALIZED batch state — for
-    * callers that manage the batch tables' storage lifecycle themselves
-    * (the streaming job persists/unpersists per micro-batch; the eager
-    * localCheckpoints of the docs overload would accumulate pinned
-    * blocks for the life of the stream). The batch frames are consumed
-    * 2–3 times; pass them persisted.
+    * callers that manage the batch tables' storage themselves (the
+    * streaming job materializes one batch table per micro-batch and
+    * splits it into the state's key and set tables). The batch frames
+    * are consumed 2–3 times; pass them materialized.
+    *
+    * Corpus reads are scoped to the batch: the corpus keys are
+    * semi-joined on the batch's band keys before the cap counts them
+    * (the cap counts per block key, so the scoped count is exact), and
+    * only the candidate pairs' corpus ids read their shingle sets. The
+    * candidate pairs and the sets they need are barriers of known size
+    * ([[Bridge.checkpoint]]), so each lookup broadcasts the small side.
     */
   def incrementFromState(batch: NearDupState, corpus: NearDupState,
                          threshold: Double, maxBlockSize: Int): NearDupIncrement = {
-    val newNew = graft.pairs.CandidateGenerator
-      .candidatePairs(batch.keys, maxBlockSize)
-      .select("doc_id_a", "doc_id_b")
-    val okOld = graft.pairs.CandidateGenerator.underCapBlocks(corpus.keys, maxBlockSize)
-    val newOld = batch.keys.select(col("block_key"), col("doc_id").as("__new_id"))
-      .join(corpus.keys.join(okOld, Seq("block_key"))
-        .select(col("block_key"), col("doc_id").as("__old_id")), Seq("block_key"))
-      .where(col("__new_id") =!= col("__old_id"))
-      .select(least(col("__new_id"), col("__old_id")).as("doc_id_a"),
-        greatest(col("__new_id"), col("__old_id")).as("doc_id_b"))
-      .distinct()
+    // new–new ∪ new–old candidates in one pass over the corpus blocks
+    // the batch shares, oriented doc_id_a < doc_id_b like the batch
+    // operator. A barrier: the verify reads the pairs, and the set lookup
+    // broadcasts their ids into its scan of the corpus sets;
+    // O(candidates) rows.
+    val pairs = Bridge.checkpoint(graft.pairs.CandidateGenerator
+      .incrementPairs(batch.keys, corpus.keys, maxBlockSize)
+      .select(least(col("doc_id_a"), col("doc_id_b")).as("doc_id_a"),
+        greatest(col("doc_id_a"), col("doc_id_b")).as("doc_id_b")))
+    val ids = pairs.select(col("doc_id_a").as("doc_id"))
+      .unionByName(pairs.select(col("doc_id_b").as("doc_id")))
     // allowMissingColumns: a corpus persisted before the shingle cap has
     // no __n column (all its sets are full); the null fills coalesce to
-    // size(__s) inside verifyFromSets
-    val sets = corpus.shingles
-      .unionByName(batch.shingles, allowMissingColumns = true)
-    NearDupIncrement(
-      verifyFromSets(newNew.unionByName(newOld), sets, threshold), batch)
+    // size(__s) inside verifyFromSets. A barrier: the verify joins the
+    // sets on both pair sides; O(candidate docs) rows.
+    val sets = Bridge.checkpoint(corpus.shingles.join(ids, Seq("doc_id"), "left_semi")
+      .unionByName(batch.shingles, allowMissingColumns = true))
+    NearDupIncrement(verifyFromSets(pairs, sets, threshold), batch)
   }
 
   /** SimHash near-dups: 60-bit fingerprint per doc (two independent
@@ -396,10 +414,20 @@ object Dedup {
     * operator (zero-token docs fingerprint to 0 and would all collide).
     */
   def simhashState(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.where(col(textCol).isNotNull &&
-        col(textCol).rlike("[^ \\t\\n\\x0B\\f\\r]"))
-      .select(col(idCol).as("doc_id"),
-        BlockingKeys.simhash60(col(textCol)).as("simhash"))
+    simhashKeys(simhashDocs(df, idCol, textCol))
+
+  /** One row per DELIVERED doc: (doc_id, simhash), the fingerprint null
+    * for tokenless text (such a doc is delivered but never keyed).
+    * Materialize it once and key it with [[simhashKeys]].
+    */
+  def simhashDocs(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.select(col(idCol).as("doc_id"),
+      when(col(textCol).isNotNull && col(textCol).rlike("[^ \\t\\n\\x0B\\f\\r]"),
+        BlockingKeys.simhash60(col(textCol))).as("simhash"))
+
+  /** The (block_key, doc_id, simhash) state of a [[simhashDocs]] table. */
+  def simhashKeys(docs: DataFrame): DataFrame =
+    docs.where(col("simhash").isNotNull)
       .select(
         explode(BlockingKeys.simhashBandKeys(col("simhash"))).as("block_key"),
         col("doc_id"), col("simhash"))
@@ -435,10 +463,12 @@ object Dedup {
   def incrementFromSimhashKeys(batchKeys: DataFrame, corpusKeys: DataFrame,
                                maxHamming: Int, maxBlockSize: Int): SimhashIncrement = {
     val newNew = fusedHammingPairs(batchKeys, maxHamming, maxBlockSize)
-    val okOld = graft.pairs.CandidateGenerator.underCapBlocks(corpusKeys, maxBlockSize)
+    // scoped to the batch's blocks before the (per-block, so exact) cap
+    val touched = corpusKeys.join(batchKeys.select("block_key"), Seq("block_key"), "left_semi")
+    val okOld = graft.pairs.CandidateGenerator.underCapBlocks(touched, maxBlockSize)
     val newOld = batchKeys
       .select(col("block_key"), col("doc_id").as("__nid"), col("simhash").as("__nsh"))
-      .join(corpusKeys.join(okOld, Seq("block_key"))
+      .join(touched.join(okOld, Seq("block_key"))
         .select(col("block_key"), col("doc_id").as("__oid"), col("simhash").as("__osh")),
         Seq("block_key"))
       .where(col("__nid") =!= col("__oid"))

@@ -49,6 +49,35 @@ object CandidateGenerator {
     keys.groupBy("block_key").agg(count(lit(1)).as("__n"))
       .where(col("__n") <= maxBlockSize).select("block_key")
 
+  /** The candidate pairs of a batch against itself and a corpus, in one
+    * pass: distinct (doc_id_a, doc_id_b, __old), where doc_id_a is a batch
+    * doc and doc_id_b either a batch doc with doc_id_a < doc_id_b
+    * (`__old` false) or a corpus doc (`__old` true); a doc never pairs
+    * with itself. Both key tables are (block_key, doc_id).
+    *
+    * Only the corpus blocks the batch shares are read (a semi-join on
+    * the batch's block keys). The cap is per side, as in the incremental
+    * operators: a block pairs its batch rows while it has at most
+    * `maxBlockSize` of them, and its corpus rows while it has at most
+    * `maxBlockSize` of those. The cap counts whole blocks, so scoping the
+    * corpus to the touched blocks leaves every count exact.
+    */
+  def incrementPairs(batchKeys: DataFrame, corpusKeys: DataFrame,
+                     maxBlockSize: Int): DataFrame = {
+    val keys = batchKeys.select(col("block_key"), col("doc_id"), lit(false).as("__old"))
+      .unionByName(corpusKeys.join(batchKeys.select("block_key"), Seq("block_key"), "left_semi")
+        .select(col("block_key"), col("doc_id"), lit(true).as("__old")))
+    val underCap = keys.groupBy("block_key", "__old").agg(count(lit(1)).as("__n"))
+      .where(col("__n") <= maxBlockSize).select("block_key", "__old")
+    batchKeys.select(col("block_key"), col("doc_id").as("doc_id_a"))
+      .join(keys.join(underCap, Seq("block_key", "__old"))
+        .select(col("block_key"), col("doc_id").as("doc_id_b"), col("__old")), Seq("block_key"))
+      .where(col("doc_id_a") < col("doc_id_b") ||
+        (col("__old") && col("doc_id_a") =!= col("doc_id_b")))
+      .select("doc_id_a", "doc_id_b", "__old")
+      .distinct()
+  }
+
   /** Distinct candidate pairs (doc_id_a < doc_id_b) from a (block_key,
     * doc_id) table.
     *

@@ -93,7 +93,8 @@ object ResolveJob {
 
   /** Run the job against an existing session (the testable core; main
     * wraps it with getOrCreate/stop). Returns the PipelineResult whose
-    * outputs were written.
+    * outputs were written, its stage caches already released (reading
+    * its frames again recomputes them).
     */
   def run(spark: SparkSession, opts: Map[String, String]): PipelineResult = {
     val fmt = opts.getOrElse("format", "parquet")
@@ -125,6 +126,7 @@ object ResolveJob {
         "salted_keys", "salted_key_rows"),
         "block_stats")
     }
+    result.release()
     result
   }
 
@@ -132,8 +134,8 @@ object ResolveJob {
     val opts = parseArgs(args)
     val spark = SparkSession.builder().appName("graft-resolve").getOrCreate()
     try {
-      val result = run(spark, opts)
-      val n = result.clusters.count()
+      run(spark, opts)
+      val n = spark.read.parquet(s"${opts("output")}/clusters").count()
       // stderr: Spark logs own stdout on many launchers
       System.err.println(s"[resolve-job] wrote $n cluster rows to ${opts("output")}/clusters")
     } finally spark.stop()

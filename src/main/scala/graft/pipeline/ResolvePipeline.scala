@@ -122,7 +122,20 @@ final case class PipelineResult(
       * jobs should invoke and log this; it is a thunk so pipelines that
       * don't consume it (benchmarks, tests) don't pay the pass.
       */
-    candidateStats: () => CandidateGenerator.CandidateStats)
+    candidateStats: () => CandidateGenerator.CandidateStats,
+    /** The stage caches this run holds (runs without a store; see
+      * [[release]]).
+      */
+    private[pipeline] val cached: Seq[DataFrame] = Nil) {
+
+  /** Drop the stage caches this run holds. Without a store every stage
+    * is a cached frame that nothing else unpersists, so a long-lived
+    * session would pin one block set per run. Call it once the outputs
+    * have been written or collected; a frame of this result read after
+    * it recomputes from its plan.
+    */
+  def release(): Unit = cached.foreach(_.unpersist(false))
+}
 
 object ResolvePipeline {
 
@@ -244,8 +257,10 @@ object ResolvePipeline {
     // deterministic plan instead of failing the job. `snapshot` leaves
     // the cache to be built by the stage's first consumer; `stage` builds
     // it now and returns the row count (the manifest's, with a store).
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def snapshot(name: String, stageFp: String)(compute: => DataFrame): DataFrame =
-      store.fold(compute.persist())(_.materialize(name, stageFp)(compute))
+      store.fold { val df = compute.persist(); cached += df; df }(
+        _.materialize(name, stageFp)(compute))
     def stage(name: String, stageFp: String)(compute: => DataFrame): (DataFrame, Long) = {
       val df = snapshot(name, stageFp)(compute)
       (df, store.flatMap(_.committedRows(name)).getOrElse(df.count()))
@@ -685,7 +700,8 @@ object ResolvePipeline {
           .withColumn("reason", lit("REVIEW_APPROVED")))
       case None => scoredEdges
     }
-    PipelineResult(clusters, assignments, pairScores, mergeEdges, rejects, metrics, candStats)
+    PipelineResult(clusters, assignments, pairScores, mergeEdges, rejects, metrics, candStats,
+      cached.toSeq)
     } finally {
       prevConfs.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)

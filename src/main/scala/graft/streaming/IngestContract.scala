@@ -15,20 +15,17 @@ import org.apache.spark.sql.functions._
   */
 private[streaming] object IngestContract {
 
-  /** Detect duplicated ids: one batch-sized groupBy for intra-batch
-    * repeats, plus one semi-join of the corpus id column against the
-    * batch ids — broadcast when the batch is small (the corpus side is
-    * then scanned once, map-side, no shuffle; same order of work as the
-    * jobs' increment joins), shuffle join otherwise.
-    *
-    * The broadcast is SIZE-GATED, not mandatory: under the default
-    * availableNow trigger the whole backlog arrives as ONE batch, so an
-    * initial bulk load's "batch" is corpus-sized — an unconditional
-    * broadcast hint would ship a corpus-sized hash relation into every
-    * task (driver/executor OOM, and Spark hard-caps broadcasts at 8 GB).
-    * The id count is measured first (one batch-sized count job); above
-    * `broadcastMaxIds` no hint is given and the optimizer plans the
-    * sort-merge join a bulk load actually wants.
+  /** Detect duplicated ids with ONE action: the corpus id rows that
+    * carry a batch id (a semi-join) are appended to the batch ids, and an
+    * id is a duplicate iff it then occurs more than once — repeated
+    * within the batch, or already in the corpus. One batch-sized groupBy
+    * covers both cases. The caller passes its MATERIALIZED batch, so
+    * the planner knows its exact size: a small batch is broadcast (the
+    * corpus side is then scanned once, map-side, no shuffle; same order
+    * of work as the jobs' increment joins), and a bulk load — under the
+    * default availableNow trigger the whole backlog arrives as ONE batch —
+    * gets the sort-merge join it needs instead of a corpus-sized hash
+    * relation shipped into every task.
     *
     * `batchIds` must be ONE ROW PER INGESTED DOC (the raw batch ids,
     * not an exploded key table). Returns the ids to EXCLUDE from the
@@ -41,24 +38,15 @@ private[streaming] object IngestContract {
     */
   def duplicateIdGuard(batchIds: DataFrame, corpusIds: Option[DataFrame],
                        mode: String, batchId: Long,
-                       job: String,
-                       broadcastMaxIds: Long = 4000000L): Option[DataFrame] = {
+                       job: String): Option[DataFrame] = {
     require(Set("fail", "drop", "allow")(mode),
       s"on-duplicate mode must be fail, drop or allow, got $mode")
     if (mode == "allow") return None
-    val intra = batchIds.groupBy("doc_id").agg(count(lit(1)).as("__n"))
+    val ids = batchIds.select("doc_id")
+    val occurrences = corpusIds.fold(ids)(c =>
+      ids.unionByName(c.select("doc_id").join(ids, Seq("doc_id"), "left_semi")))
+    val dupIds = occurrences.groupBy("doc_id").agg(count(lit(1)).as("__n"))
       .where(col("__n") > 1).select("doc_id")
-    val dupIds = corpusIds match {
-      case None => intra
-      case Some(c) =>
-        val distinctBatch = batchIds.select("doc_id").distinct()
-        val probe =
-          if (distinctBatch.count() <= broadcastMaxIds) broadcast(distinctBatch)
-          else distinctBatch
-        c.select("doc_id")
-          .join(probe, Seq("doc_id"), "left_semi")
-          .unionByName(intra).distinct()
-    }
     val n = dupIds.count()
     if (n == 0) None
     else if (mode == "fail")

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.checkpoint.VersionedState
 import graft.dedup.Dedup
@@ -13,8 +15,13 @@ import graft.util.Args
   * runs [[Dedup.incrementFromState]] — the increment proven exact vs a
   * full-batch recompute by q70 and DedupIncrementSpec — against durable
   * append-delta state, so a crawl batch pays O(batch) WRITE I/O (its own
-  * delta) plus one key join against the persisted corpus key table; the
-  * corpus TEXT is read once, on the batch that ingested it, never again.
+  * delta) plus work that follows its candidates: the batch side (ids,
+  * band keys, shingle sets) is materialized once, the persisted corpus
+  * key table is semi-joined on the batch's band keys before the cap
+  * count, and only the candidate pairs' corpus ids read their shingle
+  * sets. The corpus TEXT is read once, on the batch that ingested it,
+  * never again; per batch, the id ledger and the key table are scanned
+  * column-pruned, with the batch side broadcast into the scan.
   *
   * {{{
   * spark-submit --class graft.streaming.StreamDedupJob graft.jar \
@@ -51,10 +58,10 @@ import graft.util.Args
   * Ingest contract (per [[Dedup.minhashNearDupsIncrement]]): doc ids
   * are globally unique — a duplicated id would fan the verify join
   * through two shingle rows and silently corrupt the maintained pair
-  * set. `--on-duplicate` ENFORCES it per batch ([[IngestContract]]: a
-  * batch-sized groupBy for ids repeated WITHIN the batch, plus one
-  * semi-join against the corpus key table — same order of work as the
-  * increment join itself): `fail` (default) aborts the batch, `drop`
+  * set. `--on-duplicate` ENFORCES it per batch ([[IngestContract]], one
+  * action: a batch-sized groupBy for ids repeated WITHIN the batch, plus
+  * one semi-join of the corpus id ledger against the batch ids — same
+  * order of work as the increment join itself): `fail` (default) aborts the batch, `drop`
   * keeps the FIRST ingested version (corpus re-deliveries skipped;
   * within-batch repeats excluded entirely; counts logged), `allow`
   * skips the check for inputs with an upstream uniqueness guarantee.
@@ -129,8 +136,8 @@ object StreamDedupJob {
     }
   }
 
-  /** Every id ever DELIVERED to this state (one row per id per ingesting
-    * batch) — the duplicate-id guard's corpus side. Unlike the key
+  /** Every id ever DELIVERED to this state (one row per delivered doc)
+    * — the duplicate-id guard's corpus side. Unlike the key
     * table, it covers docs whose text yields no band key (null/empty):
     * the uniqueness contract is on the ingest, not on what survives
     * keying. Units written before the ids ledger existed fall back to
@@ -139,14 +146,15 @@ object StreamDedupJob {
     * compaction.
     */
   private def corpusIngestedIds(spark: SparkSession, stateRoot: String,
-                                units: Seq[(Long, String)]): Option[DataFrame] = {
+                                units: Seq[(Long, String)],
+                                schemas: Map[String, StructType]): Option[DataFrame] = {
     if (units.isEmpty) return None
     val fs = VersionedState.fsOf(spark, stateRoot)
     val (withIds, legacy) = units.partition { case (_, d) =>
       fs.exists(new org.apache.hadoop.fs.Path(s"$d/ids"))
     }
-    val parts = VersionedState.readTableFrom(spark, withIds, "ids").toSeq ++
-      VersionedState.readTableFrom(spark, legacy, "keys")
+    val parts = VersionedState.readTableFrom(spark, withIds, "ids", schemas.get("ids")).toSeq ++
+      VersionedState.readTableFrom(spark, legacy, "keys", schemas.get("keys"))
         .map(_.select("doc_id").distinct())
     parts.reduceOption(_.unionByName(_))
   }
@@ -170,63 +178,66 @@ object StreamDedupJob {
       return // replayed batch — state already has it
     val units = view.units(stateRoot)
     algoGuard(spark, stateRoot, units, algo)
-    def readT(t: String) = VersionedState.readTableFrom(spark, units, t)
 
-    // the guard checks EVERY ingested id (the raw batch, one row per
-    // doc — the key table has many rows per doc and would miscount
-    // intra-batch repeats), including null-text docs that never get a
-    // band key: the uniqueness contract is on the ingest, not on what
-    // survives keying. Its corpus side is the persisted ingested-ids
-    // table (below) — checking the KEY table alone would let a
-    // cross-batch re-delivery of a keyless doc through undetected.
-    // Dropped ids are logged, not stored as rejects — unlike the
-    // resolve job there is no rejects table here; the dedup state
-    // carries content state plus this minimal id ledger.
-    val drop = IngestContract
-      .duplicateIdGuard(batch.select(col(idCol).as("doc_id")),
-        corpusIngestedIds(spark, stateRoot, units), onDuplicate, batchId,
-        "stream-dedup")
-    def minus(df: DataFrame) =
-      drop.map(d => df.join(d, Seq("doc_id"), "left_anti")).getOrElse(df)
+    // The batch side, materialized ONCE: one row per delivered doc with
+    // its band keys and shingle set (minhash) or fingerprint (simhash).
+    // The guard, the increment's scoping joins and the delta writes all
+    // read it, and its size is exact ([[Bridge.checkpoint]]), so the
+    // planner broadcasts it when it is small.
+    val docs = Bridge.checkpoint(
+      if (algo == "simhash") Dedup.simhashDocs(batch, idCol, textCol)
+      else Dedup.minhashDocs(batch, idCol, textCol))
+    // the content tables this batch writes, split from the one
+    // materialized batch side (lazy until the writes)
+    val content =
+      if (algo == "simhash") Seq("keys" -> Dedup.simhashKeys(docs))
+      else {
+        val st = Dedup.stateOf(docs)
+        Seq("keys" -> st.keys, "shingles" -> st.shingles)
+      }
     // the delta's id ledger records every id the batch DELIVERED —
-    // including ids the guard excluded (within-batch repeats have no
-    // "first" copy and enter no content state, but a LATER re-delivery
-    // of such an id must still be flagged, matching the resolve job's
-    // DUPLICATE_ID rejects semantics)
-    val deliveredIds = batch.select(col(idCol).as("doc_id")).distinct()
-
-    // persist (not localCheckpoint): the batch tables are read 2-4 times
-    // within this micro-batch and must release their storage at the end
-    // — a long-running stream would otherwise accumulate pinned blocks
-    val (tables, pairs) =
-      if (algo == "simhash") {
-        val corpusKeys = readT("keys")
-        val keys = minus(Dedup.simhashState(batch, idCol, textCol)).persist()
-        val inc = Dedup.incrementFromSimhashKeys(keys,
-          corpusKeys.getOrElse(keys.limit(0)), maxHamming, maxBlockSize)
-        (Seq("keys" -> keys, "ids" -> deliveredIds), inc.pairs)
-      } else {
-        val raw = Dedup.minhashState(batch, idCol, textCol)
-        val corpusKeys = readT("keys")
-        val corpus = Dedup.NearDupState(
-          corpusKeys.getOrElse(raw.keys.limit(0)),
-          readT("shingles").getOrElse(raw.shingles.limit(0)))
-        val st = Dedup.NearDupState(
-          minus(raw.keys).persist(), minus(raw.shingles).persist())
-        val inc = Dedup.incrementFromState(st, corpus, threshold, maxBlockSize)
-        (Seq("keys" -> st.keys, "shingles" -> st.shingles,
-          "ids" -> deliveredIds), inc.pairs)
+    // including ids the guard excludes below (within-batch repeats have
+    // no "first" copy and enter no content state, but a LATER
+    // re-delivery of such an id must still be flagged, matching the
+    // resolve job's DUPLICATE_ID rejects semantics)
+    val deliveredIds = docs.select("doc_id")
+    // the state tables hold what this batch writes: reading them with
+    // its schemas runs no schema-inference job per table
+    val schemas = (content :+ ("ids" -> deliveredIds))
+      .map { case (t, df) => t -> df.schema }.toMap
+    def readT(t: String) = VersionedState.readTableFrom(spark, units, t, schemas.get(t))
+    // the guard checks EVERY ingested id (one row per doc — the key
+    // table has many rows per doc and would miscount intra-batch
+    // repeats), including null-text docs that never get a band key:
+    // the uniqueness contract is on the ingest, not on what survives
+    // keying. Its corpus side is the persisted ingested-ids table
+    // (below) — checking the KEY table alone would let a cross-batch
+    // re-delivery of a keyless doc through undetected. Dropped ids are
+    // logged, not stored as rejects — unlike the resolve job there is
+    // no rejects table here; the dedup state carries content state plus
+    // this minimal id ledger.
+    val drop = IngestContract.duplicateIdGuard(deliveredIds,
+      corpusIngestedIds(spark, stateRoot, units, schemas), onDuplicate, batchId,
+      "stream-dedup")
+    val tables = content.map { case (t, df) =>
+      t -> drop.fold(df)(d => df.join(d, Seq("doc_id"), "left_anti"))
+    } :+ ("ids" -> deliveredIds)
+    val keys = tables.toMap.apply("keys")
+    val pairs =
+      if (algo == "simhash")
+        Dedup.incrementFromSimhashKeys(keys, readT("keys").getOrElse(keys.limit(0)),
+          maxHamming, maxBlockSize).pairs
+      else {
+        val shingles = tables.toMap.apply("shingles")
+        Dedup.incrementFromState(Dedup.NearDupState(keys, shingles),
+          Dedup.NearDupState(readT("keys").getOrElse(keys.limit(0)),
+            readT("shingles").getOrElse(shingles.limit(0))),
+          threshold, maxBlockSize).pairs
       }
-    try {
-      val out = s"$stateRoot/d=$batchId"
-      tables.foreach { case (name, df) =>
-        df.write.mode(SaveMode.Overwrite).parquet(s"$out/$name")
-      }
-      pairs.write.mode(SaveMode.Overwrite).parquet(s"$out/pairs")
-      VersionedState.commitDelta(spark, stateRoot, batchId)
-      maybeCompact(spark, stateRoot, view, batchId,
-        tables.map(_._1) :+ "pairs", compactEvery)
-    } finally tables.foreach(_._2.unpersist(false))
+    VersionedState.writeUnit(s"$stateRoot/d=$batchId", tables :+ ("pairs" -> pairs))
+    VersionedState.commitDelta(spark, stateRoot, batchId)
+    maybeCompact(spark, stateRoot, view, batchId,
+      schemas + ("pairs" -> pairs.schema), compactEvery)
   }
 
   /** Fold the committed view into `base=<upto>` when the live delta
@@ -240,19 +251,18 @@ object StreamDedupJob {
     */
   private def maybeCompact(spark: SparkSession, stateRoot: String,
                            preView: VersionedState.StateView, upto: Long,
-                           tables: Seq[String], compactEvery: Int): Unit = {
+                           schemas: Map[String, StructType], compactEvery: Int): Unit = {
     if (compactEvery <= 0) return
     if (preView.liveDeltaIds.size + 1 < compactEvery) return
     val units = preView.units(stateRoot) :+ (upto -> s"$stateRoot/d=$upto")
-    tables.foreach { t =>
+    VersionedState.writeUnit(s"$stateRoot/base=$upto", schemas.keys.toSeq.map { t =>
       // the ids ledger needs the legacy-unit fallback (pre-ids units
       // lack the table); compacting through it is what CLOSES the
       // legacy keys-only gap for all future batches
-      val df =
-        if (t == "ids") corpusIngestedIds(spark, stateRoot, units).get
-        else VersionedState.readTableFrom(spark, units, t).get
-      df.write.mode(SaveMode.Overwrite).parquet(s"$stateRoot/base=$upto/$t")
-    }
+      t -> (
+        if (t == "ids") corpusIngestedIds(spark, stateRoot, units, schemas).get
+        else VersionedState.readTableFrom(spark, units, t, schemas.get(t)).get)
+    })
     VersionedState.commitBase(spark, stateRoot, upto)
   }
 

@@ -1,9 +1,11 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.blocking.BlockingKeys
 import graft.checkpoint.VersionedState
@@ -15,16 +17,20 @@ import graft.util.Args
 
 /** Production streaming entry: maintain an entity clustering over an
   * UNBOUNDED arriving span-doc table. Each micro-batch runs the
-  * contracted-graph increment ([[IncrementalResolve.resolveNamesWithDelta]]
+  * contracted-graph increment ([[IncrementalResolve.resolveNames]]
   * — the body proven hash-exact vs full recompute by q65) against
-  * durable state. Per-batch COMPUTE is O(increment) — the state's
-  * exploded blocking-key table is persisted and read back (the state
-  * names are never re-keyed), so the batch pays |new keys| ⋈ |state
-  * keys| plus CC over one vertex per TOUCHED cluster. Per-batch state
-  * WRITE I/O is O(increment) — the merge-on-read delta layout below;
-  * the READ side still scans the corpus-sized tables (the increment
-  * join and the merge-on-read reconstruction below are each one pass
-  * over them), as any layout's must.
+  * durable state. Per-batch work follows the increment, not the corpus:
+  * the batch side (ids, names, rejects, keys) is materialized once and
+  * every later step reads it; the state's persisted key table is
+  * semi-joined on the batch's block keys before the cap count, names are
+  * read only for the old ids of candidate pairs, the merge-on-read labels
+  * are built only for the docs the increment touches, and CC runs over
+  * one vertex per TOUCHED cluster. Per-batch state WRITE I/O is
+  * O(increment) — the merge-on-read delta layout below. What still scans
+  * corpus-sized tables per batch is column-pruned and map-side: the
+  * duplicate-id guard's id columns, and the key/name/cluster scans whose
+  * semi-joins keep only the touched rows. Compacting batches also fold
+  * the whole view, once every `compactEvery` batches.
   *
   * {{{
   * spark-submit --class graft.streaming.StreamResolveJob graft.jar \
@@ -39,9 +45,9 @@ import graft.util.Args
   * cluster the increment relabeled (merged clusters take the global-min
   * label, so only the non-surviving side's members change). The current
   * assignment table is reconstructed merge-on-read: union the live
-  * units, latest writer wins per doc_id ([[currentClusters]] — one
-  * groupBy over the corpus-sized union, the read-side cost the
-  * O(increment) writes trade for) — exactly the read path of a
+  * units, latest writer wins per doc_id ([[currentClusters]]; the
+  * increment applies the same rule to the touched docs only, see
+  * [[IncrementalResolve.Existing]]) — exactly the read path of a
   * merge-on-read table format (Iceberg/Delta position-upsert), built on
   * plain parquet + commit markers. `--compact-every K` folds the view
   * into a `base=` snapshot (amortized O(corpus/K) write per batch),
@@ -61,8 +67,8 @@ import graft.util.Args
   * through the replay check, reads and compaction decision.
   *
   * The globally-unique-doc_id ingest contract is ENFORCED per batch
-  * (`--on-duplicate fail|drop|allow`, one broadcast semi-join against
-  * the corpus names — a re-delivered id would write two same-recency
+  * (`--on-duplicate fail|drop|allow`, one semi-join of the corpus ids
+  * against the batch's — a re-delivered id would write two same-recency
   * assignment rows and make the merge-on-read view nondeterministic;
   * `drop` is first-write-wins). Rejected docs (invalid name /
   * normalizes to nothing — the batch pipeline's N8 gate) land in each
@@ -110,28 +116,19 @@ object StreamResolveJob {
     BlockingKeys.explodeKeys(names, "doc_id",
       BlockingKeys.defaultKeys(col("normalized")))
 
-  /** The merge-on-read reconstruction over the given units: union their
-    * `clusters` tables, keep each doc's row from the HIGHEST unit id (a
-    * delta only carries changed rows, so the latest row for a doc is
-    * its current assignment).
+  /** The merge-on-read clustering over the given units: their
+    * `clusters` rows tagged with the unit id. A delta only carries
+    * changed rows, so a doc's row from the HIGHEST unit id is its current
+    * assignment; under --on-duplicate allow two rows can share a unit id,
+    * and the (unit, cluster_id) argmax keeps the view a pure function of
+    * the state (see [[IncrementalResolve.Existing]]).
     */
-  private def mergeClusters(spark: SparkSession,
-                            units: Seq[(Long, String)]): DataFrame = {
-    val all = units.map { case (id, dir) =>
-      spark.read.parquet(s"$dir/clusters")
-        .select(col("doc_id"), col("cluster_id"), lit(id).as("__b"))
-    }.reduce(_.unionByName(_))
-    // argmax on (__b, cluster_id), not __b alone: under --on-duplicate
-    // allow two rows can share the same unit id, and an argmax on a tied
-    // key is whichever row the aggregate saw last — nondeterministic
-    // across runs/partitionings. The struct tiebreak makes the merged
-    // view a pure function of the state (max cluster_id among the
-    // latest-unit rows), stable even when the uniqueness contract is
-    // waived.
-    all.groupBy("doc_id")
-      .agg(max_by(col("cluster_id"), struct(col("__b"), col("cluster_id")))
-        .as("cluster_id"))
-  }
+  private def clusterState(spark: SparkSession, units: Seq[(Long, String)],
+                           schema: Option[StructType] = None): IncrementalResolve.Existing =
+    IncrementalResolve.Existing.merged(units.map { case (id, dir) =>
+      VersionedState.reader(spark, schema).parquet(s"$dir/clusters")
+        .select(col("doc_id"), col("cluster_id"), lit(id).as("__v"))
+    }.reduce(_.unionByName(_)))
 
   /** A table from the latest legacy `v=` snapshot — the reader fallback
     * for a state root the delta layout has not touched yet. None when
@@ -154,7 +151,7 @@ object StreamResolveJob {
   def currentClusters(spark: SparkSession, stateRoot: String): Option[DataFrame] = {
     val view = VersionedState.stateView(spark, stateRoot)
     if (view.isEmpty) legacyTable(spark, stateRoot, "clusters")
-    else Some(mergeClusters(spark, view.units(stateRoot)))
+    else Some(clusterState(spark, view.units(stateRoot)).current)
   }
 
   /** An append-only state table (names / keys / rejects) unioned across
@@ -177,21 +174,18 @@ object StreamResolveJob {
   private def migrateLegacy(spark: SparkSession, stateRoot: String,
                             legacy: Long): Unit = {
     val in = s"$stateRoot/v=$legacy"
-    val out = s"$stateRoot/base=$legacy"
     val names = spark.read.parquet(s"$in/names")
-    spark.read.parquet(s"$in/clusters")
-      .write.mode(SaveMode.Overwrite).parquet(s"$out/clusters")
-    names.write.mode(SaveMode.Overwrite).parquet(s"$out/names")
     val fs = fsOf(spark, stateRoot)
     val keys =
       if (fs.exists(new Path(s"$in/keys"))) spark.read.parquet(s"$in/keys")
       else stateKeys(names)
-    keys.write.mode(SaveMode.Overwrite).parquet(s"$out/keys")
     val rejects =
       if (fs.exists(new Path(s"$in/rejects"))) spark.read.parquet(s"$in/rejects")
       else names.limit(0).select(col("doc_id"), lit("").as("name"),
         lit("").as("reject_reason"), lit(0L).as("batch_id"))
-    rejects.write.mode(SaveMode.Overwrite).parquet(s"$out/rejects")
+    VersionedState.writeUnit(s"$stateRoot/base=$legacy", Seq(
+      "clusters" -> spark.read.parquet(s"$in/clusters"), "names" -> names,
+      "keys" -> keys, "rejects" -> rejects))
     VersionedState.commitBase(spark, stateRoot, legacy)
     sweepLegacy(spark, stateRoot)
   }
@@ -235,26 +229,34 @@ object StreamResolveJob {
     }
     val units = view.units(stateRoot)
 
-    // persist (not localCheckpoint): the batch tables are read several
-    // times within this micro-batch and must release their storage at
-    // the end — a long-running stream would otherwise accumulate one
-    // pinned block set per batch
-    // same validity gate as the batch pipeline (N8, ResolvePipeline's
+    // The batch side, materialized ONCE: every later step (the guard, the
+    // increment's scoping joins, the delta writes) reads this table, and
+    // its size is exact ([[Bridge.checkpoint]]), so the planner broadcasts
+    // it when it is small and sort-merges a bulk load.
+    // Same validity gate as the batch pipeline (N8, ResolvePipeline's
     // rejects split): an invalid name (blank/too_long/control_chars) or
     // one that normalizes to nothing never enters the clustering —
-    // without the rejectReason conjunct the stream would happily cluster
-    // a doc the batch entry rejects
-    val named = batch
-      .withColumn("name", Er.docName(col("spans")))
-      .withColumn("reject_reason",
-        coalesce(Er.rejectReason(col("name")),
-          when(Normalizer.normalizeColumn(col("name")) === "",
-            lit("EMPTY_NORMALIZED"))))
-    val rawNames = named
-      .where(col("reject_reason").isNull)
-      .select(col("doc_id"),
-        Normalizer.normalizeColumn(col("name")).as("normalized"))
-    val corpusNames = VersionedState.readTableFrom(spark, units, "names")
+    // without the EMPTY_NORMALIZED reason the stream would happily
+    // cluster a doc the batch entry rejects.
+    val side = Bridge.checkpoint(batch
+      .select(col("doc_id"), Er.docName(col("spans")).as("name"))
+      .withColumn("reject_reason", Er.rejectReason(col("name")))
+      .withColumn("normalized", when(col("reject_reason").isNull,
+        Normalizer.normalizeColumn(col("name"))))
+      .withColumn("reject_reason", coalesce(col("reject_reason"),
+        when(col("normalized") === "", lit("EMPTY_NORMALIZED"))))
+      .withColumn("__keys", BlockingKeys.defaultKeys(col("normalized"))))
+    val ids = side.select("doc_id")
+    val rejectCols = Seq(col("doc_id"), col("name"), col("reject_reason"),
+      lit(batchId).as("batch_id"))
+    // the state tables hold what this batch writes: reading them with
+    // its schemas runs no schema-inference job per table
+    val schemas = Map(
+      "names" -> side.select("doc_id", "normalized").schema,
+      "keys" -> BlockingKeys.explodeKeys(side, "doc_id", col("__keys")).schema,
+      "rejects" -> side.select(rejectCols: _*).schema,
+      "clusters" -> ids.select(col("doc_id"), col("doc_id").as("cluster_id")).schema)
+    def read(t: String) = VersionedState.readTableFrom(spark, units, t, Some(schemas(t)))
     // the unique-id contract is checked over EVERY ingested doc (valid
     // or not) — an id delivered twice in one batch is a duplicate even
     // when one copy is invalid. The corpus side is names ∪ rejects ids:
@@ -264,74 +266,57 @@ object StreamResolveJob {
     // then sit in both cumulative rejects and clusters, breaking the
     // ingested == clustered + rejected reconciliation. Every accepted id
     // lands in exactly one of the two tables, so the union IS the full
-    // ingested-id set.
-    val corpusGuardIds = (
-      corpusNames.map(_.select("doc_id")) ++
-        VersionedState.readTableFrom(spark, units, "rejects")
-          .map(_.select("doc_id"))
-      ).reduceOption(_.unionByName(_))
-    val dup = IngestContract.duplicateIdGuard(named.select(col("doc_id")),
-      corpusGuardIds, onDuplicate, batchId, "stream-resolve")
-    val newNames = dup
-      .map(d => rawNames.join(d, Seq("doc_id"), "left_anti"))
-      .getOrElse(rawNames).persist()
+    // ingested-id set — read as ONE scan of both tables' id column.
+    val corpusGuardIds =
+      if (units.isEmpty) None
+      else Some(VersionedState.reader(spark, Some(ids.schema)).parquet(
+        units.flatMap { case (_, d) => Seq(s"$d/names", s"$d/rejects") }: _*))
+    val dup = IngestContract.duplicateIdGuard(ids, corpusGuardIds, onDuplicate,
+      batchId, "stream-resolve")
+    val accepted = dup
+      .map(d => side.join(d, Seq("doc_id"), "left_anti"))
+      .getOrElse(side)
+      .where(col("reject_reason").isNull)
+    val newNames = accepted.select("doc_id", "normalized")
+    val newKeys = BlockingKeys.explodeKeys(accepted, "doc_id", col("__keys"))
     // EVERY dropped doc is RECORDED, like the batch pipeline's rejects
     // table, instead of vanishing from the maintained state with no
     // trace: per-batch reconciliation (ingested == clustered + rejected)
     // must hold, so docs excluded by the duplicate-id guard land in
     // rejects too (reason DUPLICATE_ID, one deterministic row per id,
-    // superseding any validity reject for the same id). Consumed once
-    // (written below); no persist needed.
-    val validityRejects = named
-      .where(col("reject_reason").isNotNull)
-      .select(col("doc_id"), col("name"), col("reject_reason"),
-        lit(batchId).as("batch_id"))
+    // superseding any validity reject for the same id).
+    val validityRejects = side.where(col("reject_reason").isNotNull)
+      .select(rejectCols: _*)
     val newRejects = dup match {
       case None => validityRejects
       case Some(d) =>
         validityRejects.join(d, Seq("doc_id"), "left_anti")
-          .unionByName(named.join(d, Seq("doc_id"), "left_semi")
+          .unionByName(side.join(d, Seq("doc_id"), "left_semi")
             .groupBy("doc_id").agg(min(col("name")).as("name"))
             .select(col("doc_id"), col("name"),
               lit("DUPLICATE_ID").as("reject_reason"),
               lit(batchId).as("batch_id")))
     }
-    val newKeys = stateKeys(newNames).persist()
-    // the reconstructed assignment view is consumed 3x inside the
-    // increment (contracted edges, cluster reps, changed-rows join) —
-    // merge once, persist for the batch
-    val existingOpt =
-      if (units.isEmpty) None
-      else Some(mergeClusters(spark, units).persist())
-    try {
-      val (existing, existingNames, existingKeys) = existingOpt match {
-        case None =>
-          (batch.select(col("doc_id"), col("doc_id").as("cluster_id")).limit(0),
-            newNames.limit(0), None)
-        case Some(cl) =>
-          (cl, corpusNames.get,
-            Some(VersionedState.readTableFrom(spark, units, "keys").get))
-      }
-
-      val inc = IncrementalResolve.resolveNamesWithDelta(spark, existing,
-        existingNames, newNames, existingKeys = existingKeys,
-        newKeysOpt = Some(newKeys), weights = weights, threshold = threshold,
-        maxBlockSize = maxBlockSize)
-
-      val out = s"$stateRoot/d=$batchId"
-      // changed rows ONLY: the batch's new docs + members of relabeled
-      // clusters — merge-on-read recovers the full table
-      inc.changed.write.mode(SaveMode.Overwrite).parquet(s"$out/clusters")
-      newNames.write.mode(SaveMode.Overwrite).parquet(s"$out/names")
-      newKeys.write.mode(SaveMode.Overwrite).parquet(s"$out/keys")
-      newRejects.write.mode(SaveMode.Overwrite).parquet(s"$out/rejects")
-      VersionedState.commitDelta(spark, stateRoot, batchId)
-      maybeCompact(spark, stateRoot, view, batchId, existingOpt, compactEvery)
-    } finally {
-      existingOpt.foreach(_.unpersist(false))
-      newKeys.unpersist(false)
-      newNames.unpersist(false)
+    val (existing, existingNames, existingKeys) = read("names") match {
+      case None =>
+        (IncrementalResolve.Existing(
+          ids.select(col("doc_id"), col("doc_id").as("cluster_id")).limit(0)),
+          newNames.limit(0), None)
+      case Some(names) =>
+        (clusterState(spark, units, Some(schemas("clusters"))), names, read("keys"))
     }
+    val inc = IncrementalResolve.resolveNames(spark, existing,
+      existingNames, newNames, existingKeys = existingKeys,
+      newKeysOpt = Some(newKeys), weights = weights, threshold = threshold,
+      maxBlockSize = maxBlockSize)
+    // clusters holds the changed rows ONLY: the batch's new docs +
+    // members of relabeled clusters — merge-on-read recovers the full
+    // table
+    VersionedState.writeUnit(s"$stateRoot/d=$batchId", Seq(
+      "clusters" -> inc.changed, "names" -> newNames, "keys" -> newKeys,
+      "rejects" -> newRejects))
+    VersionedState.commitDelta(spark, stateRoot, batchId)
+    maybeCompact(spark, stateRoot, view, batchId, compactEvery, schemas)
   }
 
   /** Fold the committed view into `base=<upto>` when the live delta
@@ -339,34 +324,19 @@ object StreamResolveJob {
     * threshold: the merged assignment view plus the unioned append-only
     * tables, one O(corpus) rewrite every `compactEvery` batches. This
     * bounds both the unit count the merge-on-read union touches and the
-    * per-doc row multiplicity the argmax collapses. The clusters view is
-    * NOT re-merged from parquet: the batch already holds the pre-batch
-    * merge (persisted `preMerged`) and just wrote its changed rows —
-    * latest-wins over those two is the identical table for one cheap
-    * anti-join instead of a corpus-wide re-read + re-aggregation.
+    * per-doc row multiplicity the argmax collapses. It is the only step
+    * that builds the whole merged view.
     */
   private def maybeCompact(spark: SparkSession, stateRoot: String,
                            preView: VersionedState.StateView, upto: Long,
-                           preMerged: Option[DataFrame],
-                           compactEvery: Int): Unit = {
+                           compactEvery: Int, schemas: Map[String, StructType]): Unit = {
     if (compactEvery <= 0) return
     if (preView.liveDeltaIds.size + 1 < compactEvery) return
     val units = preView.units(stateRoot) :+ (upto -> s"$stateRoot/d=$upto")
-    val out = s"$stateRoot/base=$upto"
-    // read the just-committed delta back (batch-sized, durable) rather
-    // than re-evaluating the increment's changed-rows plan
-    val deltaClusters = spark.read.parquet(s"$stateRoot/d=$upto/clusters")
-    val baseClusters = preMerged match {
-      case None => deltaClusters
-      case Some(ex) =>
-        ex.join(deltaClusters.select("doc_id"), Seq("doc_id"), "left_anti")
-          .unionByName(deltaClusters)
-    }
-    baseClusters.write.mode(SaveMode.Overwrite).parquet(s"$out/clusters")
-    Seq("names", "keys", "rejects").foreach { t =>
-      VersionedState.readTableFrom(spark, units, t).get
-        .write.mode(SaveMode.Overwrite).parquet(s"$out/$t")
-    }
+    VersionedState.writeUnit(s"$stateRoot/base=$upto",
+      ("clusters" -> clusterState(spark, units, Some(schemas("clusters"))).current) +:
+        Seq("names", "keys", "rejects").map(t =>
+          t -> VersionedState.readTableFrom(spark, units, t, Some(schemas(t))).get))
     VersionedState.commitBase(spark, stateRoot, upto)
   }
 

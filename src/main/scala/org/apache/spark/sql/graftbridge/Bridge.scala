@@ -1,15 +1,39 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Column <-> Expression bridge. Spark 4 made these conversions
-  * `private[sql]` (org.apache.spark.sql.classic.ExpressionUtils); placing
-  * this object under org.apache.spark.sql grants access — the standard
+/** The Spark internals the engine needs. Spark 4 made them `private[sql]`
+  * (e.g. org.apache.spark.sql.classic.ExpressionUtils); placing this
+  * object under org.apache.spark.sql grants access — the standard
   * pattern for libraries shipping native Catalyst expressions.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** An eager local checkpoint that knows its size. `Dataset.localCheckpoint`
+    * keeps only the size ESTIMATE of the plan that made it, which after a
+    * join is usually far too large, so a small checkpointed table joined
+    * with a corpus-sized one makes the planner shuffle both sides. This
+    * one counts the rows in the job that materializes them and states
+    * the exact row count (and the size it implies), so the planner
+    * broadcasts a small table and sort-merges a large one. Its blocks are
+    * released like a local checkpoint's, by the context cleaner once the
+    * frame is unreachable.
+    */
+  def checkpoint(df: DataFrame): DataFrame = {
+    val qe = df.queryExecution
+    val rdd = qe.toRdd.map(_.copy())
+    rdd.localCheckpoint()
+    val rows = BigInt(rdd.count())
+    val output = qe.analyzed.output
+    val session = df.sparkSession.asInstanceOf[SparkSession]
+    Dataset.ofRows(session, LogicalRDD(output, rdd)(session,
+      Some(Statistics(EstimationUtils.getOutputSize(output, rows), Some(rows)))))
+  }
 }

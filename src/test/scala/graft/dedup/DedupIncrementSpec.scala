@@ -47,6 +47,28 @@ class DedupIncrementSpec extends AnyFunSuite {
     assert(pairSet(inc.pairs) == fullTouchingBatch)
   }
 
+  test("block cap under scoping: the scoped increment == full recompute over the unscoped corpus") {
+    // the batch touches one corpus block over the cap (five copies of a
+    // text) and one under it (two copies of another); identical texts
+    // share every band key
+    val a = "the quick brown fox jumps over the lazy dog near the river bank today"
+    val b = "entity resolution at web scale needs blocking scoring and clustering stages"
+    val cap = 4
+    val corpus = ((0 until 5).map(i => (i.toLong, a)) ++ Seq((10L, b), (11L, b),
+      (20L, "training data pipelines deduplicate documents with minhash band signatures")))
+      .toDF("doc_id", "text")
+    val batch = Seq((100L, a), (101L, b)).toDF("doc_id", "text")
+
+    val full = pairSet(Dedup.minhashNearDups(corpus.unionByName(batch), "doc_id", "text",
+      threshold = 0.4, maxBlockSize = cap))
+      .filter { case (x, y, _) => x >= 100 || y >= 100 }
+    val inc = Dedup.minhashNearDupsIncrement(batch, "doc_id", "text",
+      Dedup.minhashState(corpus, "doc_id", "text"), threshold = 0.4, maxBlockSize = cap)
+    assert(pairSet(inc.pairs) == full)
+    // the over-cap block pairs nothing, the under-cap one does
+    assert(full.map { case (x, y, _) => (x, y) } == Set((10L, 101L), (11L, 101L)))
+  }
+
   test("chained increments over appended state reconstruct the full answer") {
     val all = mkDocs(0 until 50).toDF("doc_id", "text")
     val c0 = all.where(col("doc_id") < 30)

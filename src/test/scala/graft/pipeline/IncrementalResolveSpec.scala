@@ -26,7 +26,7 @@ class IncrementalResolveSpec extends AnyFunSuite {
     val newOld = Seq((6L, 2L), (6L, 3L)).toDF("src", "dst")
 
     val inc = IncrementalResolve.attach(spark, existing, newIds, newNew, newOld)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      .assignments.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
     val full = ConnectedComponents.run(spark,
       oldEdges.union(newNew).union(newOld),
@@ -42,13 +42,45 @@ class IncrementalResolveSpec extends AnyFunSuite {
     assert(inc(7L) == 7L && inc(8L) == 7L)
   }
 
+  test("block cap under scoping: the scoped increment == full recompute over the unscoped corpus") {
+    // the batch touches one corpus block over the cap (six identical
+    // names) and one under it (two); two more names are untouched
+    val cap = 5
+    val corpus = ((1 to 6).map(i => (f"c-z$i%02d", "zanzibar holdings")) ++ Seq(
+      ("c-q01", "quintessa partners"), ("c-q02", "quintessa partners"),
+      ("c-a01", "acme widgets"), ("c-b01", "borealis mining")))
+      .toDF("doc_id", "normalized")
+    val batch = Seq(("n-z01", "zanzibar holdings"), ("n-q01", "quintessa partners"))
+      .toDF("doc_id", "normalized")
+    val all = corpus.unionByName(batch)
+    val none = Seq.empty[(String, String)].toDF("doc_id", "cluster_id")
+    def fromScratch(names: org.apache.spark.sql.DataFrame) =
+      IncrementalResolve.resolveNames(spark, IncrementalResolve.Existing(none),
+        names.limit(0), names, maxBlockSize = cap)
+      .assignments.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+
+    val existing = fromScratch(corpus).toSeq.toDF("doc_id", "cluster_id")
+    val inc = IncrementalResolve.resolveNames(spark, IncrementalResolve.Existing(existing),
+      corpus, batch, maxBlockSize = cap)
+    val assigned = inc.assignments.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val changed = inc.changed.collect().map(r => r.getString(0) -> r.getString(1)).toSet
+
+    assert(assigned == fromScratch(all))
+    // the over-cap block merges nothing, the under-cap one attaches
+    assert(assigned("n-z01") == "n-z01" && assigned("c-z02") == "c-z02")
+    assert(assigned("n-q01") == "c-q01" && assigned("c-q02") == "c-q01")
+    // no label moved (the new ids sort after the corpus labels): the
+    // changed rows are the new docs only
+    assert(changed == Set("n-z01" -> "n-z01", "n-q01" -> "c-q01"))
+  }
+
   test("empty increment is a no-op") {
     val existing = ConnectedComponents.run(spark,
       Seq((1L, 2L)).toDF("src", "dst"), Seq(1L, 2L, 3L).toDF("doc_id"))
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
     val out = IncrementalResolve.attach(spark, existing,
       Seq.empty[Long].toDF("doc_id"), empty, empty)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      .assignments.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
   }
 }

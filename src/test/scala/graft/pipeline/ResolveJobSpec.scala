@@ -50,6 +50,22 @@ class ResolveJobSpec extends AnyFunSuite {
         "--weights", "0.33,junk,0.34,0.33"))))
   }
 
+  test("back-to-back runs release their stage caches") {
+    val sc = spark.sparkContext
+    // a cached Dataset's block set is an RDD named after its plan; the
+    // engine's local checkpoints are unnamed and go with their frames
+    def cachedFrames = sc.getPersistentRDDs.values.count(_.name != null)
+    def run(k: Int) = ResolveJob.run(spark, ResolveJob.parseArgs(Array(
+      "--input", inputDir, "--output", tmp(s"rjob-release-$k"))))
+    val first = run(0)
+    assert(first.cached.nonEmpty, "a run without a store caches its stages")
+    assert(first.cached.forall(_.storageLevel == org.apache.spark.storage.StorageLevel.NONE))
+    val afterFirst = cachedFrames
+    (1 to 3).foreach(run)
+    assert(cachedFrames == afterFirst,
+      s"cached block sets went $afterFirst -> $cachedFrames over 3 more runs")
+  }
+
   test("job output == direct pipeline run; provenance tables written") {
     val out = tmp("rjob-out")
     val opts = ResolveJob.parseArgs(Array(

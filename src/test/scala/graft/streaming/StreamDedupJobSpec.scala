@@ -277,6 +277,19 @@ class StreamDedupJobSpec extends AnyFunSuite {
     assert(e.getMessage.contains("--algo simhash"))
   }
 
+  test("per-batch job budget: a small batch attached to a committed base") {
+    val state = tmp("sdj-budget")
+    StreamDedupJob.attachBatch(spark, state, mkDocs(0 until 60), batchId = 0L,
+      threshold = 0.4)
+    StreamDedupJob.attachBatch(spark, state, mkDocs(60 until 65), batchId = 1L,
+      threshold = 0.4)
+    val jobs = graft.SparkJobs.count(spark)(
+      StreamDedupJob.attachBatch(spark, state, mkDocs(65 until 70), batchId = 2L,
+        threshold = 0.4))
+    // 19 here; the corpus-wide increment it replaced ran 27
+    assert(jobs <= 23, s"one micro-batch ran $jobs Spark jobs")
+  }
+
   test("lineage guard: fresh checkpoint over committed state refuses") {
     val in = tmp("sdj-lg-in"); val state = tmp("sdj-lg-state")
     mkDocs(0 until 5).coalesce(1).write.mode("append").parquet(in)

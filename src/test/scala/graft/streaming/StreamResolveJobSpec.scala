@@ -81,8 +81,9 @@ class StreamResolveJobSpec extends AnyFunSuite {
       .withColumn("normalized", Normalizer.normalizeColumn(col("name")))
       .where(col("normalized") =!= "").select("doc_id", "normalized")
     val empty = all.select(col("doc_id"), col("doc_id").as("cluster_id")).limit(0)
-    val expected = IncrementalResolve.resolveNames(spark, empty, names.limit(0), names)
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted
+    val expected = IncrementalResolve.resolveNames(spark,
+      IncrementalResolve.Existing(empty), names.limit(0), names)
+      .assignments.collect().map(r => (r.getString(0), r.getString(1))).sorted
 
     assert(stateClusters(state).sameElements(expected))
 
@@ -196,8 +197,9 @@ class StreamResolveJobSpec extends AnyFunSuite {
       .withColumn("normalized", Normalizer.normalizeColumn(col("name")))
       .where(col("normalized") =!= "").select("doc_id", "normalized")
     val empty = legacyDocs.select(col("doc_id"), col("doc_id").as("cluster_id")).limit(0)
-    IncrementalResolve.resolveNames(spark, empty, names.limit(0), names)
-      .write.parquet(s"$state/v=0/clusters")
+    IncrementalResolve.resolveNames(spark,
+      IncrementalResolve.Existing(empty), names.limit(0), names)
+      .assignments.write.parquet(s"$state/v=0/clusters")
     names.write.parquet(s"$state/v=0/names")
     VersionedState.fsOf(spark, state)
       .create(new org.apache.hadoop.fs.Path(s"$state/v=0/_COMMITTED"), true).close()
@@ -364,6 +366,51 @@ class StreamResolveJobSpec extends AnyFunSuite {
     q2.awaitTermination()
     assert(stateClusters(state).sameElements(clean),
       "replayed batch must rebuild the identical state")
+  }
+
+  test("merge-on-read scoping: a relabel reads only current members, never a stale row") {
+    val state = tmp("sjob-stale")
+    val b0 = docsDF(
+      nameDoc("m-b", "acme corporation"), nameDoc("m-c", "acme corporation"),
+      nameDoc("z-1", "zebra logistics"), nameDoc("q-1", "quantum widgets"))
+    // batch 1 relabels the acme cluster m-b -> m-a: m-b and m-c now hold
+    // rows with different labels in two units (the d=0 row is stale)
+    val b1 = docsDF(nameDoc("m-a", "acme corporation"))
+    // batch 2 bridges into that cluster (a-0 relabels it again) and into
+    // the zebra one
+    val b2 = docsDF(nameDoc("a-0", "acme corporation"), nameDoc("z-0", "zebra logistics"))
+    Seq(b0, b1, b2).zipWithIndex.foreach { case (b, k) =>
+      StreamResolveJob.attachBatch(spark, state, b, batchId = k.toLong)
+    }
+    def unit(k: Int) = spark.read.parquet(s"$state/d=$k/clusters")
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(unit(0).contains("m-b" -> "m-b") && unit(1).contains("m-b" -> "m-a"),
+      "the scenario needs a doc with rows under two labels")
+    // changed = exactly the current members of the relabeled clusters
+    // plus the new docs; the stale d=0 rows nominate nothing
+    assert(unit(2) == Set("a-0" -> "a-0", "m-a" -> "a-0", "m-b" -> "a-0", "m-c" -> "a-0",
+      "z-0" -> "z-0", "z-1" -> "z-0"))
+
+    // the state equals the one-shot increment over all three batches
+    Er.register(spark)
+    val all = b0.unionByName(b1).unionByName(b2)
+    val names = all.select(col("doc_id"),
+      Normalizer.normalizeColumn(Er.docName(col("spans"))).as("normalized"))
+    val empty = all.select(col("doc_id"), col("doc_id").as("cluster_id")).limit(0)
+    val expected = IncrementalResolve.resolveNames(spark,
+      IncrementalResolve.Existing(empty), names.limit(0), names)
+      .assignments.collect().map(r => (r.getString(0), r.getString(1))).sorted
+    assert(stateClusters(state).sameElements(expected))
+  }
+
+  test("per-batch job budget: a small batch attached to a committed base") {
+    val state = tmp("sjob-budget")
+    StreamResolveJob.attachBatch(spark, state, corpus(100, seed = 61L), batchId = 0L)
+    StreamResolveJob.attachBatch(spark, state, corpus(4, seed = 62L), batchId = 1L)
+    val jobs = graft.SparkJobs.count(spark)(
+      StreamResolveJob.attachBatch(spark, state, corpus(4, seed = 63L), batchId = 2L))
+    // 37 here; the corpus-wide increment it replaced ran 74
+    assert(jobs <= 45, s"one micro-batch ran $jobs Spark jobs")
   }
 
   test("crash mid-write: an uncommitted delta dir is invisible and the replay overwrites it") {

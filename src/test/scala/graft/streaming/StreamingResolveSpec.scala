@@ -132,7 +132,8 @@ class StreamingResolveSpec extends AnyFunSuite {
     val q = stream.writeStream.foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
       val newNames = batch.select("doc_id", "normalized").localCheckpoint(true)
       existing = IncrementalResolve.resolveNames(
-        spark, existing, existingNames, newNames).localCheckpoint(true)
+        spark, IncrementalResolve.Existing(existing), existingNames, newNames)
+        .assignments.localCheckpoint(true)
       existingNames = existingNames.unionByName(newNames).localCheckpoint(true)
       ()
     }.start()
