@@ -119,23 +119,12 @@ private[graft] object VersionedState {
     schema.fold(spark.read)(s =>
       spark.read.schema(StructType(s.fields.map(_.copy(nullable = true)))))
 
-  /** Write a unit's tables (name -> frame) under `dir`, side by side:
-    * the writes are independent Spark jobs, each submitted from its own
-    * thread, which inherits the caller's job group and local properties.
-    * Returns once every write has finished, rethrowing the first failure;
-    * the caller commits the unit's marker only after that.
+  /** Write a unit's tables (name -> frame) under `dir`, one after the
+    * other on the caller's thread; the caller commits the unit's marker
+    * only after this returns.
     */
-  def writeUnit(dir: String, tables: Seq[(String, DataFrame)]): Unit = {
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val writers = tables.map { case (t, df) =>
-      new Thread(() =>
-        try df.write.mode(SaveMode.Overwrite).parquet(s"$dir/$t")
-        catch { case e: Throwable => failures.add(e) }, s"state-write-$t")
-    }
-    writers.foreach(_.start())
-    writers.foreach(_.join())
-    Option(failures.peek()).foreach(e => throw e)
-  }
+  def writeUnit(dir: String, tables: Seq[(String, DataFrame)]): Unit =
+    tables.foreach { case (t, df) => df.write.mode(SaveMode.Overwrite).parquet(s"$dir/$t") }
 
   /** Commit delta `id` (marker only — deltas are the corpus; nothing is
     * pruned here, compaction GCs them).

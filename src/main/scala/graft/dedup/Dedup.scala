@@ -131,7 +131,10 @@ object Dedup {
     // numPartitions survives AQE (user-specified counts are not
     // coalesced), and hash-partitioning on the join key means that when
     // the sets are too big to broadcast the exchange doubles as the
-    // verify join's own left exchange — no extra shuffle at scale.
+    // verify join's own left exchange — no extra shuffle at scale. When
+    // the pairs are the smaller side the planner broadcasts them instead
+    // and streams the sets (no shuffle of the sets at all); the pin then
+    // costs one shuffle of the small pair table.
     val parts = pairs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val pairsPinned = pairs.repartition(parts, col("doc_id_a"))
     val withN =
@@ -295,8 +298,10 @@ object Dedup {
     * semi-joined on the batch's band keys before the cap counts them
     * (the cap counts per block key, so the scoped count is exact), and
     * only the candidate pairs' corpus ids read their shingle sets. The
-    * candidate pairs and the sets they need are barriers of known size
-    * ([[Bridge.checkpoint]]), so each lookup broadcasts the small side.
+    * candidate pairs and the sets they need are barriers of measured
+    * size ([[Bridge.checkpoint]]), so each lookup broadcasts the side
+    * that is small in bytes, and a bulk load's sets (up to 64 KB a doc)
+    * are not broadcast once they pass the threshold.
     */
   def incrementFromState(batch: NearDupState, corpus: NearDupState,
                          threshold: Double, maxBlockSize: Int): NearDupIncrement = {

@@ -1,9 +1,10 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
-import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -20,20 +21,36 @@ object Bridge {
     * keeps only the size ESTIMATE of the plan that made it, which after a
     * join is usually far too large, so a small checkpointed table joined
     * with a corpus-sized one makes the planner shuffle both sides. This
-    * one counts the rows in the job that materializes them and states
-    * the exact row count (and the size it implies), so the planner
-    * broadcasts a small table and sort-merges a large one. Its blocks are
-    * released like a local checkpoint's, by the context cleaner once the
-    * frame is unreachable.
+    * one measures the rows in the job that materializes them: it states
+    * their count and their stored bytes (the sum of the `UnsafeRow`
+    * sizes), so the planner broadcasts a small table and sort-merges a
+    * large one. Column default sizes would not do: Spark costs an array
+    * as ONE element, so a table of shingle sets (up to 64 KB a row) would
+    * read as ~28 B a row and be broadcast at any bulk-load size. A frame
+    * derived from the checkpoint is estimated by Spark from this size
+    * and the default widths of its columns; an explode of an array keeps
+    * the array's measured bytes, so a key table exploded from a
+    * checkpointed batch reads within about 2x of its real size.
+    * Its blocks are released like a local checkpoint's, by the context
+    * cleaner once the frame is unreachable.
     */
   def checkpoint(df: DataFrame): DataFrame = {
     val qe = df.queryExecution
-    val rdd = qe.toRdd.map(_.copy())
-    rdd.localCheckpoint()
-    val rows = BigInt(rdd.count())
     val output = qe.analyzed.output
+    val types = output.map(_.dataType).toArray
+    val rdd = qe.toRdd.mapPartitions { rows =>
+      lazy val toUnsafe = UnsafeProjection.create(types)
+      rows.map {
+        case u: UnsafeRow => u.copy()
+        case r => toUnsafe(r).copy()
+      }
+    }
+    rdd.localCheckpoint()
+    // one job: it fills the checkpoint and measures it
+    val (rows, bytes) = rdd.map(r => (1L, r.getSizeInBytes.toLong))
+      .fold((0L, 0L)) { case ((n1, b1), (n2, b2)) => (n1 + n2, b1 + b2) }
     val session = df.sparkSession.asInstanceOf[SparkSession]
-    Dataset.ofRows(session, LogicalRDD(output, rdd)(session,
-      Some(Statistics(EstimationUtils.getOutputSize(output, rows), Some(rows)))))
+    Dataset.ofRows(session, LogicalRDD(output, rdd.asInstanceOf[RDD[InternalRow]])(session,
+      Some(Statistics(BigInt(math.max(bytes, 1L)), Some(BigInt(rows))))))
   }
 }

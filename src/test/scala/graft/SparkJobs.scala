@@ -7,7 +7,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Counts the Spark jobs a block runs, with a listener scoped by a fresh
-  * job group (jobs submitted from threads the block starts inherit it).
+  * job group.
   */
 object SparkJobs {
 

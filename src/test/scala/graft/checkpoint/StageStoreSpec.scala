@@ -10,8 +10,6 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileUtil, Path, RawLocalFileSystem}
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.graft.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MetadataBuilder
@@ -148,43 +146,27 @@ class StageStoreSpec extends AnyFunSuite {
   }
 
   test("commit job budget: a miss runs only the write's jobs, a hit none until consumed") {
-    val sc = spark.sparkContext
-    val jobs = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(g => jobs.synchronized(jobs(g) += 1))
-    }
-    def jobsOf(label: String)(body: => Unit): Int = {
-      val group = s"graft-budget-$label-${java.util.UUID.randomUUID}"
-      sc.setJobGroup(group, label)
-      try body finally sc.clearJobGroup()
-      ListenerBus.drain(sc)
-      jobs.synchronized(jobs(group))
-    }
+    def jobsOf(body: => Unit): Int = graft.SparkJobs.count(spark)(body)
     // a shuffle, so the write runs more than one job under AQE
     def frame = spark.range(0, 2000, 1, 4)
       .select(col("id"), (col("id") % 7).cast("string").as("v"))
       .repartition(3, col("v"))
     val root = tmpDir("graft-budget")
     val store = new StageStore(root, spark)
-    sc.addSparkListener(listener)
-    try {
-      // warm-up: one commit and one plain write before anything is counted
-      store.materialize("warm", "fp00")(frame).count()
-      frame.write.mode("overwrite").parquet(Paths.get(root, "plain-warm").toString)
+    // warm-up: one commit and one plain write before anything is counted
+    store.materialize("warm", "fp00")(frame).count()
+    frame.write.mode("overwrite").parquet(Paths.get(root, "plain-warm").toString)
 
-      val plain = jobsOf("plain")(frame.write.mode("overwrite")
-        .parquet(Paths.get(root, "plain").toString))
-      val miss = jobsOf("miss")(store.materialize("s1", "fp00")(frame))
-      assert(plain > 0, "the job listener saw the plain write")
-      assert(miss == plain, s"a commit runs $miss jobs, a plain write $plain")
+    val plain = jobsOf(frame.write.mode("overwrite")
+      .parquet(Paths.get(root, "plain").toString))
+    val miss = jobsOf(store.materialize("s1", "fp00")(frame))
+    assert(plain > 0, "the job listener saw the plain write")
+    assert(miss == plain, s"a commit runs $miss jobs, a plain write $plain")
 
-      var hit: DataFrame = null
-      val hitJobs = jobsOf("hit") { hit = store.materialize("s1", "fp00")(frame) }
-      assert(hitJobs == 0, s"a resume ran $hitJobs jobs before its frame was consumed")
-      assert(jobsOf("consume")(assert(hit.count() == 2000L)) > 0)
-    } finally sc.removeSparkListener(listener)
+    var hit: DataFrame = null
+    val hitJobs = jobsOf { hit = store.materialize("s1", "fp00")(frame) }
+    assert(hitJobs == 0, s"a resume ran $hitJobs jobs before its frame was consumed")
+    assert(jobsOf(assert(hit.count() == 2000L)) > 0)
   }
 
   test("stage-scoped fingerprints: weight change resumes blocking, recomputes scoring") {

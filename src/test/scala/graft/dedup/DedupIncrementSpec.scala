@@ -1,6 +1,8 @@
 package graft.dedup
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestSession
@@ -69,6 +71,37 @@ class DedupIncrementSpec extends AnyFunSuite {
     assert(full.map { case (x, y, _) => (x, y) } == Set((10L, 101L), (11L, 101L)))
   }
 
+  test("shingle sets past the broadcast threshold are not broadcast into the verify join") {
+    // ~6k-char near-dup texts: ~6k shingles, ~48 KB of set per doc, so
+    // the 16 docs' sets are ~0.8 MB against a 256 KB threshold. Costed
+    // by column default sizes (an array as one element) they would read
+    // as under 1 KB and be broadcast.
+    val rnd = new scala.util.Random(7)
+    val words = Array.fill(1000)(rnd.alphanumeric.take(5).mkString)
+    val docs = (0 until 16).map { i =>
+      (i.toLong, words.updated(i * 7, s"w$i").mkString(" "))
+    }.toDF("doc_id", "text")
+    val corpus = docs.where(col("doc_id") < 8)
+    val batch = docs.where(col("doc_id") >= 8)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, 256L * 1024)
+    try {
+      val inc = Dedup.minhashNearDupsIncrement(batch, "doc_id", "text",
+        Dedup.minhashState(corpus, "doc_id", "text"), threshold = 0.4)
+      val got = pairSet(inc.pairs)
+      val full = pairSet(Dedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.4))
+        .filter { case (a, b, _) => a >= 8 || b >= 8 }
+      assert(got == full && got.size == 8 * 7 / 2 + 8 * 8)
+      val setCols = Set("__s", "s_a", "s_b")
+      val broadcastSets = AdaptivePlans.collect(inc.pairs.queryExecution.executedPlan) {
+        case b: BroadcastExchangeExec if b.output.exists(a => setCols(a.name)) => b
+      }
+      assert(broadcastSets.isEmpty,
+        s"shingle sets broadcast:\n${inc.pairs.queryExecution.executedPlan}")
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("chained increments over appended state reconstruct the full answer") {
     val all = mkDocs(0 until 50).toDF("doc_id", "text")
     val c0 = all.where(col("doc_id") < 30)
@@ -135,3 +168,6 @@ class DedupIncrementSpec extends AnyFunSuite {
     } finally spark.sql("DROP TABLE IF EXISTS ndk_spec")
   }
 }
+
+/** Plan traversal that descends into adaptive query stages. */
+private object AdaptivePlans extends AdaptiveSparkPlanHelper
