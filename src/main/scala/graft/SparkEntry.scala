@@ -5,6 +5,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.ann.Ann
 import graft.audit.Audit
@@ -17,7 +18,7 @@ import graft.functions.Er
 import graft.media.Multimodal
 import graft.norm.Normalizer
 import graft.oracle.OracleSql
-import graft.pairs.CandidateGenerator
+import graft.pairs.{CandidateGenerator, SimJoin}
 import graft.pipeline.{IncrementalResolve, PipelineConfig, ResolvePipeline}
 import graft.relations.Relationships
 import graft.review.Review
@@ -45,6 +46,15 @@ object SparkEntry {
 
   private def embeddings(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")
+
+  /** The near-dup increment of rows with id >= 400 (the batch,
+    * materialized once) against the state of rows below 400.
+    */
+  private def incrementAt400(f: SimJoin.Family, df: DataFrame, id: Column,
+                             maxBlockSize: Int): DataFrame =
+    SimJoin.increment(f,
+      SimJoin.state(f, Bridge.checkpoint(f.docs(df.where(id >= 400)))),
+      SimJoin.state(f, f.docs(df.where(id < 400))), maxBlockSize).pairs
 
   /** documents + normalized text + the first-6-token "entity name". */
   private def named(s: SparkSession, dir: String): DataFrame =
@@ -142,7 +152,7 @@ object SparkEntry {
       // q61 merges, q64 edges) — without the fence Catalyst substitutes
       // the composite into the filter and pushes it into the dim joins
       // as a residual predicate, running the lev+jaccard kernels twice
-      // per pair (the Dedup.verifyFromSets pathology). Values unchanged.
+      // per pair (the SimJoin verify pathology). Values unchanged.
       .withColumn("score", graft.util.EvalOnce(
         Er.compositeScore(col("name_a"), col("name_b"), SimilarityWeights.oracleSafe)))
   }
@@ -950,25 +960,17 @@ object SparkEntry {
     //     the FULL-batch near-dup recompute over all 500 docs restricted
     //     to pairs touching the batch — the hash match proves the
     //     increment is exact, not approximate.
-    "q70_incremental_neardup" -> ((s, dir) => {
-      val docs = documents(s, dir).where(col("doc_id") < 500)
-      Dedup.minhashNearDupsIncrement(
-        docs.where(col("doc_id") >= 400), "doc_id", "text",
-        Dedup.minhashState(docs.where(col("doc_id") < 400), "doc_id", "text"),
-        threshold = 0.5).pairs
-    }),
+    "q70_incremental_neardup" -> ((s, dir) =>
+      incrementAt400(Dedup.minhashFamily(threshold = 0.5),
+        documents(s, dir).where(col("doc_id") < 500), col("doc_id"), 10000)),
 
     // --- incremental SimHash near-dup (q31's increment form): the batch
     //     (docs >= 400) pairs against the persisted fingerprint key
     //     table plus itself; oracle = q31's full recompute restricted to
     //     pairs touching the batch
-    "q71_incremental_simhash" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      Dedup.simhashNearDupsIncrement(
-        docs.where(col("doc_id") >= 400), "doc_id", "text",
-        Dedup.simhashState(docs.where(col("doc_id") < 400), "doc_id", "text"),
-        maxHamming = 8).pairs
-    }),
+    "q71_incremental_simhash" -> ((s, dir) =>
+      incrementAt400(Dedup.simhashFamily(maxHamming = 8), documents(s, dir),
+        col("doc_id"), 10000)),
 
     // --- corpus curation (lang allowlist -> quality floor -> transitive
     //     near-dup removal): the training-data ingest composition, one
@@ -987,14 +989,10 @@ object SparkEntry {
     //     persisted sign-LSH key table + stored vectors plus itself.
     //     Oracle = q24's full recompute restricted to pairs touching the
     //     batch — the hash match proves the increment is exact.
-    "q73_incremental_cosine" -> ((s, dir) => {
-      val e = embeddings(s, dir)
-      Ann.cosineNearDupsIncrement(
-        e.where(col("vec_id") >= 400),
-        Ann.cosineState(e.where(col("vec_id") < 400), bits = 4),
-        threshold = 0.3, bits = 4).pairs
-        .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
-    }),
+    "q73_incremental_cosine" -> ((s, dir) =>
+      incrementAt400(Ann.cosineFamily(threshold = 0.3, bits = 4), embeddings(s, dir),
+        col("vec_id"), 1000000)
+        .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))),
 
     // --- incremental resolve (the reference's PRIMARY per-record entry
     //     point, api/EntityResolutionService.java:502-615, as a batch
@@ -1356,7 +1354,7 @@ object SparkEntry {
         // mirror models the increment's CAP semantics faithfully: the
         // batch self-join caps on BATCH-side band counts, the
         // batch-vs-corpus join on CORPUS-side counts (each side's own
-        // volume — Dedup.incrementFromSimhashKeys), NOT on the combined
+        // volume — SimJoin.increment), NOT on the combined
         // count a full-recompute would see. Identical output while no
         // band bucket nears the cap (true at sf0.01), and the gate stays
         // faithful on data where one does.
@@ -1749,7 +1747,7 @@ object SparkEntry {
       // touching the increment — must hash-equal the incremental path.
       // Caps mirror the increment's per-side semantics (batch self-join
       // caps on batch block counts, increment join on corpus counts —
-      // Dedup.incrementFromState), not the combined count; see q71.
+      // SimJoin.increment), not the combined count; see q71.
       "q70_incremental_neardup" ->
         s"""WITH docs500 AS (SELECT doc_id, text FROM documents
            |                 WHERE doc_id < 500 AND text IS NOT NULL AND length(text) > 0),

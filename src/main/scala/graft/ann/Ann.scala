@@ -4,11 +4,14 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.pairs.SimJoin
+
 /** Similarity search over an embedding column (array<float>):
-  * brute-force cosine top-k as the exactness baseline, and an LSH-bucketed
-  * variant as the scale path (bucket join instead of full cross join).
-  * Dot products use higher-order array functions (zip_with + aggregate) in
-  * double precision — codegen'd, no UDFs.
+  * brute-force cosine top-k as the exactness baseline, an LSH-bucketed
+  * variant as the scale path (bucket join instead of full cross join), an
+  * IVF index, and cosine near-dup as the sign-LSH family of the one
+  * similarity join ([[SimJoin]]: batch pairs, maintained state,
+  * increments). Cosine is one native kernel pass per pair.
   */
 object Ann {
 
@@ -266,8 +269,33 @@ object Ann {
     array_join(signs, "")
   }
 
-  /** Embedding-cosine near-duplicate pairs (threshold variant):
-    * bucket-join + cosine >= threshold; pairs canonicalized a < b.
+  /** The sign-LSH cosine family: band b keys a vector by the signs of
+    * its dimensions [b*bits+1, (b+1)*bits] ("b:<signs>"), pairs are kept
+    * at cosine >= threshold, output (id_a, id_b, cosine). A band whose
+    * offset reaches the embedding's length would slice an EMPTY sign
+    * prefix, one corpus-wide block (all-pairs below the cap, silently
+    * dropped above it); such bands carry no information and are skipped
+    * per row (short embeddings simply get fewer band keys). With one band
+    * a vector has at most one key, and the embedding rides the key table.
+    * `bits`/`bands` must match between a state's ingest and every later
+    * increment.
+    */
+  def cosineFamily(threshold: Double, bits: Int = 4, bands: Int = 1,
+                   idCol: String = "vec_id", embCol: String = "embedding"): SimJoin.Family =
+    SimJoin.Family(
+      docs = df => df.select(col(idCol).as("doc_id"), col(embCol).as("emb"))
+        .withColumn("__k", filter(array((0 until bands).map(b =>
+          when(size(col("emb")) > b * bits,
+            concat(lit(s"$b:"), signBucketAt(col("emb"), bits, b * bits)))): _*), _.isNotNull)),
+      payload = Seq("emb"),
+      sides = Seq("emb" -> col("emb")),
+      score = "cosine" -> cosine(col("emb_a"), col("emb_b")),
+      keep = col("cosine") >= threshold,
+      ids = ("id_a", "id_b"),
+      rides = bands == 1)
+
+  /** Embedding-cosine near-duplicate pairs (threshold variant) of
+    * [[cosineFamily]], canonicalized id_a < id_b.
     *
     * Scale levers (the defaults reproduce the 1-band/4-bit exactness
     * fixture; at corpus scale raise BOTH):
@@ -284,166 +312,7 @@ object Ann {
   def cosineNearDups(items: DataFrame, threshold: Double, bits: Int = 4,
                      idCol: String = "vec_id", embCol: String = "embedding",
                      bands: Int = 1, maxBlockSize: Int = 1000000,
-                     saltedMaxBlockSize: Int = -1): DataFrame = {
-    val it = items.select(col(idCol).as("vid"), col(embCol).as("emb"))
-    if (bands == 1 && saltedMaxBlockSize <= maxBlockSize) {
-      // FUSED single-band path: each vector has at most ONE band key, so
-      // within-bucket pairs are already unique — the generic route's
-      // distinct over the pair multiset plus the two joins that re-attach
-      // embeddings are pure overhead (3 extra shuffles for an identical
-      // result). Ride the embedding on the key table and verify inside
-      // the bucket join's generated code, like Dedup's fused simhash
-      // path. Cap semantics unchanged (per-bucket row count, applied to
-      // the build side only — see CandidateGenerator.rawPairs).
-      val keyed = it.where(size(col("emb")) > 0)
-        .select(signBucketAt(col("emb"), bits, 0).as("block_key"),
-          col("vid"), col("emb"))
-      val ok = graft.pairs.CandidateGenerator
-        .underCapBlocks(keyed.select("block_key"), maxBlockSize)
-      val l = keyed.select(col("block_key"), col("vid").as("id_a"), col("emb").as("emb_a"))
-      val r = keyed.join(ok, Seq("block_key"))
-        .select(col("block_key"), col("vid").as("id_b"), col("emb").as("emb_b"))
-      // EvalOnce fence (see Dedup.verifyFromSets): without it the cosine
-      // alias is substituted into the filter and pushed into the bucket
-      // join as a residual predicate, then recomputed in the projection —
-      // every in-bucket pair pays the kernel twice. Same rows, same
-      // values, one evaluation.
-      l.join(r, Seq("block_key"))
-        .where(col("id_a") < col("id_b"))
-        .withColumn("cosine", graft.util.EvalOnce(cosine(col("emb_a"), col("emb_b"))))
-        .where(col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    } else {
-    // a band whose offset reaches the embedding's length would slice an
-    // EMPTY sign prefix — every row would share the degenerate key
-    // "<b>:", one corpus-wide block (all-pairs below the cap, silently
-    // dropped above it). Such bands carry no information; skip them
-    // per-row (short embeddings simply get fewer band keys).
-    val keys = (0 until bands)
-      .map(b => it
-        .where(size(col("emb")) > lit(b * bits))
-        .select(
-          concat(lit(s"$b:"), signBucketAt(col("emb"), bits, b * bits)).as("block_key"),
-          col("vid").as("doc_id")))
-      .reduce(_ union _)
-    val pairs = graft.pairs.CandidateGenerator
-      .candidatePairs(keys, maxBlockSize, saltedMaxBlockSize)
-      .select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b"))
-    val l = it.select(col("vid").as("id_a"), col("emb").as("emb_a"))
-    val r = it.select(col("vid").as("id_b"), col("emb").as("emb_b"))
-    pairs.join(l, Seq("id_a")).join(r, Seq("id_b"))
-      .withColumn("cosine", graft.util.EvalOnce(cosine(col("emb_a"), col("emb_b"))))
-      .where(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
-    }
-  }
-
-  // ------------------------------------------ incremental cosine near-dup
-
-  /** Persisted corpus state for incremental embedding near-dup — the
-    * third near-dup family's maintained-corpus form, completing
-    * [[graft.dedup.Dedup.NearDupState]] (MinHash) and
-    * [[graft.dedup.Dedup.simhashState]] (SimHash) for embeddings: the
-    * sign-LSH band-key table plus the (doc_id, emb) vectors an
-    * increment's verify join needs. Both frames are meant to be written
-    * out (keys bucketed by `block_key` for an exchange-free increment
-    * join, vectors bucketed by `doc_id`) and read back per batch.
-    * Embeddings shorter than every band slice yield no key and can
-    * never pair; their vectors are still carried (a later batch's
-    * longer vector may share a band with nothing, but the verify side
-    * must resolve any id the key join emits).
-    */
-  final case class CosineState(keys: DataFrame, embs: DataFrame)
-
-  /** Derive [[CosineState]] from raw vectors — the same band keys as
-    * [[cosineNearDups]] (`bits`/`bands` must match between ingest and
-    * every later increment; persist them next to the state).
-    */
-  def cosineState(items: DataFrame, idCol: String = "vec_id",
-                  embCol: String = "embedding",
-                  bits: Int = 4, bands: Int = 1): CosineState = {
-    val it = items.select(col(idCol).as("vid"), col(embCol).as("emb"))
-    val keys = (0 until bands)
-      .map(b => it
-        .where(size(col("emb")) > lit(b * bits))
-        .select(
-          concat(lit(s"$b:"), signBucketAt(col("emb"), bits, b * bits)).as("block_key"),
-          col("vid").as("doc_id")))
-      .reduce(_ union _)
-    CosineState(keys, it.select(col("vid").as("doc_id"), col("emb")))
-  }
-
-  /** Result of one cosine-dedup increment: the near-dup pairs TOUCHING
-    * the new batch (canonicalized id_a < id_b like the batch operator)
-    * and the batch's own state — append `state.keys` / `state.embs` to
-    * the corpus tables to absorb the batch.
-    */
-  final case class CosineIncrement(pairs: DataFrame, state: CosineState)
-
-  /** Incremental embedding-cosine near-dup — dedup a NEW batch of
-    * vectors against a corpus whose [[CosineState]] is already
-    * persisted, without re-reading or re-hashing the corpus: the work is
-    * |batch keys| ⋈ |corpus keys| (exchange-free on the big side when
-    * the corpus key table is bucketed by block_key) plus the batch's
-    * self-join — O(batch) + one co-located join, the same maintained-
-    * corpus contract as [[graft.dedup.Dedup.minhashNearDupsIncrement]].
-    *
-    * Exactness: band keys are per-vector deterministic, so pairs sharing
-    * a band key with at least one side new partition into new–new (the
-    * batch self-join) and new–old (the increment join); the verify
-    * cosine is the same kernel over the same stored vectors. The
-    * increment therefore equals the full-batch [[cosineNearDups]] over
-    * corpus ∪ batch restricted to pairs touching the batch — exactly,
-    * whenever no block cap trips (hash-checked by q73's full-recompute
-    * oracle). Caps are per-increment: the batch self-join caps on batch
-    * block counts, the increment join drops corpus blocks whose CORPUS
-    * row count exceeds the cap — each side's own volume, like
-    * [[graft.dedup.Dedup.incrementFromState]].
-    *
-    * Precondition: batch ids are DISJOINT from corpus ids (the ingest
-    * contract — a re-ingested id would fan the verify join through two
-    * vector rows). Re-ingesting a changed vector is retract-then-insert.
-    */
-  def cosineNearDupsIncrement(newItems: DataFrame, corpus: CosineState,
-                              threshold: Double,
-                              idCol: String = "vec_id", embCol: String = "embedding",
-                              bits: Int = 4, bands: Int = 1,
-                              maxBlockSize: Int = 1000000): CosineIncrement = {
-    // the batch state feeds both joins and the returned append set —
-    // materialize once; the corpus side stays lazy/persisted
-    val raw = cosineState(newItems, idCol, embCol, bits, bands)
-    val st = CosineState(raw.keys.localCheckpoint(true),
-      raw.embs.localCheckpoint(true))
-    incrementFromCosineState(st, corpus, threshold, maxBlockSize)
-  }
-
-  /** The increment over an ALREADY-MATERIALIZED batch state — for
-    * callers that manage the batch tables' storage lifecycle themselves
-    * (a streaming foreachBatch persists/unpersists per micro-batch).
-    * The batch frames are consumed 2–3 times; pass them persisted.
-    */
-  def incrementFromCosineState(batch: CosineState, corpus: CosineState,
-                               threshold: Double,
-                               maxBlockSize: Int = 1000000): CosineIncrement = {
-    val newNew = graft.pairs.CandidateGenerator
-      .candidatePairs(batch.keys, maxBlockSize)
-      .select("doc_id_a", "doc_id_b")
-    val okOld = graft.pairs.CandidateGenerator.underCapBlocks(corpus.keys, maxBlockSize)
-    val newOld = batch.keys.select(col("block_key"), col("doc_id").as("__new_id"))
-      .join(corpus.keys.join(okOld, Seq("block_key"))
-        .select(col("block_key"), col("doc_id").as("__old_id")), Seq("block_key"))
-      .where(col("__new_id") =!= col("__old_id"))
-      .select(least(col("__new_id"), col("__old_id")).as("doc_id_a"),
-        greatest(col("__new_id"), col("__old_id")).as("doc_id_b"))
-      .distinct()
-    val embs = corpus.embs.unionByName(batch.embs)
-    val l = embs.select(col("doc_id").as("doc_id_a"), col("emb").as("emb_a"))
-    val r = embs.select(col("doc_id").as("doc_id_b"), col("emb").as("emb_b"))
-    val pairs = newNew.unionByName(newOld)
-      .join(l, Seq("doc_id_a")).join(r, Seq("doc_id_b"))
-      .withColumn("cosine", graft.util.EvalOnce(cosine(col("emb_a"), col("emb_b"))))
-      .where(col("cosine") >= threshold)
-      .select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b"), col("cosine"))
-    CosineIncrement(pairs, batch)
-  }
+                     saltedMaxBlockSize: Int = -1): DataFrame =
+    SimJoin.pairs(cosineFamily(threshold, bits, bands, idCol, embCol), items,
+      maxBlockSize, saltedMaxBlockSize)
 }

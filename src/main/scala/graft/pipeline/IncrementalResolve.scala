@@ -227,7 +227,7 @@ object IncrementalResolve {
     // into the name joins as a residual predicate with the composite
     // kernels alias-substituted into it — scored once per joined row
     // in the join, then AGAIN in the projection (the
-    // Dedup.verifyFromSets pathology). One evaluation, same edges.
+    // SimJoin verify pathology). One evaluation, same edges.
     val edges = existing.labelOld(pairs, "doc_id_b")
       .join(a, Seq("doc_id_a")).join(b, Seq("doc_id_b"))
       .withColumn("score", graft.util.EvalOnce(

@@ -1,25 +1,25 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.checkpoint.VersionedState
 import graft.dedup.Dedup
+import graft.pairs.SimJoin
 import graft.util.Args
 
 /** Production streaming entry for near-dup dedup: maintain the near-dup
   * pair set of an UNBOUNDED arriving document table. Each micro-batch
-  * runs [[Dedup.incrementFromState]] — the increment proven exact vs a
-  * full-batch recompute by q70 and DedupIncrementSpec — against durable
-  * append-delta state, so a crawl batch pays O(batch) WRITE I/O (its own
-  * delta) plus work that follows its candidates: the batch side (ids,
-  * band keys, shingle sets) is materialized once, the persisted corpus
-  * key table is semi-joined on the batch's band keys before the cap
-  * count, and only the candidate pairs' corpus ids read their shingle
-  * sets. The corpus TEXT is read once, on the batch that ingested it,
+  * runs the similarity join's increment ([[SimJoin.increment]], proven
+  * exact vs a full-batch recompute by q70/q71 and DedupIncrementSpec)
+  * against durable append-delta state, so a crawl batch pays O(batch)
+  * WRITE I/O (its own delta) plus work that follows its candidates: the
+  * batch side (ids, band keys, verify payload) is materialized once, the
+  * persisted corpus key table is semi-joined on the batch's band keys
+  * before the cap count, and only the candidate pairs' corpus ids read
+  * their payload. The corpus TEXT is read once, on the batch that ingested it,
   * never again; per batch, the id ledger and the key table are scanned
   * column-pruned, with the batch side broadcast into the scan.
   *
@@ -43,19 +43,20 @@ import graft.util.Args
   * all delta `pairs` tables ([[pairsSoFar]]) always equals the
   * full-batch [[Dedup.minhashNearDups]] over everything ingested so far.
   *
-  * `--algo simhash` swaps the increment body for
-  * [[Dedup.incrementFromSimhashKeys]]: state is just the fingerprint
-  * key table (no shingle sets — cheaper per doc, hamming-bound instead
-  * of Jaccard-threshold semantics). A state root is bound to its algo;
-  * resuming with the other one fails fast instead of corrupting the
-  * maintained pair set.
+  * `--algo` picks the hash family, once ([[Dedup.minhashFamily]] or
+  * [[Dedup.simhashFamily]]); the increment is the same operator for
+  * both. A simhash state is just the key table with the fingerprint
+  * riding on it (no shingle sets — cheaper per doc, hamming-bound
+  * instead of Jaccard-threshold semantics). A state root is bound to its
+  * algo; resuming with the other one fails fast instead of corrupting
+  * the maintained pair set.
   *
   * Durability/idempotence/lineage are [[VersionedState]]'s contract:
   * `_COMMITTED`-marked units, replayed batchIds skipped (exactly-once
   * state on at-least-once foreachBatch), crash-safe compaction GC, and
   * the fail-fast checkpoint/state lineage guard.
   *
-  * Ingest contract (per [[Dedup.minhashNearDupsIncrement]]): doc ids
+  * Ingest contract (per [[SimJoin.increment]]): doc ids
   * are globally unique — a duplicated id would fan the verify join
   * through two shingle rows and silently corrupt the maintained pair
   * set. `--on-duplicate` ENFORCES it per batch ([[IngestContract]], one
@@ -162,8 +163,8 @@ object StreamDedupJob {
   /** The shared per-batch commit skeleton: replay skip, algo guard,
     * duplicate-id enforcement ([[IngestContract]]), increment, delta
     * write (batch-sized tables ONLY), commit marker, compaction. The
-    * per-algo difference is reduced to data: which tables a delta
-    * carries and how the increment pairs are computed. The committed
+    * per-algo difference is data: the hash family, whose payload either
+    * rides the key table or is a delta's `shingles` table. The committed
     * view is listed ONCE ([[VersionedState.stateView]]) and threaded
     * through — O(1) metadata requests per trigger.
     */
@@ -178,23 +179,14 @@ object StreamDedupJob {
       return // replayed batch — state already has it
     val units = view.units(stateRoot)
     algoGuard(spark, stateRoot, units, algo)
+    val fam = family(algo, idCol, textCol, threshold, maxHamming)
 
     // The batch side, materialized ONCE: one row per delivered doc with
-    // its band keys and shingle set (minhash) or fingerprint (simhash).
-    // The guard, the increment's scoping joins and the delta writes all
-    // read it, and its size is exact ([[Bridge.checkpoint]]), so the
-    // planner broadcasts it when it is small.
-    val docs = Bridge.checkpoint(
-      if (algo == "simhash") Dedup.simhashDocs(batch, idCol, textCol)
-      else Dedup.minhashDocs(batch, idCol, textCol))
-    // the content tables this batch writes, split from the one
-    // materialized batch side (lazy until the writes)
-    val content =
-      if (algo == "simhash") Seq("keys" -> Dedup.simhashKeys(docs))
-      else {
-        val st = Dedup.stateOf(docs)
-        Seq("keys" -> st.keys, "shingles" -> st.shingles)
-      }
+    // its block keys and verify payload. The guard, the increment's
+    // scoping joins and the delta writes all read it, and its size is
+    // exact ([[Bridge.checkpoint]]), so the planner broadcasts it when it
+    // is small.
+    val docs = Bridge.checkpoint(fam.docs(batch))
     // the delta's id ledger records every id the batch DELIVERED —
     // including ids the guard excludes below (within-batch repeats have
     // no "first" copy and enter no content state, but a LATER
@@ -203,7 +195,7 @@ object StreamDedupJob {
     val deliveredIds = docs.select("doc_id")
     // the state tables hold what this batch writes: reading them with
     // its schemas runs no schema-inference job per table
-    val schemas = (content :+ ("ids" -> deliveredIds))
+    val schemas = (content(fam, SimJoin.state(fam, docs)) :+ ("ids" -> deliveredIds))
       .map { case (t, df) => t -> df.schema }.toMap
     def readT(t: String) = VersionedState.readTableFrom(spark, units, t, schemas.get(t))
     // the guard checks EVERY ingested id (one row per doc — the key
@@ -219,26 +211,32 @@ object StreamDedupJob {
     val drop = IngestContract.duplicateIdGuard(deliveredIds,
       corpusIngestedIds(spark, stateRoot, units, schemas), onDuplicate, batchId,
       "stream-dedup")
-    val tables = content.map { case (t, df) =>
-      t -> drop.fold(df)(d => df.join(d, Seq("doc_id"), "left_anti"))
-    } :+ ("ids" -> deliveredIds)
-    val keys = tables.toMap.apply("keys")
-    val pairs =
-      if (algo == "simhash")
-        Dedup.incrementFromSimhashKeys(keys, readT("keys").getOrElse(keys.limit(0)),
-          maxHamming, maxBlockSize).pairs
-      else {
-        val shingles = tables.toMap.apply("shingles")
-        Dedup.incrementFromState(Dedup.NearDupState(keys, shingles),
-          Dedup.NearDupState(readT("keys").getOrElse(keys.limit(0)),
-            readT("shingles").getOrElse(shingles.limit(0))),
-          threshold, maxBlockSize).pairs
-      }
-    VersionedState.writeUnit(s"$stateRoot/d=$batchId", tables :+ ("pairs" -> pairs))
+    val st = SimJoin.state(fam, drop.fold(docs)(d => docs.join(d, Seq("doc_id"), "left_anti")))
+    val corpusKeys = readT("keys").getOrElse(st.keys.limit(0))
+    val corpus =
+      if (fam.rides) SimJoin.fromKeys(fam, corpusKeys)
+      else SimJoin.State(corpusKeys, readT("shingles").getOrElse(st.payload.limit(0)))
+    val pairs = SimJoin.increment(fam, st, corpus, maxBlockSize).pairs
+    VersionedState.writeUnit(s"$stateRoot/d=$batchId",
+      content(fam, st) :+ ("ids" -> deliveredIds) :+ ("pairs" -> pairs))
     VersionedState.commitDelta(spark, stateRoot, batchId)
     maybeCompact(spark, stateRoot, view, batchId,
       schemas + ("pairs" -> pairs.schema), compactEvery)
   }
+
+  /** `--algo` as a hash family: the one place the job reads it. */
+  private def family(algo: String, idCol: String, textCol: String,
+                     threshold: Double, maxHamming: Int): SimJoin.Family = algo match {
+    case "simhash" => Dedup.simhashFamily(maxHamming, idCol, textCol)
+    case _ => Dedup.minhashFamily(threshold, idCol, textCol)
+  }
+
+  /** A delta's content tables: the block keys, plus the shingle sets
+    * unless the payload rides the keys (a simhash state is its key
+    * table alone).
+    */
+  private def content(fam: SimJoin.Family, st: SimJoin.State): Seq[(String, DataFrame)] =
+    ("keys" -> st.keys) +: (if (fam.rides) Nil else Seq("shingles" -> st.payload))
 
   /** Fold the committed view into `base=<upto>` when the live delta
     * count (the pre-batch view's plus this batch's) reaches the

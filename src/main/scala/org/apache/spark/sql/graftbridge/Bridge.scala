@@ -3,7 +3,7 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, KnownNotNull, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -16,6 +16,11 @@ import org.apache.spark.sql.execution.LogicalRDD
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `c` typed non-null, for a column a filter has already cleared of
+    * nulls (Catalyst does not carry that into the analyzed schema).
+    */
+  def knownNotNull(c: Column): Column = column(KnownNotNull(expression(c)))
 
   /** An eager local checkpoint that knows its size. `Dataset.localCheckpoint`
     * keeps only the size ESTIMATE of the plan that made it, which after a
@@ -52,5 +57,15 @@ object Bridge {
     val session = df.sparkSession.asInstanceOf[SparkSession]
     Dataset.ofRows(session, LogicalRDD(output, rdd.asInstanceOf[RDD[InternalRow]])(session,
       Some(Statistics(BigInt(math.max(bytes, 1L)), Some(BigInt(rows))))))
+  }
+
+  /** Whether the planner sizes `df` under the broadcast threshold
+    * (`spark.sql.autoBroadcastJoinThreshold`; never when that is off).
+    * For a [[checkpoint]] this reads its measured bytes.
+    */
+  def broadcastSized(df: DataFrame): Boolean = {
+    val limit = df.sparkSession.asInstanceOf[SparkSession].sessionState.conf
+      .autoBroadcastJoinThreshold
+    limit >= 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= limit
   }
 }

@@ -1,9 +1,15 @@
 package graft.ann
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.SparkTestSession
+import graft.pairs.SimJoin
 
 /** Incremental embedding-cosine near-dup: the increment must equal the
   * full-batch recompute restricted to pairs touching the batch, and
@@ -33,9 +39,19 @@ class CosineIncrementSpec extends AnyFunSuite {
     (i.toLong, v)
   }
 
-  private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+  private def pairSet(df: DataFrame): Set[(Long, Long, Double)] =
     df.select(col("id_a"), col("id_b"), round(col("cosine"), 9).as("c"))
       .as[(Long, Long, Double)].collect().toSet
+
+  private def stateOf(f: SimJoin.Family, df: DataFrame): SimJoin.State =
+    SimJoin.state(f, f.docs(df))
+
+  /** The increment of `batch` (materialized once) against `corpus`. */
+  private def increment(f: SimJoin.Family, batch: DataFrame,
+                        corpus: SimJoin.State): SimJoin.Increment =
+    SimJoin.increment(f, SimJoin.state(f, Bridge.checkpoint(f.docs(batch))), corpus, 1000000)
+
+  private val cosine = Ann.cosineFamily(threshold = 0.8, bits = 4)
 
   test("cosine increment == full recompute restricted to pairs touching the batch") {
     val all = mkVecs(0 until 40).toDF("vec_id", "embedding")
@@ -46,8 +62,7 @@ class CosineIncrementSpec extends AnyFunSuite {
     val fullTouchingBatch = full.filter { case (a, b, _) => a >= 30 || b >= 30 }
     assert(fullTouchingBatch.nonEmpty, "fixture must produce cross-boundary near-dups")
 
-    val inc = Ann.cosineNearDupsIncrement(batch,
-      Ann.cosineState(corpus, bits = 4), threshold = 0.8, bits = 4)
+    val inc = increment(cosine, batch, stateOf(cosine, corpus))
     assert(pairSet(inc.pairs) == fullTouchingBatch)
     assert(pairSet(inc.pairs).exists { case (a, b, _) => a < 30 && b >= 30 },
       "must include batch-vs-corpus pairs")
@@ -60,13 +75,13 @@ class CosineIncrementSpec extends AnyFunSuite {
     val b2 = all.where(col("vec_id") >= 40)
 
     val base = pairSet(Ann.cosineNearDups(c0, threshold = 0.8, bits = 4))
-    val s0 = Ann.cosineState(c0, bits = 4)
-    val inc1 = Ann.cosineNearDupsIncrement(b1, s0, threshold = 0.8, bits = 4)
+    val s0 = stateOf(cosine, c0)
+    val inc1 = increment(cosine, b1, s0)
     // absorb batch1: append its state, then batch2 must pair against BOTH
-    val s1 = Ann.CosineState(
+    val s1 = SimJoin.State(
       s0.keys.unionByName(inc1.state.keys),
-      s0.embs.unionByName(inc1.state.embs))
-    val inc2 = Ann.cosineNearDupsIncrement(b2, s1, threshold = 0.8, bits = 4)
+      s0.payload.unionByName(inc1.state.payload))
+    val inc2 = increment(cosine, b2, s1)
 
     val full = pairSet(Ann.cosineNearDups(all, threshold = 0.8, bits = 4))
     assert(base ++ pairSet(inc1.pairs) ++ pairSet(inc2.pairs) == full)
@@ -82,11 +97,33 @@ class CosineIncrementSpec extends AnyFunSuite {
     val corpus = Seq((0L, a)).toDF("vec_id", "embedding")
     val batch = Seq((1L, b)).toDF("vec_id", "embedding")
     val thr = 0.5 // cos(a,b) = 6/8 = 0.75
-    val one = Ann.cosineNearDupsIncrement(batch,
-      Ann.cosineState(corpus, bits = 4, bands = 1), threshold = thr, bits = 4, bands = 1)
+    val oneBand = Ann.cosineFamily(thr, bits = 4, bands = 1)
+    val one = increment(oneBand, batch, stateOf(oneBand, corpus))
     assert(pairSet(one.pairs).isEmpty, "band 0 alone must miss the sign-flipped pair")
-    val two = Ann.cosineNearDupsIncrement(batch,
-      Ann.cosineState(corpus, bits = 4, bands = 2), threshold = thr, bits = 4, bands = 2)
+    val twoBands = Ann.cosineFamily(thr, bits = 4, bands = 2)
+    val two = increment(twoBands, batch, stateOf(twoBands, corpus))
     assert(pairSet(two.pairs).map(p => (p._1, p._2)) == Set((0L, 1L)))
+  }
+
+  test("the increment aggregates corpus keys only behind the semi-join on the batch's blocks") {
+    // the block-cap count and the pair distinct must see only the corpus
+    // blocks the batch shares, never the whole corpus key table
+    val all = mkVecs(0 until 40).toDF("vec_id", "embedding")
+    val corpus = stateOf(cosine, Bridge.checkpoint(all.where(col("vec_id") < 30)))
+    val batch = SimJoin.state(cosine,
+      Bridge.checkpoint(cosine.docs(all.where(col("vec_id") >= 30))))
+    val corpusRdds = corpus.keys.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd }
+    val plan = SimJoin.candidates(batch, corpus, 1000000).queryExecution.optimizedPlan
+    val readsCorpus = plan.collect {
+      case a: Aggregate if a.exists {
+        case r: LogicalRDD => corpusRdds.contains(r.rdd)
+        case _ => false
+      } => a
+    }
+    assert(readsCorpus.nonEmpty, s"no aggregate over the corpus keys:\n$plan")
+    readsCorpus.foreach { a =>
+      assert(a.exists { case j: Join => j.joinType == LeftSemi; case _ => false },
+        s"corpus keys aggregated without the semi-join on the batch's blocks:\n$a")
+    }
   }
 }

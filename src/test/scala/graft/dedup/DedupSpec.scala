@@ -137,8 +137,9 @@ class DedupSpec extends AnyFunSuite {
     val capped = Dedup.minhashNearDups(big, "doc_id", "text", threshold = 0.5,
       maxShingles = k)
     // state payload really is capped, and the true count stays visible
-    val sketchSizes = Dedup.minhashState(big, "doc_id", "text", maxShingles = k)
-      .shingles.select(size(col("__s")).as("sz"), col("__n"))
+    val fam = Dedup.minhashFamily(threshold = 0.5, maxShingles = k)
+    val sketchSizes = graft.pairs.SimJoin.state(fam, fam.docs(big))
+      .payload.select(size(col("__s")).as("sz"), col("__n"))
       .where(col("__n") > k).as[(Int, Int)].collect()
     assert(sketchSizes.nonEmpty && sketchSizes.forall(_._1 == k),
       s"capped docs must store exactly k hashes; got ${sketchSizes.toSeq}")

@@ -130,7 +130,8 @@ class StreamDedupJobSpec extends AnyFunSuite {
     assert(VersionedState.stateView(spark, state).deltaIds == Seq(0L))
     val view = statePairs(state)
     val garbage = mkDocs(100 until 105)
-    Dedup.minhashState(garbage, "doc_id", "text").keys
+    val minhash = Dedup.minhashFamily(threshold = 0.4)
+    graft.pairs.SimJoin.state(minhash, minhash.docs(garbage)).keys
       .write.mode("overwrite").parquet(s"$state/d=0/keys")
     spark.emptyDataset[(Long, Long, Double)]
       .toDF("doc_id_a", "doc_id_b", "jaccard")
@@ -288,6 +289,20 @@ class StreamDedupJobSpec extends AnyFunSuite {
         threshold = 0.4))
     // 19 here; the corpus-wide increment it replaced ran 27
     assert(jobs <= 23, s"one micro-batch ran $jobs Spark jobs")
+  }
+
+  test("per-batch job budget (simhash mode): a small batch attached to a committed base") {
+    val state = tmp("sdj-budget-sh")
+    StreamDedupJob.attachBatch(spark, state, mkDocs(0 until 60), batchId = 0L,
+      algo = "simhash")
+    StreamDedupJob.attachBatch(spark, state, mkDocs(60 until 65), batchId = 1L,
+      algo = "simhash")
+    val jobs = graft.SparkJobs.count(spark)(
+      StreamDedupJob.attachBatch(spark, state, mkDocs(65 until 70), batchId = 2L,
+        algo = "simhash"))
+    // 18 here: the minhash batch's shape, with the fingerprint read off
+    // the scoped corpus keys instead of a shingle table
+    assert(jobs <= 22, s"one micro-batch ran $jobs Spark jobs")
   }
 
   test("lineage guard: fresh checkpoint over committed state refuses") {
