@@ -1002,33 +1002,18 @@ object SparkEntry {
     //     recompute over all 500 docs — the hash match proves incremental
     //     attach is exact, including increment-bridged cluster merges.
     "q65_incremental_resolve" -> ((s, dir) => {
-      val nn = nnDF(s, dir)
-      def keysOf(df: DataFrame) = BlockingKeys.explodeKeys(df, "doc_id",
-        BlockingKeys.defaultKeys(col("n"))).localCheckpoint(true)
-      def edgesOf(pairs: DataFrame) = {
-        val a = nn.select(col("doc_id").as("doc_id_a"), col("n").as("name_a"))
-        val b = nn.select(col("doc_id").as("doc_id_b"), col("n").as("name_b"))
-        pairs.join(a, Seq("doc_id_a")).join(b, Seq("doc_id_b"))
-          // EvalOnce: keep the composite out of the join-residual (see
-          // scoredDF) — one kernel evaluation per pair, same edge set
-          .withColumn("score", graft.util.EvalOnce(
-            Er.compositeScore(col("name_a"), col("name_b"), SimilarityWeights.oracleSafe)))
-          .where(col("score") >= CcThreshold)
-          .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
-      }
-      val oldKeys = keysOf(nn.where(col("doc_id") < 400))
-      val newKeys = keysOf(nn.where(col("doc_id") >= 400))
+      // every doc; a blank name is "", which has no block keys, so its
+      // doc pairs with nothing and stays a singleton
+      val names = named(s, dir).select(col("doc_id"), coalesce(col("n"), lit("")).as("normalized"))
+      val fam = IncrementalResolve.nameFamily(SimilarityWeights.oracleSafe, CcThreshold)
+      val old = names.where(col("doc_id") < 400)
       val existing = ConnectedComponents.run(s,
-        edgesOf(CandidateGenerator.candidatePairs(oldKeys, MaxBlock)),
-        documents(s, dir).where(col("doc_id") < 400).select("doc_id"))
-      val newNew = edgesOf(CandidateGenerator.candidatePairs(newKeys, MaxBlock))
-      val newOldPairs = newKeys.select(col("block_key"), col("doc_id").as("doc_id_a"))
-        .join(oldKeys.select(col("block_key"), col("doc_id").as("doc_id_b")),
-          Seq("block_key"))
-        .select("doc_id_a", "doc_id_b").distinct()
-      IncrementalResolve.attach(s, existing,
-        documents(s, dir).where(col("doc_id") >= 400).select("doc_id"),
-        newNew, edgesOf(newOldPairs)).assignments
+        SimJoin.pairs(fam, old, MaxBlock).select(col("doc_id_a").as("src"), col("doc_id_b").as("dst")),
+        old.select("doc_id"))
+      IncrementalResolve.resolveNames(s, IncrementalResolve.Existing(existing),
+        IncrementalResolve.namesState(old),
+        IncrementalResolve.namesState(names.where(col("doc_id") >= 400)),
+        SimilarityWeights.oracleSafe, CcThreshold, MaxBlock).assignments
     }),
 
     // --- M11: merge revert with component-local recompute — only

@@ -1,8 +1,11 @@
 package graft.checkpoint
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The one commit rule for durable state, batch and streaming alike: a
   * unit of state becomes visible by creating its marker LAST, through
@@ -103,12 +106,33 @@ private[graft] object VersionedState {
     * [[StateView.units]]); None when there are none. The reader for
     * APPEND-ONLY tables (keys, names, rejects, pairs); for tables where
     * later units OVERRIDE earlier rows, merge with the units' ids (e.g.
-    * StreamResolveJob.currentClusters).
+    * StreamResolveJob.currentClusters). Without a schema it reads with
+    * the newest unit's ([[footerSchema]]), so building the frame runs no
+    * Spark job; older units read the columns they lack as null.
     */
   def readTableFrom(spark: SparkSession, units: Seq[(Long, String)],
                     table: String, schema: Option[StructType] = None): Option[DataFrame] = {
     val dirs = units.map { case (_, d) => s"$d/$table" }
-    if (dirs.isEmpty) None else Some(reader(spark, schema).parquet(dirs: _*))
+    if (dirs.isEmpty) None
+    else Some(reader(spark, schema.orElse(footerSchema(spark, dirs.last))).parquet(dirs: _*))
+  }
+
+  /** The schema Spark stored in the footer of one of the table's part
+    * files under `dir`, read on the driver (no schema-inference job);
+    * None when there is no part file or its footer holds no Spark schema.
+    */
+  def footerSchema(spark: SparkSession, dir: String): Option[StructType] = {
+    val fs = fsOf(spark, dir)
+    val path = new Path(dir)
+    if (!fs.exists(path)) return None
+    fs.listStatus(path).find(_.getPath.getName.startsWith("part-")).flatMap { st =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromStatus(st, spark.sparkContext.hadoopConfiguration))
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get(ParquetReadSupport.SPARK_METADATA_KEY))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+      finally reader.close()
+    }
   }
 
   /** A parquet reader. Given the table's schema (a caller that is about

@@ -78,6 +78,22 @@ object CandidateGenerator {
       .distinct()
   }
 
+  /** When a caller KNOWS the key table is broadcast-sized (it usually
+    * does — the pipeline counts the materialized key table right before
+    * pair generation), an explicit hint beats leaving the choice to
+    * size estimates: the static planner cannot estimate through the
+    * union/aggregate shapes here, plans a sort-merge join, and AQE only
+    * converts it to broadcast AFTER materializing the exchange — so the
+    * whole key table is exchanged and the work thrown away (measured:
+    * two ~30 cpu-s abandoned exchange stages per pipeline run at sf0.1).
+    * Guide §3.1: "estimates are often badly wrong … use an explicit
+    * broadcast hint when you know a side is small". 2M key rows is
+    * ~100-150 MB as a hashed relation at typical key widths — well under
+    * the 8 GB / 512M-row broadcast cap; callers above the bound pass
+    * false and keep the exchange-based plan AQE can still optimize.
+    */
+  val BroadcastKeysMaxRows: Long = 2000000L
+
   /** Distinct candidate pairs (doc_id_a < doc_id_b) from a (block_key,
     * doc_id) table.
     *
@@ -96,22 +112,6 @@ object CandidateGenerator {
     * Defaults keep salting off (saltedMaxBlockSize = maxBlockSize); raise
     * it where hot keys must be kept rather than dropped.
     */
-  /** When a caller KNOWS the key table is broadcast-sized (it usually
-    * does — the pipeline counts the materialized key table right before
-    * pair generation), an explicit hint beats leaving the choice to
-    * size estimates: the static planner cannot estimate through the
-    * union/aggregate shapes here, plans a sort-merge join, and AQE only
-    * converts it to broadcast AFTER materializing the exchange — so the
-    * whole key table is exchanged and the work thrown away (measured:
-    * two ~30 cpu-s abandoned exchange stages per pipeline run at sf0.1).
-    * Guide §3.1: "estimates are often badly wrong … use an explicit
-    * broadcast hint when you know a side is small". 2M key rows is
-    * ~100-150 MB as a hashed relation at typical key widths — well under
-    * the 8 GB / 512M-row broadcast cap; callers above the bound pass
-    * false and keep the exchange-based plan AQE can still optimize.
-    */
-  val BroadcastKeysMaxRows: Long = 2000000L
-
   def candidatePairs(keys: DataFrame, maxBlockSize: Int = 1000,
                      saltedMaxBlockSize: Int = -1, saltBuckets: Int = 16,
                      hintBroadcast: Boolean = false): DataFrame =

@@ -10,7 +10,9 @@ import graft.blocking.BlockingKeys
   * family, the shape SparkER (EDBT 2019) and C2Net (ICDE 2019) give it:
   * block keys → capped bucket join → score → keep. A family is plain data
   * ([[Family]]): the minhash, n-gram and simhash families are built in
-  * [[graft.dedup.Dedup]], sign-LSH cosine in [[graft.ann.Ann]]. Modes:
+  * [[graft.dedup.Dedup]], sign-LSH cosine in [[graft.ann.Ann]], and the
+  * name family of the resolve increment (default blocking keys, composite
+  * score) in [[graft.pipeline.IncrementalResolve.nameFamily]]. Modes:
   *  - full ([[pairs]]): the qualifying pairs of one table;
   *  - state ([[state]]): a family's per-doc table split into its block
   *    keys and its verify payload, the form a maintained corpus persists;

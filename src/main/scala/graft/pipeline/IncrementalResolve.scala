@@ -8,7 +8,7 @@ import graft.blocking.BlockingKeys
 import graft.cluster.ConnectedComponents
 import graft.decide.Thresholds
 import graft.functions.Er
-import graft.pairs.CandidateGenerator
+import graft.pairs.SimJoin
 import graft.sim.SimilarityWeights
 
 /** Incremental resolution — the batch analog of the reference's PRIMARY
@@ -28,13 +28,19 @@ import graft.sim.SimilarityWeights
   * min. So incremental attach is not an approximation; q65's oracle
   * hash-checks it against a from-scratch recursive-CTE recompute.
   *
+  * The blocking and scoring are the similarity join's ([[SimJoin]]): the
+  * name family ([[nameFamily]]) keys each normalized name with the
+  * reference's default strategy and keeps pairs whose composite score
+  * reaches the threshold; [[resolveNames]] is its increment followed by
+  * [[attach]].
+  *
   * Scale shape: every corpus-side read is scoped to what the batch
   * touches. The corpus key table is semi-joined on the batch's block keys
   * before the block-size cap counts it (the cap counts per block key, so
-  * the scoped count is exact), names are joined only for the old ids of
+  * the scoped count is exact), names are looked up only for the ids of
   * candidate pairs, the existing labels are read only for the docs the
-  * edges reach and the clusters they relabel ([[Existing]]), and CC runs
-  * over the new ids plus the touched labels only. A day's increment
+  * kept edges reach and the clusters they relabel ([[Existing]]), and CC
+  * runs over the new ids plus the touched labels only. A day's increment
   * touches a vanishing fraction of a 100 TB corpus: the work is
   * proportional to its candidates, as in the reference's per-record
   * resolve — this is the operator that makes the engine a system rather
@@ -70,14 +76,6 @@ object IncrementalResolve {
     /** Current (doc_id, cluster_id) of the docs in `ids` (a doc_id column). */
     def of(ids: DataFrame): DataFrame =
       Existing.latest(rows.join(ids.select("doc_id"), Seq("doc_id"), "left_semi"))
-
-    /** `df` plus `__label`: for a row whose `__old` is true, the current
-      * label of its `idCol` doc (null when the doc has none). Reads `df`
-      * twice; pass it materialized.
-      */
-    def labelOld(df: DataFrame, idCol: String): DataFrame =
-      df.join(of(df.where(col("__old")).select(col(idCol).as("doc_id")))
-        .select(col("doc_id").as(idCol), col("cluster_id").as("__label")), Seq(idCol), "left")
   }
 
   object Existing {
@@ -103,28 +101,18 @@ object IncrementalResolve {
   /** Attach new docs to an existing clustering, given the increment's
     * merge edges.
     *
-    * @param existing    (doc_id, cluster_id) current assignments, labels =
-    *                    min member (the pipeline's invariant)
-    * @param newIds      (doc_id) the increment's doc ids
-    * @param newNewEdges (src, dst) merge edges within the increment
-    * @param newOldEdges (src, dst) merge edges from a new doc (src) to an
-    *                    existing doc (dst)
+    * @param existing the current clustering, labels = min member (the
+    *                 pipeline's invariant): a plain assignment table
+    *                 (`Existing(df)`) or a merge-on-read state
+    *                 ([[Existing.merged]])
+    * @param newIds   (doc_id) the increment's doc ids
+    * @param edges    (src, dst) undirected merge edges. An endpoint that
+    *                 is not in `newIds` is an existing doc: it is
+    *                 contracted to its current label (an edge to a doc
+    *                 with no label is dropped)
     * @return assignments for existing ∪ new docs (labels of untouched
     *         clusters are unchanged, merged clusters take the global min)
     *         and the changed rows
-    */
-  def attach(spark: SparkSession, existing: DataFrame, newIds: DataFrame,
-             newNewEdges: DataFrame, newOldEdges: DataFrame): AttachResult = {
-    val ex = Existing(existing)
-    val edges = Bridge.checkpoint(newNewEdges.select(col("src"), col("dst"), lit(false).as("__old"))
-      .unionByName(newOldEdges.select(col("src"), col("dst"), lit(true).as("__old"))))
-    attachEdges(spark, ex, newIds, ex.labelOld(edges, "dst"))
-  }
-
-  /** The attach core over one edge table (src, dst, __old, __label): src
-    * is a new doc, dst a new doc (`__old` false) or an existing one
-    * (`__old` true) whose current label is `__label`
-    * ([[Existing.labelOld]]).
     *
     * Its barriers are [[Bridge.checkpoint]]s: each is O(increment +
     * touched clusters) rows, its exact size lets the planner broadcast it
@@ -132,25 +120,31 @@ object IncrementalResolve {
     * the context cleaner once the increment's frames go out of scope
     * (safe for per-micro-batch streaming callers).
     */
-  private def attachEdges(spark: SparkSession, existing: Existing, newIds: DataFrame,
-                          edges: DataFrame): AttachResult = {
-    // contract: an edge into an old doc goes to that doc's label.
-    // Materialized: CC and the vertex set read it several times, and a
-    // lazy plan would re-run the whole scoring subtree per consumer.
-    val contracted = Bridge.checkpoint(edges
-      .where(!col("__old") || col("__label").isNotNull)
-      .select(col("src"), when(col("__old"), col("__label")).otherwise(col("dst")).as("dst")))
-    // CC over the touched vertices only: the new ids plus the old labels
-    // the edges reach. An untouched cluster would be an isolated vertex
-    // that keeps its label, so leaving it out changes no label.
-    val vertices = newIds.select("doc_id")
-      .unionByName(contracted.select(col("dst").as("doc_id"))).distinct()
+  def attach(spark: SparkSession, existing: Existing, newIds: DataFrame,
+             edges: DataFrame): AttachResult = {
+    // Materialized: the contraction map and the contracted graph both
+    // read the edges, and a lazy plan would re-run the scoring per reader
+    val e = Bridge.checkpoint(edges.select("src", "dst"))
+    val ids = newIds.select("doc_id")
+    // the contraction map: a new doc stays itself, an existing endpoint
+    // goes to its current label. Its targets are CC's vertices: the new
+    // ids plus the old labels the edges reach. An untouched cluster would
+    // be an isolated vertex that keeps its label, so leaving it out
+    // changes no label.
+    val olds = e.select(col("src").as("doc_id")).unionByName(e.select(col("dst").as("doc_id")))
+      .join(ids, Seq("doc_id"), "left_anti")
+    val to = Bridge.checkpoint(ids.select(col("doc_id"), col("doc_id").as("__to"))
+      .unionByName(existing.of(olds).select(col("doc_id"), col("cluster_id").as("__to"))))
+    def end(c: String) = to.select(col("doc_id").as(c), col("__to").as("__" + c))
+    val contracted = e.join(end("src"), Seq("src")).join(end("dst"), Seq("dst"))
+      .select(col("__src").as("src"), col("__dst").as("dst"))
     // the component labels, O(increment + touched clusters) rows: they
     // feed the new rows, the relabel map and through it both views, and
     // CC.run returns a LAZY labels plan
-    val cc = Bridge.checkpoint(ConnectedComponents.run(spark, contracted, vertices))
+    val cc = Bridge.checkpoint(ConnectedComponents.run(spark, contracted,
+      to.select(col("__to").as("doc_id")).distinct()))
     // new docs take their component label directly
-    val newAssignRows = cc.join(newIds.select("doc_id"), Seq("doc_id"), "left_semi")
+    val newAssignRows = cc.join(ids, Seq("doc_id"), "left_semi")
       .select("doc_id", "cluster_id")
     // the relabel map: old labels whose component took a new (smaller)
     // label. cc rows for NEW docs can land here too (a new doc whose
@@ -177,14 +171,36 @@ object IncrementalResolve {
       changedOld.unionByName(newAssignRows))
   }
 
-  /** Whole increment from normalized names: block the new batch against
-    * the existing names and itself (default-key strategy), score, keep
-    * edges >= threshold, attach. `existingKeys` accepts the persisted B2
-    * key table (ideally bucketed by block_key — then the increment's key
-    * join leaves the big side exchange-free); pass None to derive keys
-    * from `existingNames` on the fly. `existing` is a plain assignment
-    * table (`Existing(df)`) or a merge-on-read state
-    * ([[Existing.merged]]).
+  /** The name family of the similarity join ([[SimJoin]]): the
+    * reference's default blocking keys over `normalized` (the payload),
+    * scored with the composite ([[Er.compositeScore]]) in canonical
+    * (min id, max id) order, kept at `score >= threshold`. Its keygen
+    * keeps the input's other columns, so a caller can materialize one
+    * table that carries both the family's docs and its own.
+    */
+  def nameFamily(weights: SimilarityWeights = SimilarityWeights.default,
+                 threshold: Double = Thresholds().autoMerge): SimJoin.Family =
+    SimJoin.Family(
+      docs = _.withColumn("__k", BlockingKeys.defaultKeys(col("normalized"))),
+      payload = Seq("normalized"),
+      sides = Seq("name" -> col("normalized")),
+      score = "score" -> Er.compositeScore(col("name_a"), col("name_b"), weights),
+      keep = col("score") >= threshold)
+
+  /** The name family's state of a (doc_id, normalized) names table: its
+    * block keys and its names. Lazy.
+    */
+  def namesState(names: DataFrame): SimJoin.State = {
+    val f = nameFamily()
+    SimJoin.state(f, f.docs(names.select("doc_id", "normalized")))
+  }
+
+  /** Whole increment: the similarity join's increment of the name family
+    * ([[SimJoin.increment]]: the batch blocked against the corpus and
+    * itself, scored, kept at the threshold), then [[attach]]. `existing`
+    * is a plain assignment table (`Existing(df)`) or a merge-on-read
+    * state ([[Existing.merged]]); `corpus` and `batch` are name-family
+    * states ([[namesState]], or a persisted key table with its names).
     *
     * This is the micro-batch body for a streaming `foreachBatch`
     * increment loop (see StreamingResolveSpec and StreamResolveJob):
@@ -193,48 +209,13 @@ object IncrementalResolve {
     */
   def resolveNames(spark: SparkSession,
                    existing: Existing,
-                   existingNames: DataFrame,  // doc_id, normalized
-                   newNames: DataFrame,       // doc_id, normalized
-                   existingKeys: Option[DataFrame] = None,
-                   newKeysOpt: Option[DataFrame] = None,
+                   corpus: SimJoin.State,
+                   batch: SimJoin.State,
                    weights: SimilarityWeights = SimilarityWeights.default,
                    threshold: Double = Thresholds().autoMerge,
                    maxBlockSize: Int = 1000): AttachResult = {
-    Er.register(spark)
-    val oldKeys = existingKeys.getOrElse(
-      BlockingKeys.explodeKeys(existingNames, "doc_id",
-        BlockingKeys.defaultKeys(col("normalized"))))
-    // a caller that already derived (and materialized) the increment's
-    // keys passes them in — e.g. StreamResolveJob, which also writes them
-    // to the state version; deriving twice per micro-batch is wasted work.
-    // Caller-provided keys are used as-is (caching is the caller's call).
-    val newKeys = newKeysOpt.getOrElse(Bridge.checkpoint(
-      BlockingKeys.explodeKeys(newNames, "doc_id", BlockingKeys.defaultKeys(col("normalized")))))
-    // new–new ∪ new–old candidates in one pass over the corpus blocks the
-    // batch shares. A barrier: the scoring, the old-name lookup and the
-    // old-label lookup all read it, and the lookups broadcast it into
-    // their scans of the corpus tables; O(candidates) rows.
-    val pairs = Bridge.checkpoint(CandidateGenerator.incrementPairs(newKeys, oldKeys, maxBlockSize))
-    // one scoring pass; side a is always a new doc, side b reads the
-    // names of the candidates' old docs only
-    val a = newNames.select(col("doc_id").as("doc_id_a"), col("normalized").as("name_a"))
-    val b = newNames.select("doc_id", "normalized")
-      .unionByName(existingNames.select("doc_id", "normalized")
-        .join(pairs.where(col("__old")).select(col("doc_id_b").as("doc_id")),
-          Seq("doc_id"), "left_semi"))
-      .select(col("doc_id").as("doc_id_b"), col("normalized").as("name_b"))
-    // EvalOnce fence: the threshold filter would otherwise be pushed
-    // into the name joins as a residual predicate with the composite
-    // kernels alias-substituted into it — scored once per joined row
-    // in the join, then AGAIN in the projection (the
-    // SimJoin verify pathology). One evaluation, same edges.
-    val edges = existing.labelOld(pairs, "doc_id_b")
-      .join(a, Seq("doc_id_a")).join(b, Seq("doc_id_b"))
-      .withColumn("score", graft.util.EvalOnce(
-        Er.compositeScore(col("name_a"), col("name_b"), weights)))
-      .where(col("score") >= threshold)
-      .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"), col("__old"),
-        col("__label"))
-    attachEdges(spark, existing, newNames.select("doc_id"), edges)
+    val inc = SimJoin.increment(nameFamily(weights, threshold), batch, corpus, maxBlockSize)
+    attach(spark, existing, batch.payload.select("doc_id"),
+      inc.pairs.select(col("doc_id_a").as("src"), col("doc_id_b").as("dst")))
   }
 }

@@ -7,10 +7,10 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.blocking.BlockingKeys
 import graft.checkpoint.VersionedState
 import graft.functions.Er
 import graft.norm.Normalizer
+import graft.pairs.SimJoin
 import graft.pipeline.IncrementalResolve
 import graft.sim.SimilarityWeights
 import graft.util.Args
@@ -20,8 +20,10 @@ import graft.util.Args
   * contracted-graph increment ([[IncrementalResolve.resolveNames]]
   * — the body proven hash-exact vs full recompute by q65) against
   * durable state. Per-batch work follows the increment, not the corpus:
-  * the batch side (ids, names, rejects, keys) is materialized once and
-  * every later step reads it; the state's persisted key table is
+  * the batch side (ids, names, rejects and the name family's block keys,
+  * [[IncrementalResolve.nameFamily]]) is materialized once and every
+  * later step reads it, its `SimJoin.State` built with `SimJoin.state`
+  * as [[StreamDedupJob]] builds its own; the state's persisted key table is
   * semi-joined on the batch's block keys before the cap count, names are
   * read only for the old ids of candidate pairs, the merge-on-read labels
   * are built only for the docs the increment touches, and CC runs over
@@ -40,7 +42,8 @@ import graft.util.Args
   *
   * State layout ([[VersionedState]] delta contract): each batch commits
   * `d=<batchId>/` holding its own `names`/`keys`/`rejects` (append-only
-  * tables — readers union them) plus `clusters` holding ONLY the
+  * tables — readers union them; `names` is the name family's payload,
+  * `keys` its key table) plus `clusters` holding ONLY the
   * CHANGED assignments: the batch's new docs and every member of a
   * cluster the increment relabeled (merged clusters take the global-min
   * label, so only the non-surviving side's members change). The current
@@ -112,10 +115,6 @@ object StreamResolveJob {
 
   import VersionedState.fsOf
 
-  private def stateKeys(names: DataFrame): DataFrame =
-    BlockingKeys.explodeKeys(names, "doc_id",
-      BlockingKeys.defaultKeys(col("normalized")))
-
   /** The merge-on-read clustering over the given units: their
     * `clusters` rows tagged with the unit id. A delta only carries
     * changed rows, so a doc's row from the HIGHEST unit id is its current
@@ -124,11 +123,15 @@ object StreamResolveJob {
     * the state (see [[IncrementalResolve.Existing]]).
     */
   private def clusterState(spark: SparkSession, units: Seq[(Long, String)],
-                           schema: Option[StructType] = None): IncrementalResolve.Existing =
+                           schema: Option[StructType] = None): IncrementalResolve.Existing = {
+    // without a schema, the newest unit's footer gives it: no
+    // schema-inference job per unit
+    val s = schema.orElse(VersionedState.footerSchema(spark, s"${units.last._2}/clusters"))
     IncrementalResolve.Existing.merged(units.map { case (id, dir) =>
-      VersionedState.reader(spark, schema).parquet(s"$dir/clusters")
+      VersionedState.reader(spark, s).parquet(s"$dir/clusters")
         .select(col("doc_id"), col("cluster_id"), lit(id).as("__v"))
     }.reduce(_.unionByName(_)))
+  }
 
   /** A table from the latest legacy `v=` snapshot — the reader fallback
     * for a state root the delta layout has not touched yet. None when
@@ -178,7 +181,7 @@ object StreamResolveJob {
     val fs = fsOf(spark, stateRoot)
     val keys =
       if (fs.exists(new Path(s"$in/keys"))) spark.read.parquet(s"$in/keys")
-      else stateKeys(names)
+      else IncrementalResolve.namesState(names).keys
     val rejects =
       if (fs.exists(new Path(s"$in/rejects"))) spark.read.parquet(s"$in/rejects")
       else names.limit(0).select(col("doc_id"), lit("").as("name"),
@@ -228,35 +231,29 @@ object StreamResolveJob {
       } else sweepLegacy(spark, stateRoot) // crashed-migration leftovers
     }
     val units = view.units(stateRoot)
+    val fam = IncrementalResolve.nameFamily(weights, threshold)
 
-    // The batch side, materialized ONCE: every later step (the guard, the
-    // increment's scoping joins, the delta writes) reads this table, and
-    // its size is exact ([[Bridge.checkpoint]]), so the planner broadcasts
-    // it when it is small and sort-merges a bulk load.
+    // The batch side, materialized ONCE: one row per delivered doc with
+    // its name, reject reason and the family's normalized name and block
+    // keys. Every later step (the guard, the increment's scoping joins,
+    // the delta writes) reads this table, and its size is exact
+    // ([[Bridge.checkpoint]]), so the planner broadcasts it when it is
+    // small and sort-merges a bulk load.
     // Same validity gate as the batch pipeline (N8, ResolvePipeline's
     // rejects split): an invalid name (blank/too_long/control_chars) or
     // one that normalizes to nothing never enters the clustering —
     // without the EMPTY_NORMALIZED reason the stream would happily
     // cluster a doc the batch entry rejects.
-    val side = Bridge.checkpoint(batch
+    val side = Bridge.checkpoint(fam.docs(batch
       .select(col("doc_id"), Er.docName(col("spans")).as("name"))
       .withColumn("reject_reason", Er.rejectReason(col("name")))
       .withColumn("normalized", when(col("reject_reason").isNull,
         Normalizer.normalizeColumn(col("name"))))
       .withColumn("reject_reason", coalesce(col("reject_reason"),
-        when(col("normalized") === "", lit("EMPTY_NORMALIZED"))))
-      .withColumn("__keys", BlockingKeys.defaultKeys(col("normalized"))))
+        when(col("normalized") === "", lit("EMPTY_NORMALIZED"))))))
     val ids = side.select("doc_id")
     val rejectCols = Seq(col("doc_id"), col("name"), col("reject_reason"),
       lit(batchId).as("batch_id"))
-    // the state tables hold what this batch writes: reading them with
-    // its schemas runs no schema-inference job per table
-    val schemas = Map(
-      "names" -> side.select("doc_id", "normalized").schema,
-      "keys" -> BlockingKeys.explodeKeys(side, "doc_id", col("__keys")).schema,
-      "rejects" -> side.select(rejectCols: _*).schema,
-      "clusters" -> ids.select(col("doc_id"), col("doc_id").as("cluster_id")).schema)
-    def read(t: String) = VersionedState.readTableFrom(spark, units, t, Some(schemas(t)))
     // the unique-id contract is checked over EVERY ingested doc (valid
     // or not) — an id delivered twice in one batch is a duplicate even
     // when one copy is invalid. The corpus side is names ∪ rejects ids:
@@ -273,12 +270,18 @@ object StreamResolveJob {
         units.flatMap { case (_, d) => Seq(s"$d/names", s"$d/rejects") }: _*))
     val dup = IngestContract.duplicateIdGuard(ids, corpusGuardIds, onDuplicate,
       batchId, "stream-resolve")
-    val accepted = dup
+    val st = SimJoin.state(fam, dup
       .map(d => side.join(d, Seq("doc_id"), "left_anti"))
       .getOrElse(side)
-      .where(col("reject_reason").isNull)
-    val newNames = accepted.select("doc_id", "normalized")
-    val newKeys = BlockingKeys.explodeKeys(accepted, "doc_id", col("__keys"))
+      .where(col("reject_reason").isNull))
+    // the state tables hold what this batch writes: reading them with
+    // its schemas runs no schema-inference job per table
+    val schemas = Map(
+      "names" -> st.payload.schema,
+      "keys" -> st.keys.schema,
+      "rejects" -> side.select(rejectCols: _*).schema,
+      "clusters" -> ids.select(col("doc_id"), col("doc_id").as("cluster_id")).schema)
+    def read(t: String) = VersionedState.readTableFrom(spark, units, t, Some(schemas(t)))
     // EVERY dropped doc is RECORDED, like the batch pipeline's rejects
     // table, instead of vanishing from the maintained state with no
     // trace: per-batch reconciliation (ingested == clustered + rejected)
@@ -297,23 +300,24 @@ object StreamResolveJob {
               lit("DUPLICATE_ID").as("reject_reason"),
               lit(batchId).as("batch_id")))
     }
-    val (existing, existingNames, existingKeys) = read("names") match {
+    // a state's names are the family's payload, its keys the family's
+    // key table
+    val (existing, corpus) = read("names") match {
       case None =>
         (IncrementalResolve.Existing(
           ids.select(col("doc_id"), col("doc_id").as("cluster_id")).limit(0)),
-          newNames.limit(0), None)
+          SimJoin.State(st.keys.limit(0), st.payload.limit(0)))
       case Some(names) =>
-        (clusterState(spark, units, Some(schemas("clusters"))), names, read("keys"))
+        (clusterState(spark, units, Some(schemas("clusters"))),
+          SimJoin.State(read("keys").get, names))
     }
-    val inc = IncrementalResolve.resolveNames(spark, existing,
-      existingNames, newNames, existingKeys = existingKeys,
-      newKeysOpt = Some(newKeys), weights = weights, threshold = threshold,
-      maxBlockSize = maxBlockSize)
+    val inc = IncrementalResolve.resolveNames(spark, existing, corpus, st,
+      weights = weights, threshold = threshold, maxBlockSize = maxBlockSize)
     // clusters holds the changed rows ONLY: the batch's new docs +
     // members of relabeled clusters — merge-on-read recovers the full
     // table
     VersionedState.writeUnit(s"$stateRoot/d=$batchId", Seq(
-      "clusters" -> inc.changed, "names" -> newNames, "keys" -> newKeys,
+      "clusters" -> inc.changed, "names" -> st.payload, "keys" -> st.keys,
       "rejects" -> newRejects))
     VersionedState.commitDelta(spark, stateRoot, batchId)
     maybeCompact(spark, stateRoot, view, batchId, compactEvery, schemas)

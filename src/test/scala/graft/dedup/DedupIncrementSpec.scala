@@ -13,6 +13,8 @@ import org.apache.spark.sql.graftbridge.Bridge
 import graft.SparkTestSession
 import graft.ann.{Ann, CosineSimExpr}
 import graft.pairs.SimJoin
+import graft.pipeline.IncrementalResolve
+import graft.sim.SimKernelExpression
 
 /** Incremental near-dup dedup: the increment must equal the full-batch
   * recompute restricted to pairs touching the batch, and chained
@@ -253,8 +255,11 @@ class DedupIncrementSpec extends AnyFunSuite {
     val all = mkDocs(0 until 40).toDF("doc_id", "text")
     val vecs = (0 until 40).map(i =>
       (i.toLong, Array(1f, (i % 3).toFloat - 1f, 1f, 1f, 0.1f * i))).toDF("doc_id", "emb")
+    val names = all.select(col("doc_id"),
+      substring_index(col("text"), " ", 3).as("normalized"))
     def scoreKernel(e: Expression): Boolean = e.exists {
-      case _: SortedLongIntersectCountExpr | _: BitwiseCount | _: CosineSimExpr => true
+      case _: SortedLongIntersectCountExpr | _: BitwiseCount | _: CosineSimExpr |
+           _: SimKernelExpression => true
       case _ => false
     }
     val cases = Seq(
@@ -262,7 +267,8 @@ class DedupIncrementSpec extends AnyFunSuite {
       ("simhash", Dedup.simhashFamily(maxHamming = 12), all),
       ("cosine", Ann.cosineFamily(0.8, idCol = "doc_id", embCol = "emb"), vecs),
       ("cosine, two bands", Ann.cosineFamily(0.8, bands = 2, idCol = "doc_id", embCol = "emb"),
-        vecs))
+        vecs),
+      ("name", IncrementalResolve.nameFamily(threshold = 0.5), names))
     for ((name, fam, df) <- cases) {
       val plans = Seq(
         "full" -> SimJoin.pairs(fam, df, 10000),

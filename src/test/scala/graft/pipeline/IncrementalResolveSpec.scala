@@ -25,7 +25,8 @@ class IncrementalResolveSpec extends AnyFunSuite {
     val newNew = Seq((7L, 8L)).toDF("src", "dst")
     val newOld = Seq((6L, 2L), (6L, 3L)).toDF("src", "dst")
 
-    val inc = IncrementalResolve.attach(spark, existing, newIds, newNew, newOld)
+    val inc = IncrementalResolve.attach(spark, IncrementalResolve.Existing(existing), newIds,
+      newNew.union(newOld))
       .assignments.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
     val full = ConnectedComponents.run(spark,
@@ -56,12 +57,14 @@ class IncrementalResolveSpec extends AnyFunSuite {
     val none = Seq.empty[(String, String)].toDF("doc_id", "cluster_id")
     def fromScratch(names: org.apache.spark.sql.DataFrame) =
       IncrementalResolve.resolveNames(spark, IncrementalResolve.Existing(none),
-        names.limit(0), names, maxBlockSize = cap)
+        IncrementalResolve.namesState(names.limit(0)), IncrementalResolve.namesState(names),
+        maxBlockSize = cap)
       .assignments.collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
     val existing = fromScratch(corpus).toSeq.toDF("doc_id", "cluster_id")
     val inc = IncrementalResolve.resolveNames(spark, IncrementalResolve.Existing(existing),
-      corpus, batch, maxBlockSize = cap)
+      IncrementalResolve.namesState(corpus), IncrementalResolve.namesState(batch),
+      maxBlockSize = cap)
     val assigned = inc.assignments.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val changed = inc.changed.collect().map(r => r.getString(0) -> r.getString(1)).toSet
 
@@ -78,8 +81,8 @@ class IncrementalResolveSpec extends AnyFunSuite {
     val existing = ConnectedComponents.run(spark,
       Seq((1L, 2L)).toDF("src", "dst"), Seq(1L, 2L, 3L).toDF("doc_id"))
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
-    val out = IncrementalResolve.attach(spark, existing,
-      Seq.empty[Long].toDF("doc_id"), empty, empty)
+    val out = IncrementalResolve.attach(spark, IncrementalResolve.Existing(existing),
+      Seq.empty[Long].toDF("doc_id"), empty)
       .assignments.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
   }

@@ -131,8 +131,8 @@ class StreamingResolveSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(schema).parquet(dir)
     val q = stream.writeStream.foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
       val newNames = batch.select("doc_id", "normalized").localCheckpoint(true)
-      existing = IncrementalResolve.resolveNames(
-        spark, IncrementalResolve.Existing(existing), existingNames, newNames)
+      existing = IncrementalResolve.resolveNames(spark, IncrementalResolve.Existing(existing),
+        IncrementalResolve.namesState(existingNames), IncrementalResolve.namesState(newNames))
         .assignments.localCheckpoint(true)
       existingNames = existingNames.unionByName(newNames).localCheckpoint(true)
       ()
