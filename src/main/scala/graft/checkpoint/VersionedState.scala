@@ -117,6 +117,15 @@ private[graft] object VersionedState {
     else Some(reader(spark, schema.orElse(footerSchema(spark, dirs.last))).parquet(dirs: _*))
   }
 
+  /** The bytes the planner sizes these reads at (the `sizeInBytes` of
+    * their optimized plans). A table read reports the lengths of the
+    * files its listing found, so sizing runs no Spark job and lists
+    * nothing again; a plan without statistics reports Spark's default
+    * size (`spark.sql.defaultSizeInBytes`, effectively unbounded).
+    */
+  def plannedBytes(reads: Seq[DataFrame]): BigInt =
+    reads.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum
+
   /** The schema Spark stored in the footer of one of the table's part
     * files under `dir`, read on the driver (no schema-inference job);
     * None when there is no part file or its footer holds no Spark schema.

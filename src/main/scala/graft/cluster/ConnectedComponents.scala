@@ -3,6 +3,8 @@ package graft.cluster
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Confs
+
 /** L5/L7/M7: DataFrame-native connected components via alternating
   * large-star / small-star (Kiveris et al., "Connected Components in
   * MapReduce and Beyond", SoCC'14) — the batch closure of the reference's
@@ -143,32 +145,24 @@ object ConnectedComponents {
     // small-to-shrinking tables is pure task-scheduling overhead. AQE
     // partition coalescing is the right policy at every scale (billions
     // of edges stay wide — coalescing is a no-op there; the contracted
-    // tail collapses). Scoped with try/finally; the returned labels plan
+    // tail collapses). Scoped with [[Confs.withConfs]]; the returned labels plan
     // is lazy and evaluates under the caller's conf.
     // AQE stays ON through the loop: it was A/B-measured essential here
     // (static planning re-runs every iteration's shuffles at the full
     // session partition count — q72's CC measured 2-3x slower with AQE
     // disabled in-loop, the opposite of the planning-latency hypothesis).
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prevCoalesce = spark.conf.getOption(coalesceKey)
-    spark.conf.set(coalesceKey, "true")
-    var e: DataFrame = null
-    var converged = false
-    try {
-    e = smallStar(
-        edges.select(col("src"), col("dst")).where(col("src") =!= col("dst")))
-      .localCheckpoint(true)
-    converged = isStarForest(e)
-    while (!converged && iter < maxIterations) {
-      e = smallStar(largeStar(e)).localCheckpoint(true)
-      converged = isStarForest(e)
-      iter += 1
-    }
-    } finally {
-      prevCoalesce match {
-        case Some(v) => spark.conf.set(coalesceKey, v)
-        case None => spark.conf.unset(coalesceKey)
+    val (e, converged) = Confs.withConfs(spark,
+        Seq("spark.sql.adaptive.coalescePartitions.enabled" -> "true")) {
+      var e = smallStar(
+          edges.select(col("src"), col("dst")).where(col("src") =!= col("dst")))
+        .localCheckpoint(true)
+      var converged = isStarForest(e)
+      while (!converged && iter < maxIterations) {
+        e = smallStar(largeStar(e)).localCheckpoint(true)
+        converged = isStarForest(e)
+        iter += 1
       }
+      (e, converged)
     }
     if (!converged && !e.isEmpty)
       throw new IllegalStateException(s"connected components did not converge in $maxIterations iterations")

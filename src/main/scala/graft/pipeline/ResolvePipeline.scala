@@ -10,6 +10,7 @@ import graft.decide.{Decisions, Thresholds}
 import graft.functions.Er
 import graft.pairs.CandidateGenerator
 import graft.sim.SimilarityWeights
+import graft.util.Confs
 
 /** End-to-end batch record linkage: the whole-table closure of the
   * reference's per-record resolve() lifecycle (SURVEY.md §3.1): for every
@@ -167,8 +168,8 @@ object ResolvePipeline {
     // broadcast-hash joins, so the name strings never ride a pair-scale
     // shuffle. At corpus scale the measured dim exceeds the bound and the
     // shuffle join stands.
-    // The conf mutations are SCOPED to this call (snapshot + finally
-    // restore): every materialization this function performs — keys,
+    // The conf mutations are SCOPED to this call ([[Confs.withConfs]]):
+    // every materialization this function performs — keys,
     // pairs, pairScores, CC — runs under the pipeline policy, while the
     // lazy outputs (cluster expansion, metrics) evaluate under the
     // caller's own session policy. Without the restore, one pipeline run
@@ -180,9 +181,7 @@ object ResolvePipeline {
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "256m") ++
       cfg.numShufflePartitions.map(n => "spark.sql.shuffle.partitions" -> n.toString)
-    val prevConfs = pipelineConfs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pipelineConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    Confs.withConfs(spark, pipelineConfs) {
     val store = cfg.checkpointRoot.map(new StageStore(_, spark))
     // Stage fingerprints are DEPENDENCY-SCOPED and chained: each stage's
     // fingerprint = its upstream stage's fingerprint + only the config
@@ -702,11 +701,6 @@ object ResolvePipeline {
     }
     PipelineResult(clusters, assignments, pairScores, mergeEdges, rejects, metrics, candStats,
       cached.toSeq)
-    } finally {
-      prevConfs.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
     }
   }
 }

@@ -166,7 +166,8 @@ object StreamDedupJob {
     * per-algo difference is data: the hash family, whose payload either
     * rides the key table or is a delta's `shingles` table. The committed
     * view is listed ONCE ([[VersionedState.stateView]]) and threaded
-    * through — O(1) metadata requests per trigger.
+    * through — O(1) metadata requests per trigger. A batch that reads few
+    * bytes runs interpreted ([[BatchCodegen]]).
     */
   def attachBatch(spark: SparkSession, stateRoot: String,
                   batch: DataFrame, batchId: Long,
@@ -180,48 +181,55 @@ object StreamDedupJob {
     val units = view.units(stateRoot)
     algoGuard(spark, stateRoot, units, algo)
     val fam = family(algo, idCol, textCol, threshold, maxHamming)
-
-    // The batch side, materialized ONCE: one row per delivered doc with
-    // its block keys and verify payload. The guard, the increment's
-    // scoping joins and the delta writes all read it, and its size is
-    // exact ([[Bridge.checkpoint]]), so the planner broadcasts it when it
-    // is small.
-    val docs = Bridge.checkpoint(fam.docs(batch))
-    // the delta's id ledger records every id the batch DELIVERED —
-    // including ids the guard excludes below (within-batch repeats have
-    // no "first" copy and enter no content state, but a LATER
-    // re-delivery of such an id must still be flagged, matching the
-    // resolve job's DUPLICATE_ID rejects semantics)
-    val deliveredIds = docs.select("doc_id")
+    // the batch side: one row per delivered doc with its block keys and
+    // verify payload
+    val docsIn = fam.docs(batch)
     // the state tables hold what this batch writes: reading them with
     // its schemas runs no schema-inference job per table
-    val schemas = (content(fam, SimJoin.state(fam, docs)) :+ ("ids" -> deliveredIds))
+    val schemas = (content(fam, SimJoin.state(fam, docsIn)) :+ ("ids" -> docsIn.select("doc_id")))
       .map { case (t, df) => t -> df.schema }.toMap
     def readT(t: String) = VersionedState.readTableFrom(spark, units, t, schemas.get(t))
-    // the guard checks EVERY ingested id (one row per doc — the key
-    // table has many rows per doc and would miscount intra-batch
-    // repeats), including null-text docs that never get a band key:
-    // the uniqueness contract is on the ingest, not on what survives
-    // keying. Its corpus side is the persisted ingested-ids table
-    // (below) — checking the KEY table alone would let a cross-batch
-    // re-delivery of a keyless doc through undetected. Dropped ids are
-    // logged, not stored as rejects — unlike the resolve job there is
-    // no rejects table here; the dedup state carries content state plus
-    // this minimal id ledger.
-    val drop = IngestContract.duplicateIdGuard(deliveredIds,
-      corpusIngestedIds(spark, stateRoot, units, schemas), onDuplicate, batchId,
-      "stream-dedup")
-    val st = SimJoin.state(fam, drop.fold(docs)(d => docs.join(d, Seq("doc_id"), "left_anti")))
-    val corpusKeys = readT("keys").getOrElse(st.keys.limit(0))
-    val corpus =
-      if (fam.rides) SimJoin.fromKeys(fam, corpusKeys)
-      else SimJoin.State(corpusKeys, readT("shingles").getOrElse(st.payload.limit(0)))
-    val pairs = SimJoin.increment(fam, st, corpus, maxBlockSize).pairs
-    VersionedState.writeUnit(s"$stateRoot/d=$batchId",
-      content(fam, st) :+ ("ids" -> deliveredIds) :+ ("pairs" -> pairs))
-    VersionedState.commitDelta(spark, stateRoot, batchId)
-    maybeCompact(spark, stateRoot, view, batchId,
-      schemas + ("pairs" -> pairs.schema), compactEvery)
+    // Every state read of the batch, built once before it runs: their
+    // listings size the batch for BatchCodegen. The guard's corpus side
+    // is the persisted ingested-ids table (below) — checking the KEY
+    // table alone would let a cross-batch re-delivery of a keyless doc
+    // through undetected.
+    val corpusIds = corpusIngestedIds(spark, stateRoot, units, schemas)
+    val corpusKeys = readT("keys")
+    val corpusShingles = if (fam.rides) None else readT("shingles")
+    BatchCodegen.scoped(spark, batch, corpusIds.toSeq ++ corpusKeys ++ corpusShingles) {
+      // The batch side, materialized ONCE: the guard, the increment's
+      // scoping joins and the delta writes all read it, and its size is
+      // exact ([[Bridge.checkpoint]]), so the planner broadcasts it when
+      // it is small.
+      val docs = Bridge.checkpoint(docsIn)
+      // the delta's id ledger records every id the batch DELIVERED —
+      // including ids the guard excludes below (within-batch repeats have
+      // no "first" copy and enter no content state, but a LATER
+      // re-delivery of such an id must still be flagged, matching the
+      // resolve job's DUPLICATE_ID rejects semantics)
+      val deliveredIds = docs.select("doc_id")
+      // the guard checks EVERY ingested id (one row per doc — the key
+      // table has many rows per doc and would miscount intra-batch
+      // repeats), including null-text docs that never get a band key:
+      // the uniqueness contract is on the ingest, not on what survives
+      // keying. Dropped ids are logged, not stored as rejects — unlike
+      // the resolve job there is no rejects table here; the dedup state
+      // carries content state plus this minimal id ledger.
+      val drop = IngestContract.duplicateIdGuard(deliveredIds, corpusIds, onDuplicate,
+        batchId, "stream-dedup")
+      val st = SimJoin.state(fam, drop.fold(docs)(d => docs.join(d, Seq("doc_id"), "left_anti")))
+      val keys = corpusKeys.getOrElse(st.keys.limit(0))
+      val corpus =
+        if (fam.rides) SimJoin.fromKeys(fam, keys)
+        else SimJoin.State(keys, corpusShingles.getOrElse(st.payload.limit(0)))
+      val pairs = SimJoin.increment(fam, st, corpus, maxBlockSize).pairs
+      VersionedState.writeUnit(s"$stateRoot/d=$batchId",
+        content(fam, st) :+ ("ids" -> deliveredIds) :+ ("pairs" -> pairs))
+      VersionedState.commitDelta(spark, stateRoot, batchId)
+      maybeCompact(spark, stateRoot, view, batchId,
+        schemas + ("pairs" -> pairs.schema), compactEvery)
+    }
   }
 
   /** `--algo` as a hash family: the one place the job reads it. */

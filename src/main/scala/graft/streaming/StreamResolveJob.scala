@@ -211,6 +211,7 @@ object StreamResolveJob {
     * state (whose persisted key table is read back, not re-derived),
     * commit the batch's delta — changed assignments + the batch's own
     * names/keys/rejects, O(increment) write I/O. Idempotent on `batchId`.
+    * A batch that reads few bytes runs interpreted ([[BatchCodegen]]).
     */
   def attachBatch(spark: SparkSession, stateRoot: String,
                   batch: DataFrame, batchId: Long,
@@ -233,28 +234,36 @@ object StreamResolveJob {
     val units = view.units(stateRoot)
     val fam = IncrementalResolve.nameFamily(weights, threshold)
 
-    // The batch side, materialized ONCE: one row per delivered doc with
-    // its name, reject reason and the family's normalized name and block
-    // keys. Every later step (the guard, the increment's scoping joins,
-    // the delta writes) reads this table, and its size is exact
-    // ([[Bridge.checkpoint]]), so the planner broadcasts it when it is
-    // small and sort-merges a bulk load.
+    // The batch side: one row per delivered doc with its name, reject
+    // reason and the family's normalized name and block keys.
     // Same validity gate as the batch pipeline (N8, ResolvePipeline's
     // rejects split): an invalid name (blank/too_long/control_chars) or
     // one that normalizes to nothing never enters the clustering —
     // without the EMPTY_NORMALIZED reason the stream would happily
     // cluster a doc the batch entry rejects.
-    val side = Bridge.checkpoint(fam.docs(batch
+    val sideIn = fam.docs(batch
       .select(col("doc_id"), Er.docName(col("spans")).as("name"))
       .withColumn("reject_reason", Er.rejectReason(col("name")))
       .withColumn("normalized", when(col("reject_reason").isNull,
         Normalizer.normalizeColumn(col("name"))))
       .withColumn("reject_reason", coalesce(col("reject_reason"),
-        when(col("normalized") === "", lit("EMPTY_NORMALIZED"))))))
-    val ids = side.select("doc_id")
+        when(col("normalized") === "", lit("EMPTY_NORMALIZED")))))
     val rejectCols = Seq(col("doc_id"), col("name"), col("reject_reason"),
       lit(batchId).as("batch_id"))
-    // the unique-id contract is checked over EVERY ingested doc (valid
+    // the state tables hold what this batch writes: reading them with
+    // its schemas runs no schema-inference job per table
+    val schemas = {
+      val st = SimJoin.state(fam, sideIn)
+      Map(
+        "names" -> st.payload.schema,
+        "keys" -> st.keys.schema,
+        "rejects" -> sideIn.select(rejectCols: _*).schema,
+        "clusters" -> sideIn.select(col("doc_id"), col("doc_id").as("cluster_id")).schema)
+    }
+    def read(t: String) = VersionedState.readTableFrom(spark, units, t, Some(schemas(t)))
+    // Every state read of the batch, built once before it runs: their
+    // listings size the batch for BatchCodegen.
+    // The unique-id contract is checked over EVERY ingested doc (valid
     // or not) — an id delivered twice in one batch is a duplicate even
     // when one copy is invalid. The corpus side is names ∪ rejects ids:
     // an id ingested but REJECTED in an earlier batch (invalid name,
@@ -266,61 +275,61 @@ object StreamResolveJob {
     // ingested-id set — read as ONE scan of both tables' id column.
     val corpusGuardIds =
       if (units.isEmpty) None
-      else Some(VersionedState.reader(spark, Some(ids.schema)).parquet(
+      else Some(VersionedState.reader(spark, Some(sideIn.select("doc_id").schema)).parquet(
         units.flatMap { case (_, d) => Seq(s"$d/names", s"$d/rejects") }: _*))
-    val dup = IngestContract.duplicateIdGuard(ids, corpusGuardIds, onDuplicate,
-      batchId, "stream-resolve")
-    val st = SimJoin.state(fam, dup
-      .map(d => side.join(d, Seq("doc_id"), "left_anti"))
-      .getOrElse(side)
-      .where(col("reject_reason").isNull))
-    // the state tables hold what this batch writes: reading them with
-    // its schemas runs no schema-inference job per table
-    val schemas = Map(
-      "names" -> st.payload.schema,
-      "keys" -> st.keys.schema,
-      "rejects" -> side.select(rejectCols: _*).schema,
-      "clusters" -> ids.select(col("doc_id"), col("doc_id").as("cluster_id")).schema)
-    def read(t: String) = VersionedState.readTableFrom(spark, units, t, Some(schemas(t)))
-    // EVERY dropped doc is RECORDED, like the batch pipeline's rejects
-    // table, instead of vanishing from the maintained state with no
-    // trace: per-batch reconciliation (ingested == clustered + rejected)
-    // must hold, so docs excluded by the duplicate-id guard land in
-    // rejects too (reason DUPLICATE_ID, one deterministic row per id,
-    // superseding any validity reject for the same id).
-    val validityRejects = side.where(col("reject_reason").isNotNull)
-      .select(rejectCols: _*)
-    val newRejects = dup match {
-      case None => validityRejects
-      case Some(d) =>
-        validityRejects.join(d, Seq("doc_id"), "left_anti")
-          .unionByName(side.join(d, Seq("doc_id"), "left_semi")
-            .groupBy("doc_id").agg(min(col("name")).as("name"))
-            .select(col("doc_id"), col("name"),
-              lit("DUPLICATE_ID").as("reject_reason"),
-              lit(batchId).as("batch_id")))
-    }
     // a state's names are the family's payload, its keys the family's
     // key table
-    val (existing, corpus) = read("names") match {
-      case None =>
-        (IncrementalResolve.Existing(
+    val committed = read("names").map(names =>
+      (clusterState(spark, units, Some(schemas("clusters"))),
+        SimJoin.State(read("keys").get, names)))
+    BatchCodegen.scoped(spark, batch, corpusGuardIds.toSeq ++
+        committed.toSeq.flatMap { case (existing, corpus) => Seq(existing.rows, corpus.keys) }) {
+      // The batch side, materialized ONCE: every later step (the guard,
+      // the increment's scoping joins, the delta writes) reads this
+      // table, and its size is exact ([[Bridge.checkpoint]]), so the
+      // planner broadcasts it when it is small and sort-merges a bulk
+      // load.
+      val side = Bridge.checkpoint(sideIn)
+      val ids = side.select("doc_id")
+      val dup = IngestContract.duplicateIdGuard(ids, corpusGuardIds, onDuplicate,
+        batchId, "stream-resolve")
+      val st = SimJoin.state(fam, dup
+        .map(d => side.join(d, Seq("doc_id"), "left_anti"))
+        .getOrElse(side)
+        .where(col("reject_reason").isNull))
+      // EVERY dropped doc is RECORDED, like the batch pipeline's rejects
+      // table, instead of vanishing from the maintained state with no
+      // trace: per-batch reconciliation (ingested == clustered + rejected)
+      // must hold, so docs excluded by the duplicate-id guard land in
+      // rejects too (reason DUPLICATE_ID, one deterministic row per id,
+      // superseding any validity reject for the same id).
+      val validityRejects = side.where(col("reject_reason").isNotNull)
+        .select(rejectCols: _*)
+      val newRejects = dup match {
+        case None => validityRejects
+        case Some(d) =>
+          validityRejects.join(d, Seq("doc_id"), "left_anti")
+            .unionByName(side.join(d, Seq("doc_id"), "left_semi")
+              .groupBy("doc_id").agg(min(col("name")).as("name"))
+              .select(col("doc_id"), col("name"),
+                lit("DUPLICATE_ID").as("reject_reason"),
+                lit(batchId).as("batch_id")))
+      }
+      val (existing, corpus) = committed.getOrElse((
+        IncrementalResolve.Existing(
           ids.select(col("doc_id"), col("doc_id").as("cluster_id")).limit(0)),
-          SimJoin.State(st.keys.limit(0), st.payload.limit(0)))
-      case Some(names) =>
-        (clusterState(spark, units, Some(schemas("clusters"))),
-          SimJoin.State(read("keys").get, names))
+        SimJoin.State(st.keys.limit(0), st.payload.limit(0))))
+      val inc = IncrementalResolve.resolveNames(spark, existing, corpus, st,
+        weights = weights, threshold = threshold, maxBlockSize = maxBlockSize)
+      // clusters holds the changed rows ONLY: the batch's new docs +
+      // members of relabeled clusters — merge-on-read recovers the full
+      // table
+      VersionedState.writeUnit(s"$stateRoot/d=$batchId", Seq(
+        "clusters" -> inc.changed, "names" -> st.payload, "keys" -> st.keys,
+        "rejects" -> newRejects))
+      VersionedState.commitDelta(spark, stateRoot, batchId)
+      maybeCompact(spark, stateRoot, view, batchId, compactEvery, schemas)
     }
-    val inc = IncrementalResolve.resolveNames(spark, existing, corpus, st,
-      weights = weights, threshold = threshold, maxBlockSize = maxBlockSize)
-    // clusters holds the changed rows ONLY: the batch's new docs +
-    // members of relabeled clusters — merge-on-read recovers the full
-    // table
-    VersionedState.writeUnit(s"$stateRoot/d=$batchId", Seq(
-      "clusters" -> inc.changed, "names" -> st.payload, "keys" -> st.keys,
-      "rejects" -> newRejects))
-    VersionedState.commitDelta(spark, stateRoot, batchId)
-    maybeCompact(spark, stateRoot, view, batchId, compactEvery, schemas)
   }
 
   /** Fold the committed view into `base=<upto>` when the live delta

@@ -3,10 +3,11 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, KnownNotNull, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{CodegenObjectFactoryMode, Expression, KnownNotNull, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.internal.SQLConf
 
 /** The Spark internals the engine needs. Spark 4 made them `private[sql]`
   * (e.g. org.apache.spark.sql.classic.ExpressionUtils); placing this
@@ -58,6 +59,16 @@ object Bridge {
     Dataset.ofRows(session, LogicalRDD(output, rdd.asInstanceOf[RDD[InternalRow]])(session,
       Some(Statistics(BigInt(math.max(bytes, 1L)), Some(BigInt(rows))))))
   }
+
+  /** The session confs under which plans run interpreted: no whole-stage
+    * code generation, and the projections, predicates and orderings Spark
+    * builds through its compiled-or-interpreted factories take the
+    * interpreted implementation. The factory mode is an internal Spark
+    * conf, named through its constant so that a rename fails compilation.
+    */
+  val interpretedConfs: Seq[(String, String)] = Seq(
+    SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
+    SQLConf.CODEGEN_FACTORY_MODE.key -> CodegenObjectFactoryMode.NO_CODEGEN.toString)
 
   /** Whether the planner sizes `df` under the broadcast threshold
     * (`spark.sql.autoBroadcastJoinThreshold`; never when that is off).

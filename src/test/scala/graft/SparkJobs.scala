@@ -3,11 +3,12 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.graft.ListenerBus
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Counts the Spark jobs a block runs, with a listener scoped by a fresh
-  * job group.
+  * job group, and the classes Spark compiles while it runs.
   */
 object SparkJobs {
 
@@ -27,5 +28,15 @@ object SparkJobs {
       ListenerBus.drain(sc)
       jobs.get
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** The classes Spark's code generator compiled while `body` ran (the
+    * JVM-wide compile count, so the caller runs nothing else meanwhile).
+    * A class found in the generated-class cache is not compiled again.
+    */
+  def compiles(body: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 }

@@ -1,5 +1,10 @@
 package graft.pipeline
 
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -86,4 +91,45 @@ class IncrementalResolveSpec extends AnyFunSuite {
       .assignments.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
   }
+
+  test("the contraction map is broadcast once and reused for both edge endpoints") {
+    // a clique of 8 new docs bridging two old clusters: 30 edges, a map
+    // of 10 rows — the smaller side of both endpoint joins. The two
+    // endpoint projections of the map differ only in their column names,
+    // so their broadcasts are one exchange.
+    val existing = ConnectedComponents.run(spark,
+      Seq((1L, 2L), (3L, 4L)).toDF("src", "dst"), Seq(1L, 2L, 3L, 4L).toDF("doc_id"))
+    val newIds = (11L to 18L).toDF("doc_id")
+    val clique = for (a <- 11L to 18L; b <- a + 1 to 18L) yield (a, b)
+    val edges = (clique ++ Seq((11L, 2L), (12L, 4L))).toDF("src", "dst")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val out = try {
+      val r = IncrementalResolve.attach(spark, IncrementalResolve.Existing(existing), newIds,
+        edges).assignments.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      ListenerBus.drain(spark.sparkContext)
+      r
+    } finally spark.listenerManager.unregister(listener)
+    assert(out == (Seq(1L, 2L, 3L, 4L) ++ (11L to 18L)).map(_ -> 1L).toMap)
+    // the exchanges over the map's scan, whatever they rename; a reused
+    // exchange's subtree is the one exchange it reuses
+    def overMap(p: SparkPlan) = p.collectLeaves().exists(_.output.exists(_.name == "__to"))
+    val all = plans.toArray(Array.empty[SparkPlan]).toSeq
+    val broadcasts = all.flatMap(p => ReusePlans.collect(p) {
+      case b: BroadcastExchangeExec if overMap(b) => b
+    })
+    val reused = all.flatMap(p => ReusePlans.collect(p) {
+      case r: ReusedExchangeExec if overMap(r.child) => r
+    })
+    assert(broadcasts.size == 1 && reused.nonEmpty,
+      s"${broadcasts.size} map broadcasts, ${reused.size} reused")
+  }
 }
+
+/** Plan traversal that descends into adaptive query stages. */
+private object ReusePlans extends AdaptiveSparkPlanHelper

@@ -3,11 +3,13 @@ package graft.streaming
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, concat, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.checkpoint.VersionedState
 import graft.dedup.Dedup
+import graft.gen.DocGen
 
 /** The streaming dedup entry: durable append-delta near-dup state,
   * replayed-batch idempotence, per-batch O(batch) write amplification,
@@ -304,6 +306,49 @@ class StreamDedupJobSpec extends AnyFunSuite {
     // the scoped corpus keys instead of a shingle table
     assert(jobs <= 22, s"one micro-batch ran $jobs Spark jobs")
   }
+
+  test("compile budget: a small batch after a warm-up batch compiles at most 20 classes") {
+    val state = tmp("sdj-compiles")
+    // a resolve batch between two dedup batches, as in a deployment that
+    // runs both jobs: the dedup batch's compiled classes alone fit Spark's
+    // 100-entry class cache, the two jobs' together do not
+    val resolveState = tmp("sdj-compiles-resolve")
+    def resolveBatch(k: Long): Unit = StreamResolveJob.attachBatch(spark, resolveState,
+      DocGen.corpusDF(spark, entities = 4, docsPerEntity = 2, seed = 90L + k, partitions = 2)
+        .select(concat(lit(s"r$k-"), col("doc_id")).as("doc_id"), col("spans")), batchId = k)
+    StreamDedupJob.attachBatch(spark, state, mkDocs(0 until 60), batchId = 0L,
+      threshold = 0.4)
+    resolveBatch(0L)
+    StreamDedupJob.attachBatch(spark, state, mkDocs(60 until 65), batchId = 1L,
+      threshold = 0.4)
+    resolveBatch(1L)
+    val compiled = graft.SparkJobs.compiles(
+      StreamDedupJob.attachBatch(spark, state, mkDocs(65 until 70), batchId = 2L,
+        threshold = 0.4))
+    assert(compiled <= 20, s"one micro-batch compiled $compiled classes")
+  }
+
+  for (algo <- Seq("minhash", "simhash"))
+    test(s"interpreted and compiled batches write identical state ($algo)") {
+      def run(interpreted: Boolean): String = {
+        val state = tmp(s"sdj-codegen-$algo")
+        BatchCodegen.forceInterpreted.withValue(Some(interpreted)) {
+          Seq(0 until 20, 20 until 30, 30 until 40).zipWithIndex.foreach { case (ids, k) =>
+            StreamDedupJob.attachBatch(spark, state, mkDocs(ids), batchId = k.toLong,
+              threshold = 0.4, algo = algo, maxHamming = 12, compactEvery = 3)
+          }
+        }
+        state
+      }
+      val (interpreted, compiled) = (run(true), run(false))
+      assert(VersionedState.stateView(spark, interpreted).baseId == 2L, "batch 2 compacts")
+      val dump = StreamTestKit.stateDump(spark, interpreted)
+      val tables = Seq("keys", "ids", "pairs") ++ (if (algo == "minhash") Seq("shingles") else Nil)
+      assert(dump.keySet == Set("d=0", "d=1", "d=2", "base=2").flatMap(u => tables.map(t => s"$u/$t")))
+      assert(dump("d=2/pairs").nonEmpty, "batch 2 pairs with the corpus")
+      assert(dump == StreamTestKit.stateDump(spark, compiled))
+      assert(statePairs(interpreted) == statePairs(compiled))
+    }
 
   test("lineage guard: fresh checkpoint over committed state refuses") {
     val in = tmp("sdj-lg-in"); val state = tmp("sdj-lg-state")

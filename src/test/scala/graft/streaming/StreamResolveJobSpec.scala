@@ -412,8 +412,69 @@ class StreamResolveJobSpec extends AnyFunSuite {
     StreamResolveJob.attachBatch(spark, state, corpus(4, seed = 62L), batchId = 1L)
     val jobs = graft.SparkJobs.count(spark)(
       StreamResolveJob.attachBatch(spark, state, corpus(4, seed = 63L), batchId = 2L))
-    // 40 here; the corpus-wide increment the scoped one replaced ran 74
-    assert(jobs <= 45, s"one micro-batch ran $jobs Spark jobs")
+    // 40 here, interpreted or compiled; the corpus-wide increment the
+    // scoped one replaced ran 74
+    assert(jobs <= 40, s"one micro-batch ran $jobs Spark jobs")
+  }
+
+  test("compile budget: a small batch after a warm-up batch compiles at most 20 classes") {
+    val state = tmp("sjob-compiles")
+    StreamResolveJob.attachBatch(spark, state, corpus(100, seed = 81L), batchId = 0L)
+    StreamResolveJob.attachBatch(spark, state, corpus(4, seed = 82L), batchId = 1L)
+    val compiled = graft.SparkJobs.compiles(
+      StreamResolveJob.attachBatch(spark, state, corpus(4, seed = 83L), batchId = 2L))
+    // compiled plans used about 210 distinct classes per batch, more than
+    // Spark's 100-entry class cache holds, so every batch compiled them all
+    assert(compiled <= 20, s"one micro-batch compiled $compiled classes")
+  }
+
+  /** Three batches of one DocGen corpus (so later batches merge into and
+    * relabel earlier clusters), the second with a nameless doc (a
+    * reject), the third compacting.
+    */
+  private def codegenRun(interpreted: Boolean): String = {
+    val state = tmp("sjob-codegen")
+    val all = corpus(40, seed = 71L)
+    def part(k: Int) = all.where(pmod(hash(col("doc_id")), lit(3)) === k)
+    val nameless = all.limit(1).select(lit("s71-nameless").as("doc_id"),
+      filter(col("spans"), s => s.getField("kind") =!= "text").as("spans"))
+    BatchCodegen.forceInterpreted.withValue(Some(interpreted)) {
+      Seq(part(0), part(1).unionByName(nameless), part(2)).zipWithIndex.foreach { case (b, k) =>
+        StreamResolveJob.attachBatch(spark, state, b, batchId = k.toLong, compactEvery = 3)
+      }
+    }
+    state
+  }
+
+  test("interpreted and compiled batches write identical state") {
+    val (interpreted, compiled) = (codegenRun(true), codegenRun(false))
+    assert(VersionedState.stateView(spark, interpreted).baseId == 2L, "batch 2 compacts")
+    val dump = StreamTestKit.stateDump(spark, interpreted)
+    assert(dump.keySet == Set("d=0", "d=1", "d=2", "base=2").flatMap(u =>
+      Seq("clusters", "names", "keys", "rejects").map(t => s"$u/$t")))
+    assert(dump("d=2/clusters").size > dump("d=2/names").size,
+      "batch 2 must relabel clusters of earlier batches")
+    assert(dump == StreamTestKit.stateDump(spark, compiled))
+    assert(stateClusters(interpreted).sameElements(stateClusters(compiled)))
+  }
+
+  test("a batch the planner cannot size keeps code generation") {
+    val state = tmp("sjob-unsized")
+    StreamResolveJob.attachBatch(spark, state, corpus(20, seed = 91L), batchId = 0L)
+    val small = corpus(4, seed = 92L)
+    // a frame over an RDD has no size statistics: Spark sizes it at its
+    // default size, far above the crossover
+    val unsized = spark.createDataFrame(corpus(4, seed = 93L).rdd, small.schema)
+    val (smallWholeStage, actions) = StreamTestKit.codegenActions(spark)(
+      StreamResolveJob.attachBatch(spark, state, small, batchId = 1L))
+    assert(actions > 0 && smallWholeStage == 0, "a small batch runs interpreted")
+    var compiledClasses = 0L
+    val (wholeStage, _) = StreamTestKit.codegenActions(spark) {
+      compiledClasses = graft.SparkJobs.compiles(
+        StreamResolveJob.attachBatch(spark, state, unsized, batchId = 2L))
+    }
+    assert(wholeStage > 0 && compiledClasses > 0,
+      s"the unsized batch ran $wholeStage whole-stage plans and compiled $compiledClasses classes")
   }
 
   test("crash mid-write: an uncommitted delta dir is invisible and the replay overwrites it") {
